@@ -756,6 +756,27 @@ object Dedup {
       .map(i => i.memSize + i.diskSize).sum
   }
 
+  /** The partition count an iterative loop runs a `localCheckpoint()`ed
+    * frame at: [[sizeAdaptivePartitions]] of its measured bytes, never more
+    * than the frame already has. When no storage bytes are visible (blocks
+    * evicted under memory pressure, or the storage listener lagging) the
+    * size is unknown, and the frame keeps its own partition count rather
+    * than being taken for a tiny one. */
+  private[graft] def loopPartitions(df: DataFrame): Int = {
+    val have = df.rdd.getNumPartitions
+    val bytes = checkpointBytes(df)
+    if (bytes == 0) have else math.min(have, sizeAdaptivePartitions(df.sparkSession, bytes))
+  }
+
+  /** An observed count or sum as a Long: `null` (an aggregate over zero
+    * rows) is 0; any boxed number goes through `Number.longValue`. */
+  private[graft] def observedLong(name: String, value: Any): Long = value match {
+    case null => 0L
+    case n: Number => n.longValue()
+    case other => throw new IllegalStateException(
+      s"observed metric '$name' is not numeric: $other (${other.getClass.getName})")
+  }
+
   /** Partition count for a frame of `bytes` bytes, computed the way AQE's
     * partition coalescing does (advisory byte target, parallelism-first
     * floor): the SCALE-ADAPTIVE partition count for an iterative loop that
@@ -867,7 +888,7 @@ object Dedup {
     // checkpoint job whose byte-right stages schedule inside the DAG.
     val spark = edges.sparkSession
     withAqeOff(spark) {
-    val p = sizeAdaptivePartitions(spark, checkpointBytes(sym0))
+    val p = loopPartitions(sym0)
     val sym = if (p >= sym0.rdd.getNumPartitions) sym0 else {
       val r = boundedCheckpoint(sym0.repartition(p, col("b")))
       unpersistCheckpoint(sym0)
@@ -896,10 +917,7 @@ object Dedup {
           least(col("label"), coalesce(col("nbr_min"), col("label"))).as("next_label"))
         .observe(obs, sum(when(col("next_label") < col("label"), 1L)
           .otherwise(0L)).as("changed")))
-      changed = obs.get("changed") match {
-        case null => 0L // empty label frame: sum over zero rows
-        case l: java.lang.Long => l.longValue()
-      }
+      changed = observedLong("changed", obs.get("changed"))
       // next is materialized; the previous round's checkpoint blocks are
       // dead — free them now instead of waiting for driver GC (25 retained
       // copies of the labels frame would evict useful cache on big graphs).

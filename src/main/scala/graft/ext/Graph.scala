@@ -77,7 +77,7 @@ object Graph {
     // byte-right stages schedule inside the DAG. Scale-neutral: the count
     // is bytes/advisory with a parallelism floor, never a local constant.
     Dedup.withAqeOff(spark) {
-    val p = Dedup.sizeAdaptivePartitions(spark, Dedup.checkpointBytes(symP0))
+    val p = Dedup.loopPartitions(symP0)
     val symP = if (p >= symP0.rdd.getNumPartitions) symP0 else {
       val r = symP0.repartition(p, col("src")).localCheckpoint()
       Dedup.unpersistCheckpoint(symP0)
@@ -94,7 +94,7 @@ object Graph {
     val deg = symP.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .observe(obs, count(lit(1)).as("n"))
       .localCheckpoint()
-    val n = obs.get("n").asInstanceOf[Long]
+    val n = Dedup.observedLong("n", obs.get("n"))
     if (n == 0) { // edgeless graph: empty rank frame, same schema
       Dedup.rotateCheckpoints(checkpointKey, symP, deg)
       symP.select(col("src").as("id"), lit(0.0).as("rank")).limit(0)

@@ -6,16 +6,21 @@ import org.apache.spark.sql.functions._
 import graft.model.{BlockScoped, ChTable}
 import graft.pipeline.ChangePipeline
 
-/** Shared micro-batch skeleton for the O13/O14 sinks — the parquet and JDBC
-  * variants differ ONLY in how a table frame is written and where the cursor
-  * row goes, so the batch shape lives here once:
+/** Shared micro-batch skeleton for the O13/O14 sinks — the parquet, JDBC and
+  * ClickHouse variants differ ONLY in how a table frame is written and where
+  * the cursor row goes, so the batch shape lives here once:
   *
-  *  1. route/cast the released blocks per table (ChangePipeline);
-  *  2. ONE aggregation decides which tables the batch touches (vs an
-  *     isEmpty job per catalog table);
-  *  3. write each present table;
+  *  1. cache the released blocks, so the stateful fold upstream runs once;
+  *  2. ONE aggregation over the cache yields the tables the batch touches
+  *     and the top block's cursor; an empty batch stops here, with no DDL
+  *     and no writes;
+  *  3. route/cast the blocks per table (ChangePipeline) and write each
+  *     present table;
   *  4. persist the top cursor LAST — only after every table committed
   *     (reference ordering, `src/loader.rs:111-175`).
+  *
+  * On the streaming path, where the released blocks sit in one partition,
+  * that is 1 + (present tables) Spark jobs per batch (SinkBatchSpec).
   */
 object SinkBatch {
 
@@ -26,24 +31,23 @@ object SinkBatch {
       onFrames: Map[String, DataFrame] => Unit = _ => ())(
       writeTable: (String, DataFrame) => Unit)(
       persistCursor: (String, Long, String) => Unit): Unit = {
-    if (blocks.isEmpty) return
     val cached = blocks.cache()
     try {
+      val summary = cached.toDF()
+        .agg(
+          flatten(collect_set(col("changes.table"))).as("tables"),
+          max_by(struct(col("cursor"), col("clock.number").as("number"), col("clock.id").as("id")),
+            col("clock.number")).as("top"))
+        .head()
+      if (summary.isNullAt(1)) return
+      val present = summary.getSeq[String](0).toSet
       val frames = ChangePipeline.process(cached, catalog, strict)
       onFrames(frames)
-      val present = cached.toDF()
-        .select(explode(col("changes.table")).as("t"))
-        .distinct().collect().map(_.getString(0)).toSet
       frames.foreach { case (table, df) =>
         if (present(table)) writeTable(table, df)
       }
-      val top = cached
-        .select(col("clock.number").as("block_num"), col("clock.id").as("block_id"), col("cursor"))
-        .orderBy(desc("block_num")).limit(1).collect()
-      top.headOption.foreach { r =>
-        persistCursor(r.getAs[String]("cursor"), r.getAs[Long]("block_num"),
-          r.getAs[String]("block_id"))
-      }
+      val top = summary.getStruct(1)
+      persistCursor(top.getString(0), top.getLong(1), top.getString(2))
     } finally cached.unpersist()
   }
 }

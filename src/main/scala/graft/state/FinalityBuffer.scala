@@ -21,7 +21,8 @@ import graft.model.{BlockMsg, BlockScoped}
   * for the streaming path. Total order over the chain is required for
   * correctness — the reference processes blocks in a single sequential task
   * (`src/main.rs:208-231`); we keep the state single-keyed so Spark gives the
-  * same per-key sequencing, and parallelism happens downstream of release.
+  * same per-key sequencing. Released blocks stay in that key's single
+  * partition; they are not spread out again after release.
   */
 object FinalityBuffer {
   val BufferLen = 12

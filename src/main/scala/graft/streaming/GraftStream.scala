@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.graftbridge.SessionBridge
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.model.{BlockMsg, BlockScoped, ChTable}
@@ -9,8 +10,8 @@ import graft.sink.{ClickHouseHttpSink, JdbcMultiTableSink, MultiTableSink}
 /** End-to-end wiring of the streaming load path (reference run-loop,
   * `src/main.rs:194-235`):
   *
-  *   message stream → finality buffer/undo (stateful) → per-batch:
-  *   decode/route/cast → per-table sink → cursor write-last
+  *   message stream → finality buffer/undo (stateful, one state store) →
+  *   per-batch: decode/route/cast → per-table sink → cursor write-last
   *
   * Checkpointing covers both the source offsets and the buffer state, so a
   * restarted query resumes mid-chain without re-delivering committed batches
@@ -23,10 +24,24 @@ object GraftStream {
 
   /** Generic wiring: any sink honoring the `(releasedBlocks, batchId)`
     * contract — parquet ([[MultiTableSink]]) and JDBC
-    * ([[JdbcMultiTableSink]]) both plug in here. */
+    * ([[JdbcMultiTableSink]]) both plug in here.
+    *
+    * The finality operator is single-keyed, so it needs exactly one state
+    * store. By default Spark gives a stateful operator
+    * `spark.sql.shuffle.partitions` stores and records that count in the
+    * offset log; every store but the one holding `"chain"` would sit empty,
+    * yet each still loads and commits (a delta file plus a checksum file)
+    * on every micro-batch. The query therefore starts from a session clone
+    * whose state-store count is 1 ([[SessionBridge.withConf]]): the
+    * caller's conf is never written, the caller's streaming listeners are
+    * carried over, and a checkpoint written with another count keeps it on
+    * restart. Downstream parallelism is unchanged: every released block
+    * already sat in the one partition that holds the key, and shuffles in
+    * `writeBatch` still use the caller's `spark.sql.shuffle.partitions`. */
   def startWith(msgs: Dataset[BlockMsg], checkpointDir: String)(
       writeBatch: (Dataset[BlockScoped], Long) => Unit): StreamingQuery =
-    StreamingFinality.released(msgs)
+    SessionBridge.withConf(StreamingFinality.released(msgs),
+        Map(SessionBridge.StateStoresKey -> "1"))
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)

@@ -11,11 +11,12 @@ import graft.state.FinalityBuffer.BufferState
   *
   * The chain is one totally-ordered stream (the reference consumes it in a
   * single sequential task, `src/main.rs:208-231`), so the state lives under
-  * ONE group key. That is not a scalability bug: messages are tiny envelope
-  * rows, the state is a bounded 12-deep queue, and all heavy work (decode,
-  * cast, write) happens AFTER release, where the released blocks fan back
-  * out across the cluster. Per-batch the group sorts by `seq` so replay
-  * order is deterministic regardless of upstream partitioning.
+  * ONE group key, in one state store ([[GraftStream.startWith]] starts the
+  * query with a single store). Messages are tiny envelope rows and the
+  * state is a bounded 12-deep queue. The released blocks leave the operator
+  * in the one partition that holds the key; downstream work on them runs
+  * there too unless a sink repartitions. Per-batch the group sorts by `seq`
+  * so replay order is deterministic regardless of upstream partitioning.
   */
 object StreamingFinality {
 

@@ -223,6 +223,30 @@ class DedupSpec extends SparkSpec {
     // frame is dead by design — the contract is free-after-consumption)
   }
 
+  test("loopPartitions: measured bytes shrink a frame; unknown bytes keep its count") {
+    val frame = spark.range(0, 1000, 1, 8).toDF("id")
+    // no checkpoint blocks at all: size unknown, keep the 8 partitions
+    assert(Dedup.loopPartitions(frame.repartition(8, col("id"))) === 8)
+    // a KB-sized checkpoint: byte-derived count (below the 1 MiB minimum
+    // partition size, so one partition)
+    val ck = frame.repartition(8, col("id")).localCheckpoint()
+    assert(Dedup.checkpointBytes(ck) > 0)
+    assert(Dedup.loopPartitions(ck) === 1)
+    // blocks gone (as after eviction): size unknown again, keep the 8
+    Dedup.unpersistCheckpoint(ck)
+    assert(Dedup.checkpointBytes(ck) === 0)
+    assert(Dedup.loopPartitions(ck) === 8)
+  }
+
+  test("observedLong: null is 0, any boxed number converts, a non-number fails by name") {
+    assert(Dedup.observedLong("changed", null) === 0L)
+    assert(Dedup.observedLong("changed", java.lang.Long.valueOf(7)) === 7L)
+    assert(Dedup.observedLong("changed", java.lang.Integer.valueOf(3)) === 3L)
+    assert(Dedup.observedLong("changed", new java.math.BigDecimal("12")) === 12L)
+    val e = intercept[IllegalStateException](Dedup.observedLong("changed", "many"))
+    assert(e.getMessage.contains("'changed'") && e.getMessage.contains("java.lang.String"))
+  }
+
   test("incremental near-dup: delta vs store, store update, pruned probe") {
     import spark.implicits._
     val store = java.nio.file.Files.createTempDirectory("graft_sigstore_spec").toString + "/store"
