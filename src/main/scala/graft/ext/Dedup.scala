@@ -909,7 +909,7 @@ object Dedup {
       // checkpoint materialization as an observed metric — one blocking job
       // per round instead of two (the separate count() re-read every
       // checkpoint block just to count label changes). Eager localCheckpoint
-      // runs under withAction, so the Observation listener fires (ObsProbe).
+      // runs under withAction, so the Observation listener fires (DedupSpec).
       val obs = org.apache.spark.sql.Observation()
       val next = boundedCheckpoint(labels
         .join(nbrMin, labels("id") === nbrMin("a"), "left")

@@ -89,7 +89,7 @@ object Graph {
     // exchange), and the node count rides the degree checkpoint's
     // materialization as an observed metric instead of a separate count()
     // job — one blocking driver round-trip fewer before the loop.
-    // (ObsProbe pins that eager localCheckpoint delivers observe metrics.)
+    // (DedupSpec pins that eager localCheckpoint delivers observe metrics.)
     val obs = org.apache.spark.sql.Observation()
     val deg = symP.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .observe(obs, count(lit(1)).as("n"))

@@ -60,6 +60,9 @@ final class ClickHouseHttpServer(
   val ddlRequests = new AtomicInteger(0)
   val authFailures = new AtomicInteger(0)
   val badRequests = new AtomicInteger(0)
+  /** Statements that took effect, in order: `CREATE <t>` per DDL request,
+    * `INSERT <t>` per insert whose rows landed. */
+  val applied = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
   def rowCount(table: String): Int =
     Option(store.get(table)).map(_.size).getOrElse(0)
@@ -164,6 +167,7 @@ final class ClickHouseHttpServer(
           destIdx.zipWithIndex.foreach { case (di, si) => full(di) = r(si) }
           list.add(full)
         }
+        applied.add(s"INSERT $table")
         respond(ex, 200, Array.emptyByteArray)
 
       case CreateRe(table, colsSpec, engine, engineArgs, orderBy) =>
@@ -182,6 +186,7 @@ final class ClickHouseHttpServer(
             .getOrElse(Seq.empty)
           engines.put(table, (engine, ver, key))
         }
+        applied.add(s"CREATE $table")
         respond(ex, 200, Array.emptyByteArray)
 
       case SelectRe(proj, table, whereCol, whereVal, orderCol, limit) =>

@@ -1,14 +1,20 @@
 package graft.sink
 
+import java.io.OutputStream
 import java.net.{HttpURLConnection, URI, URLEncoder}
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.collection.mutable
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.cast.DynamicCast
 import graft.model.{BlockScoped, ChColumn, ChTable, ChType, CursorRow}
 import graft.model.ChType._
+import graft.pipeline.ChangePipeline
 
 /** ClickHouse HTTP sink (O13 wire closure, VERDICT r13 #1): the reference's
   * ACTUAL delivery path — per-table inserts as RowBinary positional bytes
@@ -17,7 +23,21 @@ import graft.model.ChType._
   * `src/loader.rs:6-29`; `Cargo.toml:21` lz4 feature; write-last ordering
   * `src/loader.rs:111-175`).
   *
-  * Same `writeBatch` contract as the parquet/JDBC sinks ([[SinkBatch]]).
+  * Same `writeBatch` contract as the parquet/JDBC sinks — data first, the
+  * top released block's cursor row last, nothing at all for a batch that
+  * releases no block — but in ONE Spark job per micro-batch, the way the
+  * reference streams each block's rows into its per-table inserters in one
+  * pass:
+  *
+  *  1. one plan: the released blocks explode with change-less blocks kept
+  *     (`explode_outer`, `table` null), so every block counts toward the
+  *     cursor; each change row gets its RowBinary bytes from a `CASE` over
+  *     the catalog tables (typed projection, canonical strings, encode);
+  *  2. one action: each task streams its rows into one insert per table it
+  *     meets, opened on that table's first row, finishes them all at the
+  *     end and returns its top `(block_num, cursor, block_id)`; the driver
+  *     writes the highest as the cursor row.
+  *
   * Wire shape per insert: `POST /?query=INSERT INTO <t> (<cols…>) FORMAT
   * RowBinary&decompress=1` — body = [[ChNativeCodec]] LZ4 frames of
   * [[RowBinary]] rows; auth = `X-ClickHouse-User`/`X-ClickHouse-Key`
@@ -32,14 +52,21 @@ import graft.model.ChType._
   * transactional replace) — Spark's checkpoint prevents cross-restart
   * re-delivery of committed batches, the cursor table is
   * `ReplacingMergeTree(block_num) ORDER BY (id)` so replayed cursor rows
-  * collapse latest-wins ([[ClickHouseDialect.cursorTableSql]]).
+  * collapse latest-wins ([[ClickHouseDialect.cursorTableSql]]). A task that
+  * fails aborts every insert it still has open, so none of their rows lands.
   *
-  * Scale: encoding runs on executors inside whole-stage codegen
-  * ([[RowBinaryEncode]]); each partition streams its own POST (one
-  * connection per partition per table, like the reference's per-table
-  * async inserters), frames bounded at [[ChNativeCodec.DefaultBlockBytes]]
-  * uncompressed so server-side buffers stay bounded; only DDL and the
-  * single cursor row touch the driver.
+  * DDL: every statement is `CREATE TABLE IF NOT EXISTS`, so resending it is
+  * harmless. Until the sink has seen a batch through, each task that meets a
+  * released block sends the DDL before its first insert; the driver marks
+  * the schema created after the first non-empty batch.
+  *
+  * Scale: routing, casting and encoding run on executors inside one plan
+  * ([[RowBinaryEncode]] is codegen'd); each task streams one POST per table
+  * it meets (one connection per partition per table, like the reference's
+  * per-table async inserters), frames bounded at
+  * [[ChNativeCodec.DefaultBlockBytes]] uncompressed, so each open insert
+  * buffers at most one frame. The driver sends only the cursor row and
+  * collects one summary tuple per task.
   */
 class ClickHouseHttpSink(
     catalog: Seq[ChTable],
@@ -57,12 +84,55 @@ class ClickHouseHttpSink(
   val cursorTable = "graft_cursors"
 
   @transient @volatile private var schemaReady = false
+  /** table → its typed frame's schema; fixed by the catalog and `strict`,
+    * so analyzed once. */
+  @transient @volatile private var typedSchemas: Map[String, StructType] = _
 
-  def writeBatch(blocks: Dataset[BlockScoped], batchId: Long): Unit =
-    SinkBatch.run(blocks, catalog, strict, onFrames = ensureSchema)(writeTable) {
-      (cursor, blockNum, blockId) =>
-        persistCursor(CursorRow(cursorId, cursor, blockNum, blockId))
+  def writeBatch(blocks: Dataset[BlockScoped], batchId: Long): Unit = {
+    val schemas = frameSchemas(blocks)
+    val inserts = schemas.map { case (t, s) => t -> insertStatement(frameChTable(t, s)) }
+    val ddl = if (schemaReady) Seq.empty else ddlStatements(schemas)
+    val (ep, u, p, c, bb) = (endpoint, user, password, compress, blockBytes)
+    val tops = encodedRows(blocks, schemas)
+      .mapPartitions(writePartition(ep, u, p, c, bb, ddl, inserts))(
+        Encoders.tuple(Encoders.scalaLong, Encoders.STRING, Encoders.STRING))
+      .collect()
+    if (tops.nonEmpty) {
+      schemaReady = true
+      val (blockNum, cursor, blockId) = tops.maxBy(_._1)
+      persistCursor(CursorRow(cursorId, cursor, blockNum, blockId))
     }
+  }
+
+  private def frameSchemas(blocks: Dataset[BlockScoped]): Map[String, StructType] = {
+    if (typedSchemas == null)
+      typedSchemas = ChangePipeline.process(blocks, catalog, strict)
+        .map { case (t, df) => t -> df.schema }
+    typedSchemas
+  }
+
+  /** One row per change, plus one per change-less block (`table` null):
+    * `(block_num, cursor, block_id, table, rb)`, where `rb` is the row's
+    * RowBinary bytes in its table's insert order — null when the table is
+    * absent from the catalog or the block has no changes. */
+  private def encodedRows(blocks: Dataset[BlockScoped],
+      schemas: Map[String, StructType]): DataFrame = {
+    val meta = Seq(col("block_num"), col("block_id"), col("cursor"))
+    val changes = blocks.toDF()
+      .select(col("clock.number").as("block_num"), col("clock.id").as("block_id"),
+        col("cursor"), explode_outer(col("changes")).as("change"))
+      .select(meta ++ Seq(col("change.table").as("table"),
+        ChangePipeline.fieldsToMap(col("change.fields"), col("change.compositePk"))
+          .as("fields_map")): _*)
+    val branches = catalog.map { t =>
+      (col("table") === t.name, encodeRow(t.name, schemas(t.name),
+        meta ++ DynamicCast.projection(col("fields_map"), t, strict)))
+    }
+    val rb = branches.headOption.fold(lit(null).cast(BinaryType)) { case (c0, v0) =>
+      branches.tail.foldLeft(when(c0, v0)) { case (acc, (c, v)) => acc.when(c, v) }
+    }
+    changes.select(col("block_num"), col("cursor"), col("block_id"), col("table"), rb.as("rb"))
+  }
 
   private lazy val declaredTypes: Map[String, Map[String, ChType]] =
     catalog.map(t => t.name -> t.columns.map(c => c.name -> c.chType).toMap).toMap
@@ -76,15 +146,17 @@ class ClickHouseHttpSink(
     })
   }
 
-  private[sink] def writeTable(table: String, df: DataFrame): Unit = {
-    val ct = frameChTable(table, df.schema)
-    // typed frame → canonical strings → one BINARY RowBinary row, all
-    // inside whole-stage codegen; timestamps canonicalize to epoch seconds
-    // (the encoder's DateTime contract)
+  /** `table`'s typed columns (`schema` holds their names and types, in the
+    * same order) → one BINARY RowBinary row, in [[insertStatement]]'s column
+    * order, all inside whole-stage codegen: each value goes to its canonical
+    * string first, timestamps as epoch seconds (the encoder's DateTime
+    * contract). */
+  private[sink] def encodeRow(table: String, schema: StructType, typed: Seq[Column]): Column = {
+    val ct = frameChTable(table, schema)
     val byName = ct.columns.map(c => c.name -> c.chType).toMap
-    val entries = df.schema.fields.flatMap { f =>
-      val v = f.dataType match {
-        case TimestampType => unix_timestamp(col(f.name)).cast("string")
+    val entries = schema.fields.toSeq.zip(typed).flatMap { case (f, v) =>
+      val s = f.dataType match {
+        case TimestampType => unix_timestamp(v).cast("string")
         case BinaryType =>
           // lossless transport (advice r14): cast("string") reinterprets
           // bytes as UTF-8 and substitutes U+FFFD for invalid sequences.
@@ -94,35 +166,21 @@ class ClickHouseHttpSink(
           // stays null — advice r15). A non-String declared target (e.g.
           // FixedString(20)) would truncate the hex — reject loudly.
           byName(f.name) match {
-            case ChString | ChNullable(ChString) => hex(col(f.name))
+            case ChString | ChNullable(ChString) => hex(v)
             case other => throw new IllegalArgumentException(
               s"binary column '${f.name}' of $table maps to $other; binary " +
                 "travels as hex text and requires a String target")
           }
-        case _ => col(f.name).cast("string")
+        case _ => v.cast("string")
       }
-      Seq(lit(f.name), v)
+      Seq(lit(f.name), s)
     }
-    val rows = df.select(
-      RowBinary.rowbinary_encode(map(entries.toIndexedSeq: _*), ct).as("rb"))
-    val (ep, u, p, c, bb) = (endpoint, user, password, compress, blockBytes)
-    val insertSql = insertStatement(ct)
-    // streamed insert (VERDICT r14 #4): rows flow into the chunked HTTP body
-    // as the partition iterator drains — at most ONE frame (blockBytes)
-    // buffered, the reference's stated memory property — instead of
-    // accumulating the whole encoded partition before the POST
-    rows.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-      if (it.hasNext) {
-        postStream(ep, insertSql, u, p, c, bb) { os =>
-          it.foreach(r => os.write(r.getAs[Array[Byte]](0)))
-        }
-      }
-    }
+    RowBinary.rowbinary_encode(map(entries: _*), ct)
   }
 
   /** Explicit SORTED column list — the wire order is part of the statement,
     * exactly how the reference's inserter communicates it. */
-  private def insertStatement(ct: ChTable): String =
+  private[sink] def insertStatement(ct: ChTable): String =
     s"INSERT INTO ${dialect.quote(ct.name)} (" +
       ct.sortedColumns.map(c => dialect.quote(c.name)).mkString(", ") +
       ") FORMAT RowBinary"
@@ -164,16 +222,6 @@ class ClickHouseHttpSink(
   private def ensureCursorTable(): Unit =
     post(endpoint, dialect.cursorTableSql(cursorTable, dialect.cursorColumns),
       Array.emptyByteArray, user, password, compress = false)
-
-  private def ensureSchema(frames: Map[String, DataFrame]): Unit =
-    if (!schemaReady) synchronized {
-      if (!schemaReady) {
-        ddlStatements(frames.map { case (t, df) => t -> df.schema })
-          .foreach(ddl => post(endpoint, ddl, Array.emptyByteArray,
-            user, password, compress = false))
-        schemaReady = true
-      }
-    }
 }
 
 object ClickHouseHttpSink {
@@ -194,62 +242,103 @@ object ClickHouseHttpSink {
     case _ => ChString
   }
 
-  /** POST a statement (+ optional RowBinary body). The statement travels
-    * in the `query` URL param — the reference client's shape — with
-    * `decompress=1` marking a native-LZ4-framed body. Non-2xx fails the
-    * task loudly (Spark retry = the at-least-once contract). */
+  /** The task body of [[ClickHouseHttpSink.writeBatch]]: stream each row's
+    * bytes into its table's insert, opened on that table's first row, then
+    * finish every insert (each must answer 2xx). Any failure aborts every
+    * insert still open, so no row of an unfinished insert lands. A partition
+    * with rows sends `ddl` before its first insert; it returns its top
+    * `(block_num, cursor, block_id)`, an empty partition nothing. */
+  private def writePartition(endpoint: String, user: String, password: String,
+      compress: Boolean, blockBytes: Int, ddl: Seq[String], inserts: Map[String, String])(
+      rows: Iterator[Row]): Iterator[(Long, String, String)] = {
+    if (!rows.hasNext) return Iterator.empty
+    ddl.foreach(post(endpoint, _, Array.emptyByteArray, user, password, compress = false))
+    val streams = mutable.Map.empty[String, InsertStream]
+    var top = (Long.MinValue, "", "")
+    var done = false
+    try {
+      rows.foreach { r =>
+        if (r.getLong(0) > top._1) top = (r.getLong(0), r.getString(1), r.getString(2))
+        if (!r.isNullAt(4)) {
+          val table = r.getString(3)
+          streams.getOrElseUpdate(table, InsertStream.open(endpoint, inserts(table),
+            user, password, compress, blockBytes)).out.write(r.getAs[Array[Byte]](4))
+        }
+      }
+      streams.valuesIterator.foreach(_.finish())
+      done = true
+    } finally if (!done) streams.valuesIterator.foreach(_.abort())
+    Iterator(top)
+  }
+
+  /** One streamed POST: the statement travels in the `query` URL param — the
+    * reference client's shape — with `decompress=1` marking a
+    * native-LZ4-framed body. The caller writes the UNCOMPRESSED body through
+    * [[out]] as it is produced; compression frames are cut incrementally
+    * every `blockBytes` ([[ChNativeCodec.FrameOutputStream]]) into the
+    * already-chunked HTTP connection, so peak memory is one frame however
+    * long the body (VERDICT r14 #4).
+    *
+    * Exactly one of [[finish]] or [[abort]] ends it. `finish` completes the
+    * body and fails loudly on a non-2xx reply (Spark retry = the
+    * at-least-once contract). `abort` (advice r15) releases the socket
+    * WITHOUT finishing the body — the connection is torn down first and only
+    * then is the frame wrapper closed (suppressed): closing it live would
+    * flush a valid final frame into the socket and commit rows from a failed
+    * task. `abort` after `finish` is a no-op. */
+  final class InsertStream private (conn: HttpURLConnection, sql: String,
+      val out: OutputStream) {
+    private var ended = false
+
+    def finish(): Unit = {
+      ended = true
+      try {
+        out.close()
+        checkReply(conn, sql)
+        conn.getInputStream.readAllBytes() // drain
+      } finally conn.disconnect()
+    }
+
+    def abort(): Unit = if (!ended) {
+      ended = true
+      conn.disconnect()
+      // best-effort release of the wrapper's buffer; the JDK's stream may
+      // throw anything (even NPE) once the connection is torn down —
+      // nothing here may mask the original failure
+      try out.close() catch { case NonFatal(_) => () }
+    }
+  }
+
+  object InsertStream {
+    def open(endpoint: String, sql: String, user: String, password: String,
+        compress: Boolean, blockBytes: Int = ChNativeCodec.DefaultBlockBytes): InsertStream = {
+      val conn = connect(endpoint, sql, if (compress) "&decompress=1" else "", user, password)
+      conn.setDoOutput(true)
+      conn.setChunkedStreamingMode(1 << 16)
+      try {
+        val raw = conn.getOutputStream
+        new InsertStream(conn, sql,
+          if (compress) new ChNativeCodec.FrameOutputStream(raw, blockBytes) else raw)
+      } catch { case e: Throwable => conn.disconnect(); throw e }
+    }
+  }
+
+  /** POST a statement (+ optional RowBinary body) through one
+    * [[InsertStream]]. */
   def post(endpoint: String, sql: String, body: Array[Byte],
       user: String, password: String, compress: Boolean): Unit =
-    if (body.isEmpty) postStream(endpoint, sql, user, password,
-      compress = false, hasBody = false)(_ => ())
+    if (body.isEmpty) postStream(endpoint, sql, user, password, compress = false)(_ => ())
     else postStream(endpoint, sql, user, password, compress)(_.write(body))
 
-  /** Streaming POST (VERDICT r14 #4): the caller writes the UNCOMPRESSED
-    * body through the supplied stream as it is produced; compression frames
-    * are cut incrementally every `blockBytes` ([[ChNativeCodec
-    * .FrameOutputStream]]) into the already-chunked HTTP connection, so
-    * peak memory is one frame regardless of partition size. */
+  /** Streaming POST: `write` produces the body into an [[InsertStream]],
+    * which is finished when `write` returns and aborted when it throws. */
   def postStream(endpoint: String, sql: String, user: String,
       password: String, compress: Boolean,
-      blockBytes: Int = ChNativeCodec.DefaultBlockBytes,
-      hasBody: Boolean = true)(write: java.io.OutputStream => Unit): Unit = {
-    val q = new StringBuilder("query=")
-      .append(URLEncoder.encode(sql, StandardCharsets.UTF_8))
-    if (compress && hasBody) q.append("&decompress=1")
-    val conn = URI.create(s"$endpoint/?$q").toURL
-      .openConnection().asInstanceOf[HttpURLConnection]
-    try {
-      conn.setRequestMethod("POST")
-      conn.setDoOutput(true)
-      conn.setRequestProperty("X-ClickHouse-User", user)
-      if (password.nonEmpty) conn.setRequestProperty("X-ClickHouse-Key", password)
-      conn.setChunkedStreamingMode(1 << 16)
-      val raw = conn.getOutputStream
-      val os = if (compress && hasBody)
-        new ChNativeCodec.FrameOutputStream(raw, blockBytes) else raw
-      // advice r15: if `write` throws mid-stream, release the socket
-      // WITHOUT finishing the body — the outer finally's disconnect()
-      // aborts the chunked transfer first, and only then is the frame
-      // wrapper closed (suppressed): closing it live would flush a valid
-      // final frame into the socket and commit rows from a failed task.
-      var bodyDone = false
-      try { write(os); os.close(); bodyDone = true }
-      finally if (!bodyDone) {
-        conn.disconnect()
-        // best-effort release of the wrapper's buffer; the JDK's stream may
-        // throw anything (even NPE) once the connection is torn down —
-        // nothing here may mask the original write failure
-        try os.close() catch { case scala.util.control.NonFatal(_) => () }
-      }
-      val code = conn.getResponseCode
-      if (code / 100 != 2) {
-        val err = Option(conn.getErrorStream)
-          .map(s => new String(s.readAllBytes(), StandardCharsets.UTF_8))
-          .getOrElse("")
-        throw new java.io.IOException(s"ClickHouse HTTP $code for '${sql.take(80)}': $err")
-      }
-      conn.getInputStream.readAllBytes() // drain
-    } finally conn.disconnect()
+      blockBytes: Int = ChNativeCodec.DefaultBlockBytes)(write: OutputStream => Unit): Unit = {
+    val s = InsertStream.open(endpoint, sql, user, password, compress, blockBytes)
+    var written = false
+    try { write(s.out); written = true } finally if (!written) s.abort()
+    s.finish()
   }
 
   /** Spec hook: POST an ALREADY-FRAMED body verbatim under `decompress=1`
@@ -257,20 +346,13 @@ object ClickHouseHttpSink {
     * prove the server rejects it. */
   private[sink] def postRaw(endpoint: String, sql: String, framedBody: Array[Byte],
       user: String, password: String): Unit = {
-    val q = "query=" + URLEncoder.encode(sql, StandardCharsets.UTF_8) + "&decompress=1"
-    val conn = URI.create(s"$endpoint/?$q").toURL
-      .openConnection().asInstanceOf[HttpURLConnection]
+    val conn = connect(endpoint, sql, "&decompress=1", user, password)
     try {
-      conn.setRequestMethod("POST")
       conn.setDoOutput(true)
-      conn.setRequestProperty("X-ClickHouse-User", user)
-      if (password.nonEmpty) conn.setRequestProperty("X-ClickHouse-Key", password)
       val os = conn.getOutputStream
       os.write(framedBody)
       os.close()
-      val code = conn.getResponseCode
-      if (code / 100 != 2)
-        throw new java.io.IOException(s"ClickHouse HTTP $code for '${sql.take(80)}'")
+      checkReply(conn, sql)
       conn.getInputStream.readAllBytes()
     } finally conn.disconnect()
   }
@@ -278,25 +360,35 @@ object ClickHouseHttpSink {
   /** Run a SELECT, returning the (decompressed) RowBinary payload. */
   def get(endpoint: String, sql: String,
       user: String, password: String, compress: Boolean): Array[Byte] = {
-    val q = new StringBuilder("query=")
-      .append(URLEncoder.encode(sql, StandardCharsets.UTF_8))
-    if (compress) q.append("&compress=1")
-    val conn = URI.create(s"$endpoint/?$q").toURL
-      .openConnection().asInstanceOf[HttpURLConnection]
+    val conn = connect(endpoint, sql, if (compress) "&compress=1" else "", user, password)
     try {
-      conn.setRequestMethod("POST")
-      conn.setRequestProperty("X-ClickHouse-User", user)
-      if (password.nonEmpty) conn.setRequestProperty("X-ClickHouse-Key", password)
-      val code = conn.getResponseCode
-      if (code / 100 != 2) {
-        val err = Option(conn.getErrorStream)
-          .map(s => new String(s.readAllBytes(), StandardCharsets.UTF_8))
-          .getOrElse("")
-        throw new java.io.IOException(s"ClickHouse HTTP $code for '${sql.take(80)}': $err")
-      }
+      checkReply(conn, sql)
       val raw = conn.getInputStream.readAllBytes()
       if (compress) ChNativeCodec.readFrames(new java.io.ByteArrayInputStream(raw))
       else raw
     } finally conn.disconnect()
+  }
+
+  /** A POST to `endpoint` with `sql` in the `query` param (plus `params`)
+    * and the ClickHouse HTTP auth headers. */
+  private def connect(endpoint: String, sql: String, params: String,
+      user: String, password: String): HttpURLConnection = {
+    val q = "query=" + URLEncoder.encode(sql, StandardCharsets.UTF_8) + params
+    val conn = URI.create(s"$endpoint/?$q").toURL
+      .openConnection().asInstanceOf[HttpURLConnection]
+    conn.setRequestMethod("POST")
+    conn.setRequestProperty("X-ClickHouse-User", user)
+    if (password.nonEmpty) conn.setRequestProperty("X-ClickHouse-Key", password)
+    conn
+  }
+
+  private def checkReply(conn: HttpURLConnection, sql: String): Unit = {
+    val code = conn.getResponseCode
+    if (code / 100 != 2) {
+      val err = Option(conn.getErrorStream)
+        .map(s => new String(s.readAllBytes(), StandardCharsets.UTF_8))
+        .getOrElse("")
+      throw new java.io.IOException(s"ClickHouse HTTP $code for '${sql.take(80)}': $err")
+    }
   }
 }

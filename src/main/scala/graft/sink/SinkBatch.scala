@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.model.{BlockScoped, ChTable}
 import graft.pipeline.ChangePipeline
 
-/** Shared micro-batch skeleton for the O13/O14 sinks — the parquet, JDBC and
-  * ClickHouse variants differ ONLY in how a table frame is written and where
-  * the cursor row goes, so the batch shape lives here once:
+/** Shared micro-batch skeleton for the parquet and JDBC sinks (O13/O14).
+  * They differ ONLY in how a table frame is written and where the cursor
+  * row goes, so the batch shape lives here once:
   *
   *  1. cache the released blocks, so the stateful fold upstream runs once;
   *  2. ONE aggregation over the cache yields the tables the batch touches
@@ -20,7 +20,11 @@ import graft.pipeline.ChangePipeline
   *     (reference ordering, `src/loader.rs:111-175`).
   *
   * On the streaming path, where the released blocks sit in one partition,
-  * that is 1 + (present tables) Spark jobs per batch (SinkBatchSpec).
+  * that is 1 + (present tables) Spark jobs per batch (SinkBatchSpec). The
+  * summary is its own job because neither write can hand one back: the
+  * parquet sink writes through `DataFrameWriter`, and the JDBC sink
+  * repartitions each table by its key first. The ClickHouse HTTP sink,
+  * whose tasks return it, runs one job per batch ([[ClickHouseHttpSink]]).
   */
 object SinkBatch {
 

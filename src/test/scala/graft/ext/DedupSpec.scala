@@ -247,6 +247,25 @@ class DedupSpec extends SparkSpec {
     assert(e.getMessage.contains("'changed'") && e.getMessage.contains("java.lang.String"))
   }
 
+  test("observe metrics arrive from an eager localCheckpoint, within a bounded wait") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    import spark.implicits._
+    // the iterative loops read their convergence counts this way: the
+    // observed frame is materialized only by its eager localCheckpoint
+    val obs = org.apache.spark.sql.Observation()
+    val df = (1 to 1000).toDF("x")
+      .observe(obs, sum(when(col("x") % 2 === 0, 1L).otherwise(0L)).as("evens"))
+      .localCheckpoint()
+    try {
+      // obs.get blocks until the metrics arrive (the loops wait unbounded):
+      // bound it here, so a Spark that stops delivering them fails this
+      // test instead of hanging it
+      val got = Await.result(Future(obs.get)(ExecutionContext.global), 30.seconds)
+      assert(Dedup.observedLong("evens", got("evens")) === 500L)
+    } finally Dedup.unpersistCheckpoint(df)
+  }
+
   test("incremental near-dup: delta vs store, store update, pruned probe") {
     import spark.implicits._
     val store = java.nio.file.Files.createTempDirectory("graft_sigstore_spec").toString + "/store"

@@ -3,6 +3,11 @@ package graft.sink
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.col
+
 import graft.SparkSpec
 import graft.model._
 import graft.streaming.GraftStream
@@ -29,9 +34,32 @@ class ClickHouseHttpSinkSpec extends SparkSpec {
     Files.move(src.toPath, new java.io.File(s"$dir/$name.parquet").toPath)
   }
 
-  private def storedV(server: ClickHouseHttpServer): Seq[Int] =
-    server.select("t").map(r =>
-      r(server.tables.get("t").columns.indexWhere(_.name == "v")).toInt).sorted
+  private def storedV(server: ClickHouseHttpServer): Seq[Int] = stored(server, "t", "v")
+
+  private def stored(server: ClickHouseHttpServer, table: String, column: String): Seq[Int] =
+    server.select(table).map(r =>
+      r(server.tables.get(table).columns.indexWhere(_.name == column)).toInt).sorted
+
+  private val twoTables = Seq(
+    ChTable("t", Seq(ChColumn("v", ChInt32))),
+    ChTable("u", Seq(ChColumn("w", ChInt32))))
+
+  /** Block n with one change: odd blocks write t.v, even ones u.w. */
+  private def tu(n: Long, value: String = ""): BlockScoped = {
+    val (table, column) = if (n % 2 == 1) ("t", "v") else ("u", "w")
+    BlockScoped(Clock(s"b$n", n, Timestamp.valueOf("2023-01-01 00:00:00")), s"c$n", n,
+      Seq(ChangeRec(table, "", Map.empty,
+        Seq(FieldKV(column, if (value.isEmpty) n.toString else value, "")))))
+  }
+
+  private def quiet(n: Long): BlockScoped =
+    BlockScoped(Clock(s"b$n", n, Timestamp.valueOf("2023-01-01 00:00:00")), s"c$n", n, Seq.empty)
+
+  /** A batch whose partitions hold exactly `parts`, in order. */
+  private def partitioned(parts: Seq[BlockScoped]*): Dataset[BlockScoped] = {
+    import spark.implicits._
+    spark.createDataset(spark.sparkContext.parallelize(parts, parts.size).flatMap(identity))
+  }
 
   test("stream -> ClickHouse HTTP sink -> cursor; restart resumes without re-delivery") {
     val server = new ClickHouseHttpServer()
@@ -177,8 +205,15 @@ class ClickHouseHttpSinkSpec extends SparkSpec {
       ClickHouseHttpSink.post(server.url,
         "CREATE TABLE `bin` (`id` Int32, `payload` String) ENGINE = MergeTree ORDER BY (`id`)",
         Array.emptyByteArray, "default", "", compress = false)
+      // an undeclared table: every column maps from its Spark type, so the
+      // payload targets a String
       val sink = new ClickHouseHttpSink(Seq.empty, server.url, "chainBin")
-      sink.writeTable("bin", Seq((7, payload)).toDF("id", "payload"))
+      val df = Seq((7, payload)).toDF("id", "payload")
+      val rb = df.select(sink.encodeRow("bin", df.schema, df.columns.toSeq.map(col)))
+        .head().getAs[Array[Byte]](0)
+      ClickHouseHttpSink.post(server.url,
+        sink.insertStatement(sink.frameChTable("bin", df.schema)), rb,
+        "default", "", compress = true)
       val t = server.tables.get("bin")
       val row = server.select("bin").head
       val hexStored = row(t.columns.indexWhere(_.name == "payload"))
@@ -194,14 +229,20 @@ class ClickHouseHttpSinkSpec extends SparkSpec {
     val server = new ClickHouseHttpServer()
     try {
       // FixedString(4) would truncate the hex text to 4 bytes — corrupt;
-      // the sink must refuse at plan-build time instead
+      // the sink must refuse at plan-build time instead. The typed
+      // projection of a FixedString column is binary, so writeBatch meets
+      // exactly this case.
       val cat = Seq(ChTable("bin2", Seq(ChColumn("payload", ChFixedString(4)))))
       val sink = new ClickHouseHttpSink(cat, server.url, "chainBin2")
+      val blocks = Seq(BlockScoped(Clock("b1", 1L, Timestamp.valueOf("2023-01-01 00:00:00")),
+        "c1", 1L, Seq(ChangeRec("bin2", "", Map.empty, Seq(FieldKV("payload", "ab", "")))))).toDS()
       val e = intercept[IllegalArgumentException] {
-        sink.writeTable("bin2", Seq(Tuple1(Array[Byte](1, 2))).toDF("payload"))
+        sink.writeBatch(blocks, 0L)
       }
       assert(e.getMessage.contains("FixedString"), s"got: ${e.getMessage}")
       assert(server.rowCount("bin2") === 0)
+      assert(server.ddlRequests.get() === 0 && server.insertRequests.get() === 0,
+        "refused before anything is sent")
     } finally server.close()
   }
 
@@ -250,6 +291,69 @@ class ClickHouseHttpSinkSpec extends SparkSpec {
       assert(server.select("graft_cursors").size === 1,
         "ReplacingMergeTree collapses the replayed cursor rows latest-wins")
       assert(sink.loadCursor(spark).map(_.blockNum) === Some(10L))
+    } finally server.close()
+  }
+
+  test("one partition interleaving two tables: one insert per table, every row, cursor row last") {
+    val server = new ClickHouseHttpServer()
+    try {
+      // 64-byte frames: both inserts stream frames while the other is open
+      val sink = new ClickHouseHttpSink(twoTables, server.url, "chainTU", blockBytes = 64)
+      sink.writeBatch(partitioned((1L to 12L).map(tu(_))), 0L)
+      val log = server.applied.asScala.toSeq
+      val inserts = log.filter(_.startsWith("INSERT"))
+      assert(inserts.count(_ == "INSERT t") === 1 && inserts.count(_ == "INSERT u") === 1,
+        s"one insert request per table: $log")
+      assert(server.insertRequests.get() === 3, "t, u and the cursor row")
+      assert(log.last === "INSERT graft_cursors", s"cursor row last: $log")
+      assert(stored(server, "t", "v") === Seq(1, 3, 5, 7, 9, 11))
+      assert(stored(server, "u", "w") === Seq(2, 4, 6, 8, 10, 12))
+      assert(sink.loadCursor(spark).map(c => (c.blockNum, c.cursor)) === Some((12L, "c12")))
+    } finally server.close()
+  }
+
+  test("strict: a bad value on a later row fails writeBatch; neither table keeps a row, no cursor row") {
+    val server = new ClickHouseHttpServer()
+    try {
+      val sink = new ClickHouseHttpSink(twoTables, server.url, "chainStrict",
+        strict = true, blockBytes = 64)
+      // blocks 1..12 put frames of both tables on the wire; block 13's t.v
+      // is not an Int32
+      val e = intercept[Exception] {
+        sink.writeBatch(partitioned((1L to 12L).map(tu(_)) :+ tu(13, "x13")), 0L)
+      }
+      assert(e.getMessage.contains("graft strict cast"), s"got: $e")
+      // both inserts were open when the task failed: each must end as a
+      // rejected (truncated) request, not a committed one
+      val deadline = System.currentTimeMillis() + 10000
+      while (server.badRequests.get() < 2 && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(server.badRequests.get() === 2, "both open inserts aborted")
+      assert(server.rowCount("t") === 0 && server.rowCount("u") === 0,
+        "no row of the failed attempt lands")
+      assert(server.rowCount("graft_cursors") === 0, "no cursor row for a failed batch")
+      assert(server.insertRequests.get() === 0)
+    } finally server.close()
+  }
+
+  test("a batch over 3 partitions (one empty, one change-less): top cursor across all, every row once") {
+    val server = new ClickHouseHttpServer()
+    try {
+      val sink = new ClickHouseHttpSink(twoTables, server.url, "chainP")
+      // the highest block is change-less: it counts toward the cursor all
+      // the same. The fixture 404s an insert into a table not yet created,
+      // so a clean run also shows the DDL went out before any insert.
+      val blocks = partitioned(Seq.empty, (1L to 6L).map(tu(_)), Seq(quiet(7), quiet(8)))
+      assert(blocks.rdd.getNumPartitions === 3)
+      sink.writeBatch(blocks, 0L)
+      assert(server.badRequests.get() === 0)
+      assert(stored(server, "t", "v") === Seq(1, 3, 5))
+      assert(stored(server, "u", "w") === Seq(2, 4, 6))
+      val log = server.applied.asScala.toSeq
+      val firstInsert = log.indexWhere(_.startsWith("INSERT"))
+      assert(Seq("CREATE t", "CREATE u").forall(c => (0 until firstInsert).contains(log.indexOf(c))),
+        s"DDL first: $log")
+      assert(log.last === "INSERT graft_cursors", s"cursor row last: $log")
+      assert(sink.loadCursor(spark).map(c => (c.blockNum, c.cursor)) === Some((8L, "c8")))
     } finally server.close()
   }
 }
