@@ -42,7 +42,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Usage:
   * {{{
-  *   spark.readStream.format("graft.sources.chain")
+  *   spark.readStream.format("graft.sources.ChainSource")
   *     .option("blocksPerTrigger", 10)   // msgs admitted per micro-batch
   *     .option("totalBlocks", 1000)      // stop advancing after this many msgs
   *     .option("reorgEvery", 50)         // undo message cadence (0 = never)

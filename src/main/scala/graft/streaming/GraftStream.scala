@@ -37,11 +37,21 @@ object GraftStream {
     * carried over, and a checkpoint written with another count keeps it on
     * restart. Downstream parallelism is unchanged: every released block
     * already sat in the one partition that holds the key, and shuffles in
-    * `writeBatch` still use the caller's `spark.sql.shuffle.partitions`. */
+    * `writeBatch` still use the caller's `spark.sql.shuffle.partitions`.
+    *
+    * The same clone names the checkpoint file manager,
+    * [[LocalCheckpointFiles]]. Every micro-batch writes an offset-log entry,
+    * a commit-log entry and a state delta with its checksum file; on a
+    * `file:` checkpoint, Hadoop's local filesystem without `libhadoop` forks
+    * a `chmod` or `readlink` process for each file it creates or renames,
+    * about 40 per batch. The manager writes them with java.nio instead. Its
+    * files are Spark's minus Hadoop's `.crc` sidecars, so a checkpoint
+    * restarts under a plain Spark query and back. */
   def startWith(msgs: Dataset[BlockMsg], checkpointDir: String)(
       writeBatch: (Dataset[BlockScoped], Long) => Unit): StreamingQuery =
     SessionBridge.withConf(StreamingFinality.released(msgs),
-        Map(SessionBridge.StateStoresKey -> "1"))
+        Map(SessionBridge.StateStoresKey -> "1",
+          SessionBridge.CheckpointManagerKey -> classOf[LocalCheckpointFiles].getName))
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)

@@ -21,6 +21,12 @@ object SessionBridge {
     * it is named only here, beside the other Spark-internal bridges. */
   val StateStoresKey: String = SQLConf.STATEFUL_SHUFFLE_PARTITIONS_INTERNAL.key
 
+  /** The `CheckpointFileManager` class a query writes and reads every
+    * checkpoint file with: offset and commit logs, query metadata, state
+    * store. Spark takes it from the query session's Hadoop conf, which
+    * carries the session's SQL conf. Also internal, so named only here. */
+  val CheckpointManagerKey: String = SQLConf.STREAMING_CHECKPOINT_FILE_MANAGER_CLASS.parent.key
+
   /** `ds` rebound onto a clone of its session with `conf` set on the clone
     * only — the caller's session conf is never written, so queries planned
     * concurrently on it are unaffected.

@@ -2,12 +2,15 @@ package graft.streaming
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import java.time.Instant
 import java.util.UUID
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
+import jdk.jfr.consumer.{RecordedEvent, RecordingStream}
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.graftbridge.SessionBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 
 import graft.SparkSpec
@@ -71,6 +74,8 @@ class GraftStreamSpec extends SparkSpec {
 
     val key = "spark.sql.shuffle.partitions"
     val before = spark.conf.get(key)
+    val mgrKey = SessionBridge.CheckpointManagerKey
+    assert(spark.conf.getOption(mgrKey).isEmpty)
     val progressOf = new ConcurrentLinkedQueue[UUID]()
     val listener = new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
@@ -82,12 +87,15 @@ class GraftStreamSpec extends SparkSpec {
     try {
       val sink = new MultiTableSink(catalog, outDir, "chainA")
       val inBatch = new ConcurrentLinkedQueue[(String, String)]()
+      val mgrInBatch = new ConcurrentLinkedQueue[(Option[String], Option[String])]()
       val q = GraftStream.startWith(GraftStream.fileSource(spark, srcDir), ckpt) { (blocks, id) =>
         inBatch.add((spark.conf.get(key), blocks.sparkSession.conf.get(key)))
+        mgrInBatch.add((spark.conf.getOption(mgrKey), blocks.sparkSession.conf.getOption(mgrKey)))
         sink.writeBatch(blocks, id)
       }
       q.processAllAvailable()
       val during = spark.conf.get(key)
+      val mgrDuring = spark.conf.getOption(mgrKey)
       q.stop()
 
       val data = q.recentProgress.filter(_.numInputRows > 0)
@@ -97,6 +105,10 @@ class GraftStreamSpec extends SparkSpec {
       assert(Seq(during, spark.conf.get(key)) === Seq(before, before))
       // shuffles inside writeBatch keep the caller's width
       assert(inBatch.asScala.toSeq.distinct === Seq((before, before)))
+      // the checkpoint manager is named on the query's clone only
+      assert(mgrInBatch.asScala.toSeq.distinct ===
+        Seq((None, Some(classOf[LocalCheckpointFiles].getName))))
+      assert(Seq(mgrDuring, spark.conf.getOption(mgrKey)) === Seq(None, None))
       assert(sink.loadCursor(spark).map(_.blockNum) === Some(3L))
 
       // listener delivery is async
@@ -139,9 +151,117 @@ class GraftStreamSpec extends SparkSpec {
     assert(cur.map(c => (c.blockNum, c.cursor)) === Some((6L, "c6")))
   }
 
+  test("no process is forked for checkpoint files after the first micro-batch") {
+    // the synthetic chain source and an in-memory sink write no files, so
+    // every file the query writes is a checkpoint file
+    val ckpt = Files.createTempDirectory("graftforks").resolve("ckpt").toString
+    implicit val enc = org.apache.spark.sql.Encoders.product[BlockMsg]
+    val msgs = spark.readStream.format("graft.sources.ChainSource")
+      .option("blocksPerTrigger", 10).option("totalBlocks", 30)
+      .option("finalityLag", 2).option("numPartitions", 1)
+      .load().as[BlockMsg]
+    val released = new ConcurrentLinkedQueue[Long]()
+
+    // Hadoop starts its helper processes through org.apache.hadoop.util.Shell
+    def fromShell(e: RecordedEvent): Boolean = Option(e.getStackTrace).exists(
+      _.getFrames.asScala.exists(_.getMethod.getType.getName == "org.apache.hadoop.util.Shell"))
+    // (start, "thread: command"); the stream reuses its event objects, so
+    // each handler copies out what it needs
+    val forks = new ConcurrentLinkedQueue[(Instant, String)]()
+    val marks = new ConcurrentHashMap[String, Instant]()
+    val ended = new CountDownLatch(1)
+    def mark(point: String): Unit = { val m = new ForkProbeMark; m.point = point; m.commit() }
+    val rs = new RecordingStream()
+    try {
+      rs.enable("jdk.ProcessStart").withStackTrace()
+      rs.enable(classOf[ForkProbeMark])
+      rs.onEvent("jdk.ProcessStart", e => if (fromShell(e))
+        forks.add((e.getStartTime, s"${e.getThread.getJavaName}: ${e.getString("command")}")))
+      rs.onEvent(classOf[ForkProbeMark].getName, { e =>
+        marks.putIfAbsent(e.getString("point"), e.getStartTime)
+        if (e.getString("point") == "end") ended.countDown()
+      })
+      rs.startAsync()
+
+      val q = GraftStream.startWith(msgs, ckpt) { (blocks, id) =>
+        blocks.collect().foreach(b => released.add(b.clock.number))
+        // batch 0's commit-log entry and everything of batches 1 and 2 follow
+        if (id == 0) mark("first")
+      }
+      q.processAllAvailable(); q.stop()
+      mark("end")
+      assert(ended.await(30, TimeUnit.SECONDS), "the recording delivered the end mark")
+      assert(marks.keySet.asScala === Set("first", "end"))
+
+      assert(q.recentProgress.count(_.numInputRows > 0) === 3)
+      assert(released.size > 10 && released.asScala.toSeq.distinct.size === released.size)
+      val late = forks.asScala.toSeq.filter(_._1.isAfter(marks.get("first"))).sorted.map(_._2)
+      assert(late.isEmpty, late.mkString(s"${late.size} forks after the first batch:\n", "\n", ""))
+    } finally rs.close()
+  }
+
+  test("a checkpoint written through startWith restarts under plain Spark; same files minus Hadoop sidecars") {
+    val root = Files.createTempDirectory("graftnewckpt").toString
+    val srcDir = s"$root/src"; val outDir = s"$root/out"; val ckpt = s"$root/ckpt"
+    new java.io.File(srcDir).mkdirs()
+    val sink = new MultiTableSink(catalog, outDir, "chainA")
+    val write: (Dataset[BlockScoped], Long) => Unit = sink.writeBatch
+    def files(dir: String): Seq[String] = {
+      val base = new java.io.File(dir).toPath
+      Files.walk(base).iterator().asScala.filter(Files.isRegularFile(_))
+        .map(base.relativize(_).toString).toSeq.sorted
+    }
+    def hadoopSidecar(rel: String): Boolean = {
+      val name = rel.split('/').last
+      name.startsWith(".") && name.endsWith(".crc")
+    }
+
+    // phase 1 through startWith: blocks 1..5 release 1,2,3 and buffer 4,5
+    writeMsgs(srcDir, "batch1", (1L to 5L).map(n => BlockMsg.data(n, blk(n, n - 2))))
+    val q1 = GraftStream.start(GraftStream.fileSource(spark, srcDir), catalog, outDir, ckpt, "chainA")
+    q1.processAllAvailable(); q1.stop()
+
+    // the same plan and store count through Spark's default manager
+    val refCkpt = s"$root/ref"
+    val refWrite: (Dataset[BlockScoped], Long) => Unit =
+      new MultiTableSink(catalog, s"$root/refout", "chainA").writeBatch
+    val ref = SessionBridge.withConf(StreamingFinality.released(GraftStream.fileSource(spark, srcDir)),
+        Map(SessionBridge.StateStoresKey -> "1"))
+      .writeStream.outputMode("append").option("checkpointLocation", refCkpt)
+      .foreachBatch(refWrite).start()
+    ref.processAllAvailable(); ref.stop()
+    val written = files(ckpt)
+    // the file source keeps its own log through the session that built the
+    // source (the caller's), so only sources/ may carry Hadoop sidecars
+    assert(written.nonEmpty && !written.exists(f => hadoopSidecar(f) && !f.startsWith("sources/")))
+    assert(written.filterNot(hadoopSidecar) === files(refCkpt).filterNot(hadoopSidecar))
+    assert(written.exists(f => f.startsWith("state/") && f.endsWith(".delta.crc")),
+      "Spark's state checksum files are still written")
+
+    // phase 2: the plain finality plan on the caller's session (Spark's
+    // default manager); blocks 6..8 release 4,5,6 from the restored buffer
+    writeMsgs(srcDir, "batch2", (6L to 8L).map(n => BlockMsg.data(n, blk(n, n - 2))))
+    val q2 = StreamingFinality.released(GraftStream.fileSource(spark, srcDir))
+      .writeStream.outputMode("append").option("checkpointLocation", ckpt)
+      .foreachBatch(write).start()
+    q2.processAllAvailable(); q2.stop()
+    assert(q2.recentProgress.filter(_.numInputRows > 0)
+      .map(_.stateOperators.head.numShufflePartitions).distinct.toSeq === Seq(1L))
+    assert(files(ckpt).contains("commits/.1.crc"), "phase 2 wrote through Hadoop's filesystem")
+
+    val rows = spark.read.parquet(sink.dataPath("t")).select("v").collect().map(_.getInt(0)).sorted
+    assert(rows.toSeq === Seq(1, 2, 3, 4, 5, 6), "each released block written exactly once")
+    assert(sink.loadCursor(spark).map(c => (c.blockNum, c.cursor)) === Some((6L, "c6")))
+  }
+
   test("loadCursor on empty store -> None (start from start_block)") {
     val root = Files.createTempDirectory("graftcur").toString
     val sink = new MultiTableSink(catalog, root, "nope")
     assert(sink.loadCursor(spark).isEmpty)
   }
+}
+
+/** A named point in the fork test's JFR recording, on the recording's clock. */
+final class ForkProbeMark extends jdk.jfr.Event {
+  var point: String = _
 }
