@@ -72,10 +72,24 @@ object Graph {
     // the way AQE's coalescing would size it (advisory byte target,
     // parallelism-first floor). Under AQE every exchange is a separately
     // submitted driver job — 44 jobs/run for this lane, each a blocking
-    // round-trip, on pre-partitioned frames where adaptivity has nothing
-    // to decide. With the loop conf pinned, each barrier is ONE job whose
-    // byte-right stages schedule inside the DAG. Scale-neutral: the count
-    // is bytes/advisory with a parallelism floor, never a local constant.
+    // round-trip, on pre-partitioned frames whose partitioning and join
+    // strategy are pinned by construction. With the loop conf pinned, each
+    // barrier is ONE job whose byte-right stages schedule inside the DAG.
+    // The partition COUNT is scale-neutral (bytes/advisory with a
+    // parallelism floor, never a local constant), but AQE off also gives
+    // up its skew handling: no skew-join split of an oversized partition
+    // of the src-keyed merge join, and no runtime re-sizing of the
+    // partitions of the dst-keyed rank aggregate (here) or of the
+    // neighbour-min aggregate (Dedup.connectedComponents). A hub node's
+    // rows all land in one partition; map-side partial aggregation folds
+    // them to one row per map task before the shuffle. Accepted at the
+    // inventory's sizes: the input is the near-dup graph, 257 edges at
+    // sf0.1 (one loop partition locally) up to 23M at sf10, and PLANS.md
+    // measured the lane's wall growing x44.8 for x90,650 edges over that
+    // span (~0.9 us per edge-iteration at sf10): per-job driver latency,
+    // not a straggler task, bounds the loop. A heavy-tailed graph large
+    // enough for per-task time to dominate wants AQE back on the loop (or
+    // salted hub keys).
     Dedup.withAqeOff(spark) {
     val p = Dedup.loopPartitions(symP0)
     val symP = if (p >= symP0.rdd.getNumPartitions) symP0 else {

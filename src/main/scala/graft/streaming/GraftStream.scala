@@ -46,7 +46,19 @@ object GraftStream {
     * a `chmod` or `readlink` process for each file it creates or renames,
     * about 40 per batch. The manager writes them with java.nio instead. Its
     * files are Spark's minus Hadoop's `.crc` sidecars, so a checkpoint
-    * restarts under a plain Spark query and back. */
+    * restarts under a plain Spark query and back.
+    *
+    * The same clone turns Spark's artifact isolation off, so the query's
+    * tasks run under the executor's default class loader. Spark caches
+    * generated code per (task class loader, code). Each query runs on a
+    * clone of its session with a new session UUID, and with isolation on,
+    * each UUID gets its own executor class loader: every query's first
+    * micro-batch recompiled the plan's ~18 generated classes. Now every
+    * query reuses the classes that an earlier query in the JVM compiled.
+    * [[StreamingFinality]]'s fixed state encoder keeps the state serializer's
+    * code the same across queries. A caller session that holds
+    * session-scoped artifacts keeps isolation on (see
+    * [[SessionBridge.withConf]]). */
   def startWith(msgs: Dataset[BlockMsg], checkpointDir: String)(
       writeBatch: (Dataset[BlockScoped], Long) => Unit): StreamingQuery =
     SessionBridge.withConf(StreamingFinality.released(msgs),

@@ -9,6 +9,7 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDown
 import scala.jdk.CollectionConverters._
 
 import jdk.jfr.consumer.{RecordedEvent, RecordingStream}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.graftbridge.SessionBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
@@ -75,7 +76,9 @@ class GraftStreamSpec extends SparkSpec {
     val key = "spark.sql.shuffle.partitions"
     val before = spark.conf.get(key)
     val mgrKey = SessionBridge.CheckpointManagerKey
+    val isoKey = SessionBridge.ArtifactIsolationKey
     assert(spark.conf.getOption(mgrKey).isEmpty)
+    assert(!spark.conf.getAll.contains(isoKey))
     val progressOf = new ConcurrentLinkedQueue[UUID]()
     val listener = new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
@@ -88,14 +91,17 @@ class GraftStreamSpec extends SparkSpec {
       val sink = new MultiTableSink(catalog, outDir, "chainA")
       val inBatch = new ConcurrentLinkedQueue[(String, String)]()
       val mgrInBatch = new ConcurrentLinkedQueue[(Option[String], Option[String])]()
+      val isoInBatch = new ConcurrentLinkedQueue[(Boolean, String)]()
       val q = GraftStream.startWith(GraftStream.fileSource(spark, srcDir), ckpt) { (blocks, id) =>
         inBatch.add((spark.conf.get(key), blocks.sparkSession.conf.get(key)))
         mgrInBatch.add((spark.conf.getOption(mgrKey), blocks.sparkSession.conf.getOption(mgrKey)))
+        isoInBatch.add((spark.conf.getAll.contains(isoKey), blocks.sparkSession.conf.get(isoKey)))
         sink.writeBatch(blocks, id)
       }
       q.processAllAvailable()
       val during = spark.conf.get(key)
       val mgrDuring = spark.conf.getOption(mgrKey)
+      val isoDuring = spark.conf.getAll.contains(isoKey)
       q.stop()
 
       val data = q.recentProgress.filter(_.numInputRows > 0)
@@ -109,6 +115,9 @@ class GraftStreamSpec extends SparkSpec {
       assert(mgrInBatch.asScala.toSeq.distinct ===
         Seq((None, Some(classOf[LocalCheckpointFiles].getName))))
       assert(Seq(mgrDuring, spark.conf.getOption(mgrKey)) === Seq(None, None))
+      // artifact isolation is off on the query's clone only
+      assert(isoInBatch.asScala.toSeq.distinct === Seq((false, "false")))
+      assert(!isoDuring && !spark.conf.getAll.contains(isoKey))
       assert(sink.loadCursor(spark).map(_.blockNum) === Some(3L))
 
       // listener delivery is async
@@ -254,11 +263,88 @@ class GraftStreamSpec extends SparkSpec {
     assert(sink.loadCursor(spark).map(c => (c.blockNum, c.cursor)) === Some((6L, "c6")))
   }
 
+  test("stream queries share one codegen cache: a later query's first micro-batch compiles nothing") {
+    implicit val enc = org.apache.spark.sql.Encoders.product[BlockMsg]
+    def chain(totalBlocks: Int): Dataset[BlockMsg] =
+      spark.readStream.format("graft.sources.ChainSource")
+        .option("blocksPerTrigger", 10).option("totalBlocks", totalBlocks)
+        .option("finalityLag", 2).option("numPartitions", 1)
+        .load().as[BlockMsg]
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // (class loaders of the batch's tasks, classes compiled from the
+    // query's start to the end of its first micro-batch)
+    def run(msgs: Dataset[BlockMsg], ckpt: String): (Seq[ClassLoader], Long) = {
+      val before = compiles
+      var firstBatch = -1L
+      val q = GraftStream.startWith(msgs, ckpt) { (blocks, _) =>
+        val released = blocks.mapPartitions { it =>
+          TaskLoaders.record(); Iterator(it.size)
+        }(org.apache.spark.sql.Encoders.scalaInt).collect().sum
+        assert(released > 0)
+        if (firstBatch < 0) firstBatch = compiles - before
+      }
+      q.processAllAvailable(); q.stop()
+      assert(firstBatch >= 0)
+      (TaskLoaders.drain().distinct, firstBatch)
+    }
+
+    val root = Files.createTempDirectory("graftcodegen")
+    val (firstLoaders, _) = run(chain(30), root.resolve("a").toString)
+    val (secondLoaders, secondCompiles) = run(chain(30), root.resolve("b").toString)
+    assert(firstLoaders.size === 1)
+    assert(secondLoaders === firstLoaders, "both queries' tasks ran under the same class loader")
+    assert(secondCompiles === 0L, "the second query's first micro-batch reuses every generated class")
+    // a restart reads the buffered state back: its deserializer is the one
+    // class the state operator builds anew for each batch
+    val (restartLoaders, restartCompiles) = run(chain(60), root.resolve("a").toString)
+    assert(restartLoaders === firstLoaders)
+    assert(restartCompiles <= 1L, s"$restartCompiles classes compiled in the restart's first batch")
+  }
+
+  test("a caller session with session-scoped artifacts keeps artifact isolation") {
+    val caller = spark.newSession()
+    val probe = classOf[ForkProbeMark]
+    val bytes = probe.getResourceAsStream(probe.getSimpleName + ".class").readAllBytes()
+    caller.addArtifact(bytes, s"classes/${probe.getName.replace('.', '/')}.class")
+
+    val root = Files.createTempDirectory("graftartifacts").toString
+    val srcDir = s"$root/src"; val outDir = s"$root/out"; val ckpt = s"$root/ckpt"
+    new java.io.File(srcDir).mkdirs()
+    val sink = new MultiTableSink(catalog, outDir, "chainA")
+    val isoInBatch = new ConcurrentLinkedQueue[String]()
+    val write: (Dataset[BlockScoped], Long) => Unit = { (blocks, id) =>
+      isoInBatch.add(blocks.sparkSession.conf.get(SessionBridge.ArtifactIsolationKey))
+      sink.writeBatch(blocks, id)
+    }
+
+    // blocks 1..5 release 1,2,3; the restart's 6..8 release 4,5,6
+    writeMsgs(srcDir, "batch1", (1L to 5L).map(n => BlockMsg.data(n, blk(n, n - 2))))
+    val q1 = GraftStream.startWith(GraftStream.fileSource(caller, srcDir), ckpt)(write)
+    q1.processAllAvailable(); q1.stop()
+    writeMsgs(srcDir, "batch2", (6L to 8L).map(n => BlockMsg.data(n, blk(n, n - 2))))
+    val q2 = GraftStream.startWith(GraftStream.fileSource(caller, srcDir), ckpt)(write)
+    q2.processAllAvailable(); q2.stop()
+
+    assert(isoInBatch.size === 2 && isoInBatch.asScala.toSet === Set("true"))
+    assert(!caller.conf.getAll.contains(SessionBridge.ArtifactIsolationKey))
+    val rows = spark.read.parquet(sink.dataPath("t")).select("v").collect().map(_.getInt(0)).sorted
+    assert(rows.toSeq === Seq(1, 2, 3, 4, 5, 6), "each released block written exactly once")
+    assert(sink.loadCursor(spark).map(c => (c.blockNum, c.cursor)) === Some((6L, "c6")))
+  }
+
   test("loadCursor on empty store -> None (start from start_block)") {
     val root = Files.createTempDirectory("graftcur").toString
     val sink = new MultiTableSink(catalog, root, "nope")
     assert(sink.loadCursor(spark).isEmpty)
   }
+}
+
+/** The context class loaders that tasks ran under, recorded from inside the
+  * tasks (local mode: executors share the driver's JVM). */
+object TaskLoaders {
+  private val seen = new ConcurrentLinkedQueue[ClassLoader]()
+  def record(): Unit = seen.add(Thread.currentThread.getContextClassLoader)
+  def drain(): Seq[ClassLoader] = Iterator.continually(seen.poll()).takeWhile(_ != null).toSeq
 }
 
 /** A named point in the fork test's JFR recording, on the recording's clock. */
