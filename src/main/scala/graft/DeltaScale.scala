@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Dedup, DeltaStore, IncrementalPipeline => IP, Ranking, Similarity}
@@ -32,14 +31,7 @@ object DeltaScale {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val root = if (args.length > 1) args(1)
       else java.nio.file.Files.createTempDirectory("graft_deltascale").toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-delta-scale").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.envCores)
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = Tables.documents(spark, d)

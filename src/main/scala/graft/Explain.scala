@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 
 /** Plan auditor: prints, for every inventory query, the physical-plan
@@ -16,20 +15,10 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val prefix = args.headOption.getOrElse("")
     val verbose = args.length > 1 && args(1) == "-v"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Session invariant (see ext/BucketedLayout.scala): bucketed scans
-      // report their sortBy order, so one-file-per-bucket SMJ joins skip
-      // both the exchange and the sort.
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      // wide joins overflow the default 25-field plan-string budget, which
-      // silently truncates ReadSchema/codegen markers and garbles the counts
-      .config("spark.sql.debug.maxToStringFields", "10000")
-      .getOrCreate()
+    // Fixed 4 cores, not SPARK_GRAFT_CPUS: PLANS.md's AQE-final counts are
+    // at 4. Wide joins overflow the default 25-field plan-string budget,
+    // which silently truncates ReadSchema/codegen markers and garbles the counts.
+    val spark = GraftSession.local(4, "spark.sql.debug.maxToStringFields" -> "10000")
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.001"
 

@@ -1,21 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Smoke-check `SparkEntry.entry` exactly as the driver does (rows > 0). */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Session invariant (see ext/BucketedLayout.scala): bucketed scans
-      // report their sortBy order, so one-file-per-bucket SMJ joins skip
-      // both the exchange and the sort.
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .getOrCreate()
+    val spark = GraftSession.local(4) // fixed: the smoke result must not depend on the machine
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     df.show(30, truncate = false)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Generates the checked-in 1,000-merge BPE table (VERDICT r14 #2: the
@@ -37,12 +36,7 @@ object TrainBpeTable {
     val out = if (args.length > 2) args(2)
       else "src/main/resources/graft/bpe_merges_1k.tsv"
 
-    val spark = SparkSession.builder()
-      .appName("graft-train-bpe-table").master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", false)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.envCores)
     // ONE distributed pass: the word histogram (tiny on the closed vocab)
     val hist = Tables.documents(spark, dir)
       .select(explode(split(lower(col("text")), "\\s+")).as("w"))

@@ -32,11 +32,11 @@ object BucketedLayout {
   /** The conf that lets bucketed scans report their sortBy order (off by
     * default since Spark 3.0). With one file per bucket — which the
     * pre-write repartition guarantees — the SMJ then needs no SortExec.
-    * This is a DECLARED SESSION INVARIANT, set once in every session
-    * builder in this repo (Verify/Bench/Smoke/Explain/SparkSpec), never
-    * flipped mid-session: the setting only affects bucketed-table scans,
-    * but scoping a set/restore around [[ensure]] would be a lie — planning
-    * happens later, at action time, long after ensure() returned. */
+    * This is a DECLARED SESSION INVARIANT, set once for every session in
+    * [[graft.GraftSession.local]], never flipped mid-session: the setting
+    * only affects bucketed-table scans, but scoping a set/restore around
+    * [[ensure]] would be a lie — planning happens later, at action time,
+    * long after ensure() returned. */
   val SortedScanConf = "spark.sql.legacy.bucketedTableScan.outputOrdering"
 
   /** Content key for a fixture that may be a single parquet FILE or a

@@ -136,9 +136,9 @@ object Dedup {
     *
     * r17 (guide §2.3/§2.4): spans are built IN-ROW by the codegen'd
     * [[graft.functions.Shingles]] expression and exploded — ZERO exchanges
-    * where the old formulation (posexplode + window `lead`s, retained below
-    * as the differential reference) exchanged and sorted the corpus-sized
-    * token stream before building a single shingle. Every downstream
+    * where the old formulation (posexplode + window `lead`s, retained in
+    * DedupSpec as the differential reference) exchanged and sorted the
+    * corpus-sized token stream before building a single shingle. Every downstream
     * per-id aggregate now map-side-combines over locally-grouped spans, so
     * only the reduced frame crosses the network. */
   def shingleFramePos(docs: DataFrame, textCol: String, idCol: String, n: Int): DataFrame = {
@@ -172,29 +172,6 @@ object Dedup {
     // this guard prevents. The count is still the session's own
     // parallelism, not a local-mode constant.
     if (parts >= target) df else df.repartition(target, idCols.map(col): _*)
-  }
-
-  /** Pre-r17 window formulation of [[shingleFramePos]], retained verbatim
-    * as the ground truth for the DedupSpec differential. */
-  private[graft] def shingleFramePosReference(docs: DataFrame, textCol: String,
-      idCol: String, n: Int): DataFrame = {
-    require(n >= 1)
-    val toks = docs.select(col(idCol).as("id"),
-      posexplode_outer(TextAnalysis.tokens(col(textCol))).as(Seq("pos", "t")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id")).orderBy(col("pos"))
-    val wAll = org.apache.spark.sql.expressions.Window.partitionBy(col("id"))
-    val withLeads = (1 until n).foldLeft(toks) { (df, j) =>
-      df.withColumn(s"_l$j", lead(col("t"), j).over(w))
-    }
-    val leadCols = (1 until n).map(j => col(s"_l$j"))
-    val lastLead = if (leadCols.nonEmpty) leadCols.last else col("t")
-    withLeads
-      .withColumn("ntok", count(col("t")).over(wAll))
-      .withColumn("shingle", concat_ws(" ", (col("t") +: leadCols): _*))
-      .filter(lastLead.isNotNull ||
-        (col("ntok") < n && col("pos") <= 0) || col("pos").isNull)
-      .select(col("id"), col("ntok"), col("pos"), col("shingle"))
   }
 
   /** Exact substring-duplication coverage — the ExactSubstr shape of Lee

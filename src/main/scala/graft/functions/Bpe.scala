@@ -35,12 +35,10 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object Bpe {
 
-  /** Ordered merge table. Ranks are the sequence positions; the pair→rank
-    * map is rebuilt per JVM (transient) from the serialized pairs. */
+  /** Ordered merge table. Ranks are the sequence positions; the lookup
+    * structures are rebuilt per JVM (transient) from the serialized pairs. */
   final case class BpeTable(merges: Seq[(String, String)]) extends Serializable {
     require(merges.nonEmpty, "empty merge table")
-    @transient lazy val rank: Map[(String, String), Int] =
-      merges.zipWithIndex.toMap
     /** Code points appearing in ANY merge operand. A code point OUTSIDE
       * this set can never be part of a merged token (a token containing it
       * never equals any operand), so the token stream FACTORIZES at every
@@ -404,53 +402,6 @@ object Bpe {
     out
   }
 
-  // ---- reference implementation (retained verbatim for the r17
-  // differential spec: the interned path above must be output-identical) --
-
-  /** One seed token per Unicode CODE POINT. */
-  private def seedTokens(text: String): Array[String] = {
-    val out = new ArrayBuffer[String](text.length)
-    var i = 0
-    while (i < text.length) {
-      val cp = text.codePointAt(i)
-      val n = Character.charCount(cp)
-      out += text.substring(i, i + n)
-      i += n
-    }
-    out.toArray
-  }
-
-  private[functions] def encodeReference(text: String, table: BpeTable): Array[String] =
-    encodeTokens(seedTokens(text), table)
-
-  /** The merge loop over an arbitrary seed-token array — shared by the
-    * code-point and byte seedings (reference path). */
-  private def encodeTokens(seed: Array[String], table: BpeTable): Array[String] = {
-    var toks: Array[String] = seed
-    val rank = table.rank
-    while (toks.length > 1) {
-      var best = Int.MaxValue
-      var i = 0
-      while (i < toks.length - 1) {
-        val r = rank.getOrElse((toks(i), toks(i + 1)), Int.MaxValue)
-        if (r < best) best = r
-        i += 1
-      }
-      if (best == Int.MaxValue) return toks
-      val (l, r) = table.merges(best)
-      val merged = l + r
-      val out = new ArrayBuffer[String](toks.length)
-      var j = 0
-      while (j < toks.length) {
-        if (j < toks.length - 1 && toks(j) == l && toks(j + 1) == r) {
-          out += merged; j += 2
-        } else { out += toks(j); j += 1 }
-      }
-      toks = out.toArray
-    }
-    toks
-  }
-
   /** Segment-factorized BPE — IDENTICAL output to [[encode]] (the
     * factorization property, pinned in BpeSpec), but the merge loop's rank
     * scan is confined to maximal operand-char runs, so worst-case cost per
@@ -463,46 +414,12 @@ object Bpe {
     idsToStrings(ids, n, table.intern, extra)
   }
 
-  /** Reference twin of [[encodeSegmented]] (pre-r17 loop, verbatim). */
-  private[functions] def encodeSegmentedReference(text: String,
-      table: BpeTable): Array[String] = {
-    val ops = table.operandCodePoints
-    val out = new ArrayBuffer[String](text.length / 2 + 1)
-    var i = 0
-    while (i < text.length) {
-      val cp = text.codePointAt(i)
-      if (!ops.contains(cp)) {
-        val n = Character.charCount(cp)
-        out += text.substring(i, i + n) // breaker: singleton token in place
-        i += n
-      } else {
-        var j = i
-        while (j < text.length && ops.contains(text.codePointAt(j)))
-          j += Character.charCount(text.codePointAt(j))
-        out ++= encodeReference(text.substring(i, j), table)
-        i = j
-      }
-    }
-    out.toArray
-  }
-
   /** Lowercase hex of a string's UTF-8 bytes. */
   private[graft] def toHex(s: String): String = {
     val bytes = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val sb = new java.lang.StringBuilder(bytes.length * 2)
     bytes.foreach(b => sb.append(f"${b & 0xff}%02x"))
     sb.toString
-  }
-
-  /** One seed token per UTF-8 BYTE (2 lowercase hex chars each) — the
-    * GPT-2/LLaMA seeding: every byte is in the base vocabulary, so there
-    * is no unknown token, only unmerged bytes (byte fallback). */
-  private def seedByteTokens(text: String): Array[String] = {
-    val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val out = new Array[String](bytes.length)
-    var i = 0
-    while (i < bytes.length) { out(i) = f"${bytes(i) & 0xff}%02x"; i += 1 }
-    out
   }
 
   /** BYTE-level BPE (VERDICT r15 #4 — the GPT-2/LLaMA shape): seed from
@@ -516,11 +433,6 @@ object Bpe {
     idsToStrings(ids, n, table.hexed.intern, extra)
   }
 
-  /** Reference twin of [[encodeBytes]] (pre-r17 loop, verbatim). */
-  private[functions] def encodeBytesReference(text: String,
-      table: BpeTable): Array[String] =
-    encodeTokens(seedByteTokens(text), table.hexed)
-
   /** Segment-factorized [[encodeBytes]] — IDENTICAL output (pinned in
     * BpeSpec), run-bounded cost. Segmentation is by the CHAR table's
     * operand code points, which is exactly byte-level factorization when
@@ -532,29 +444,6 @@ object Bpe {
     val extra = new ArrayBuffer[String]()
     val (ids, n) = encodeIdsBytes(text, table, segmented = true, extra)
     idsToStrings(ids, n, table.hexed.intern, extra)
-  }
-
-  /** Reference twin of [[encodeBytesSegmented]] (pre-r17 loop, verbatim). */
-  private[functions] def encodeBytesSegmentedReference(text: String,
-      table: BpeTable): Array[String] = {
-    val ops = table.operandCodePoints
-    val out = new ArrayBuffer[String](text.length / 2 + 1)
-    var i = 0
-    while (i < text.length) {
-      val cp = text.codePointAt(i)
-      if (!ops.contains(cp)) {
-        val n = Character.charCount(cp)
-        out ++= seedByteTokens(text.substring(i, i + n)) // byte fallback
-        i += n
-      } else {
-        var j = i
-        while (j < text.length && ops.contains(text.codePointAt(j)))
-          j += Character.charCount(text.codePointAt(j))
-        out ++= encodeTokens(seedByteTokens(text.substring(i, j)), table.hexed)
-        i = j
-      }
-    }
-    out.toArray
   }
 
   /** Executor entry for codegen. Renders ids straight to the CACHED

@@ -84,7 +84,7 @@ private[graft] object ExtShared {
     * range exchange SAMPLES its child RDD for partition bounds and then
     * shuffles it — executing the entire pre-sort segment (scan, codegen'd
     * projections, codecs) TWICE. Measured on the byte-BPE projection at
-    * sf0.1 (graft.SortProbe): plain orderBy 0.63 s vs 0.34 s with a hash
+    * sf0.1 (OPTIMIZATION_r17.md): plain orderBy 0.63 s vs 0.34 s with a hash
     * exchange interposed — the exchange materializes the segment as an AQE
     * query stage, so the range sampling reads shuffle output instead of
     * recomputing the segment. Cost: one extra exchange of the FINAL rows;

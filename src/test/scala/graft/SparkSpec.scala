@@ -14,16 +14,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // session invariant (see ext/BucketedLayout.scala): bucketed scans
-    // report their sortBy order -> zero-sort SMJ on one-file buckets
-    .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
-    .getOrCreate()
+  // 4 cores, not GraftSession.envCores: specs pin partition and
+  // state-store counts, so the session must not follow the box's size
+  lazy val session: SparkSession = GraftSession.local(4,
+    "spark.sql.warehouse.dir" -> "/tmp/graft-test-warehouse")
 }

@@ -430,15 +430,41 @@ class DedupSpec extends SparkSpec {
       val fast = Dedup.shingleFramePos(docs, "text", "doc_id", n)
         .collect().map(r => (r.getLong(0), r.getLong(1),
           if (r.isNullAt(2)) -1 else r.getInt(2), r.getString(3))).toSeq.sorted
-      val ref = Dedup.shingleFramePosReference(docs, "text", "doc_id", n)
+      val ref = DedupSpec.shingleFramePosReference(docs, "text", "doc_id", n)
         .collect().map(r => (r.getLong(0), r.getLong(1),
           if (r.isNullAt(2)) -1 else r.getInt(2), r.getString(3))).toSeq.sorted
       assert(fast === ref, s"span stream must match the window reference at n=$n")
     }
     // schema parity (names, types, nullability-insensitive compare by type)
     val f = Dedup.shingleFramePos(docs, "text", "doc_id", 3).schema
-    val r = Dedup.shingleFramePosReference(docs, "text", "doc_id", 3).schema
+    val r = DedupSpec.shingleFramePosReference(docs, "text", "doc_id", 3).schema
     assert(f.fields.map(x => (x.name, x.dataType)).toSeq ===
       r.fields.map(x => (x.name, x.dataType)).toSeq)
+  }
+}
+
+object DedupSpec {
+
+  /** Pre-r17 window formulation of [[Dedup.shingleFramePos]], retained
+    * verbatim as the ground truth for the differential above. */
+  def shingleFramePosReference(docs: DataFrame, textCol: String,
+      idCol: String, n: Int): DataFrame = {
+    require(n >= 1)
+    val toks = docs.select(col(idCol).as("id"),
+      posexplode_outer(TextAnalysis.tokens(col(textCol))).as(Seq("pos", "t")))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("id")).orderBy(col("pos"))
+    val wAll = org.apache.spark.sql.expressions.Window.partitionBy(col("id"))
+    val withLeads = (1 until n).foldLeft(toks) { (df, j) =>
+      df.withColumn(s"_l$j", lead(col("t"), j).over(w))
+    }
+    val leadCols = (1 until n).map(j => col(s"_l$j"))
+    val lastLead = if (leadCols.nonEmpty) leadCols.last else col("t")
+    withLeads
+      .withColumn("ntok", count(col("t")).over(wAll))
+      .withColumn("shingle", concat_ws(" ", (col("t") +: leadCols): _*))
+      .filter(lastLead.isNotNull ||
+        (col("ntok") < n && col("pos") <= 0) || col("pos").isNull)
+      .select(col("id"), col("ntok"), col("pos"), col("shingle"))
   }
 }

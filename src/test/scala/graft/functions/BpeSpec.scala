@@ -216,17 +216,17 @@ class BpeSpec extends SparkSpec {
     }
     for (t <- Seq(Bpe.fixtureTable, Bpe.table1k); txt <- texts) {
       assert(Bpe.encode(txt, t).toSeq ===
-        Bpe.encodeReference(txt, t).toSeq, s"encode '$txt'")
+        BpeReference.encodeReference(txt, t).toSeq, s"encode '$txt'")
       assert(Bpe.encodeSegmented(txt, t).toSeq ===
-        Bpe.encodeSegmentedReference(txt, t).toSeq, s"segmented '$txt'")
+        BpeReference.encodeSegmentedReference(txt, t).toSeq, s"segmented '$txt'")
       assert(Bpe.encodeBytes(txt, t).toSeq ===
-        Bpe.encodeBytesReference(txt, t).toSeq, s"bytes '$txt'")
+        BpeReference.encodeBytesReference(txt, t).toSeq, s"bytes '$txt'")
       assert(Bpe.encodeBytesSegmented(txt, t).toSeq ===
-        Bpe.encodeBytesSegmentedReference(txt, t).toSeq, s"bytesSeg '$txt'")
+        BpeReference.encodeBytesSegmentedReference(txt, t).toSeq, s"bytesSeg '$txt'")
     }
     // duplicate-pair tie: toMap keeps the LAST rank — the interned map must too
     val dup = BpeTable(Seq("a" -> "b", "c" -> "d", "a" -> "b"))
     for (txt <- Seq("abcd", "abab", "cdcd"))
-      assert(Bpe.encode(txt, dup).toSeq === Bpe.encodeReference(txt, dup).toSeq)
+      assert(Bpe.encode(txt, dup).toSeq === BpeReference.encodeReference(txt, dup).toSeq)
   }
 }

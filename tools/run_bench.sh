@@ -3,16 +3,4 @@
 # during measurement. Usage: tools/run_bench.sh [queryPrefix]
 # Env passthrough: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_CANONICAL,
 # SPARK_GRAFT_BENCH_REPS.
-cd "$(dirname "$0")/.." || exit 1
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-exec java $ADD_OPENS -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CP" graft.Bench "$@"
+exec "$(dirname "$0")/run_main.sh" graft.Bench "$@"

@@ -1,7 +1,7 @@
 #!/bin/bash
-# Run any graft.* main outside sbt (same JVM flags as tools/run_bench.sh) so
-# the build JVM doesn't pollute the box during measurement/plan dumps.
-# Usage: tools/run_main.sh graft.DumpPlans <args...>
+# Run any graft.* main outside sbt so the build JVM doesn't pollute the box
+# during measurement/plan dumps. Session conf (UTC, UI off, ...) comes from
+# graft.GraftSession. Usage: tools/run_main.sh graft.DumpPlans <args...>
 cd "$(dirname "$0")/.." || exit 1
 MAIN="$1"; shift
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
@@ -13,6 +13,4 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-exec java $ADD_OPENS -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CP" "$MAIN" "$@"
+exec java $ADD_OPENS -Xmx"${SPARK_DRIVER_MEM:-8g}" -cp "$CP" "$MAIN" "$@"
