@@ -4,12 +4,16 @@ import java.io.OutputStream
 import java.net.{HttpURLConnection, URI, URLEncoder}
 import java.nio.charset.StandardCharsets
 
-import scala.collection.mutable
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{classic, Column, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.cast.DynamicCast
 import graft.model.{BlockScoped, ChColumn, ChTable, ChType, CursorRow}
@@ -29,14 +33,26 @@ import graft.pipeline.ChangePipeline
   * reference streams each block's rows into its per-table inserters in one
   * pass:
   *
-  *  1. one plan: the released blocks explode with change-less blocks kept
-  *     (`explode_outer`, `table` null), so every block counts toward the
-  *     cursor; each change row gets its RowBinary bytes from a `CASE` over
-  *     the catalog tables (typed projection, canonical strings, encode);
-  *  2. one action: each task streams its rows into one insert per table it
-  *     meets, opened on that table's first row, finishes them all at the
-  *     end and returns its top `(block_num, cursor, block_id)`; the driver
-  *     writes the highest as the cursor row.
+  *  1. one plan per sink, built on its first batch: for each catalog table,
+  *     one expression over a change row `(block_num, block_id, cursor,
+  *     change)` — fields to map ([[ChangePipeline.fieldsToMap]]), typed
+  *     projection ([[DynamicCast.projection]]), canonical strings,
+  *     [[RowBinary.rowbinary_encode]] — analyzed and bound once
+  *     ([[ColumnBridge.bind]]). The typed schemas behind the DDL and the
+  *     insert column lists come from the same step;
+  *  2. one RDD action per batch, over the rows Spark already planned for
+  *     the batch (`queryExecution.toRdd`): each task ([[InsertTask]]) walks
+  *     each block's changes, encodes each change through its table's
+  *     `UnsafeProjection` (compiled once per JVM: Spark caches generated
+  *     code), streams the bytes into one insert per table it meets, opened
+  *     on that table's first row, finishes them all at the end and returns
+  *     its top `(block_num, cursor, block_id)`; the driver writes the
+  *     highest as the cursor row. Change-less blocks and changes to tables
+  *     outside the catalog count toward the cursor and send no row.
+  *
+  * A batch therefore builds no DataFrame, runs no analyzer or optimizer,
+  * and starts no SQL execution of its own: inside `foreachBatch` its one
+  * job belongs to the micro-batch's execution.
   *
   * Wire shape per insert: `POST /?query=INSERT INTO <t> (<cols…>) FORMAT
   * RowBinary&decompress=1` — body = [[ChNativeCodec]] LZ4 frames of
@@ -60,13 +76,11 @@ import graft.pipeline.ChangePipeline
   * released block sends the DDL before its first insert; the driver marks
   * the schema created after the first non-empty batch.
   *
-  * Scale: routing, casting and encoding run on executors inside one plan
-  * ([[RowBinaryEncode]] is codegen'd); each task streams one POST per table
-  * it meets (one connection per partition per table, like the reference's
-  * per-table async inserters), frames bounded at
-  * [[ChNativeCodec.DefaultBlockBytes]] uncompressed, so each open insert
-  * buffers at most one frame. The driver sends only the cursor row and
-  * collects one summary tuple per task.
+  * Scale: each task streams one POST per table it meets (one connection per
+  * partition per table, like the reference's per-table async inserters),
+  * frames bounded at [[ChNativeCodec.DefaultBlockBytes]] uncompressed, so
+  * each open insert buffers at most one frame. The driver sends only the
+  * cursor row and collects one summary tuple per task.
   */
 class ClickHouseHttpSink(
     catalog: Seq[ChTable],
@@ -84,19 +98,16 @@ class ClickHouseHttpSink(
   val cursorTable = "graft_cursors"
 
   @transient @volatile private var schemaReady = false
-  /** table → its typed frame's schema; fixed by the catalog and `strict`,
-    * so analyzed once. */
-  @transient @volatile private var typedSchemas: Map[String, StructType] = _
+  /** The bound route → cast → encode, for the blocks schema it was built
+    * on. */
+  @transient @volatile private var plan: BoundPlan = _
 
   def writeBatch(blocks: Dataset[BlockScoped], batchId: Long): Unit = {
-    val schemas = frameSchemas(blocks)
-    val inserts = schemas.map { case (t, s) => t -> insertStatement(frameChTable(t, s)) }
-    val ddl = if (schemaReady) Seq.empty else ddlStatements(schemas)
-    val (ep, u, p, c, bb) = (endpoint, user, password, compress, blockBytes)
-    val tops = encodedRows(blocks, schemas)
-      .mapPartitions(writePartition(ep, u, p, c, bb, ddl, inserts))(
-        Encoders.tuple(Encoders.scalaLong, Encoders.STRING, Encoders.STRING))
-      .collect()
+    val p = planFor(blocks)
+    val task = new InsertTask(endpoint, user, password, compress, blockBytes,
+      if (schemaReady) Array.empty else p.ddl, p.blocks, p.tables, p.inserts, p.encoders)
+    val tops = blocks.asInstanceOf[classic.Dataset[BlockScoped]].queryExecution.toRdd
+      .mapPartitions(task).collect()
     if (tops.nonEmpty) {
       schemaReady = true
       val (blockNum, cursor, blockId) = tops.maxBy(_._1)
@@ -104,34 +115,34 @@ class ClickHouseHttpSink(
     }
   }
 
-  private def frameSchemas(blocks: Dataset[BlockScoped]): Map[String, StructType] = {
-    if (typedSchemas == null)
-      typedSchemas = ChangePipeline.process(blocks, catalog, strict)
-        .map { case (t, df) => t -> df.schema }
-    typedSchemas
+  private def planFor(blocks: Dataset[BlockScoped]): BoundPlan = {
+    val schema = blocks.schema
+    if (plan == null || plan.blocks != schema) plan = bindPlan(blocks.sparkSession, schema)
+    plan
   }
 
-  /** One row per change, plus one per change-less block (`table` null):
-    * `(block_num, cursor, block_id, table, rb)`, where `rb` is the row's
-    * RowBinary bytes in its table's insert order — null when the table is
-    * absent from the catalog or the block has no changes. */
-  private def encodedRows(blocks: Dataset[BlockScoped],
-      schemas: Map[String, StructType]): DataFrame = {
+  /** Resolve each catalog table's route → cast → encode over a change row
+    * of a batch with the `blocks` schema. Refuses a binary column here, on
+    * the driver, before the first batch sends anything. */
+  private def bindPlan(spark: SparkSession, blocks: StructType): BoundPlan = {
+    val clock = blocks("clock").dataType.asInstanceOf[StructType]
+    val changes = blocks("changes").dataType.asInstanceOf[ArrayType]
+    val change = StructType(Seq(clock("number").copy(name = "block_num"),
+      clock("id").copy(name = "block_id"), blocks("cursor"),
+      StructField("change", changes.elementType, changes.containsNull)))
     val meta = Seq(col("block_num"), col("block_id"), col("cursor"))
-    val changes = blocks.toDF()
-      .select(col("clock.number").as("block_num"), col("clock.id").as("block_id"),
-        col("cursor"), explode_outer(col("changes")).as("change"))
-      .select(meta ++ Seq(col("change.table").as("table"),
-        ChangePipeline.fieldsToMap(col("change.fields"), col("change.compositePk"))
-          .as("fields_map")): _*)
-    val branches = catalog.map { t =>
-      (col("table") === t.name, encodeRow(t.name, schemas(t.name),
-        meta ++ DynamicCast.projection(col("fields_map"), t, strict)))
+    val fieldsMap = ChangePipeline.fieldsToMap(col("change.fields"), col("change.compositePk"))
+    val bound = catalog.map { t =>
+      val typed = meta ++ DynamicCast.projection(fieldsMap, t, strict)
+      val schema = StructType(ColumnBridge.bind(spark, change, typed).map(_._1))
+      val Seq((_, encoder)) =
+        ColumnBridge.bind(spark, change, Seq(encodeRow(t.name, schema, typed)))
+      (t.name, schema, encoder)
     }
-    val rb = branches.headOption.fold(lit(null).cast(BinaryType)) { case (c0, v0) =>
-      branches.tail.foldLeft(when(c0, v0)) { case (acc, (c, v)) => acc.when(c, v) }
-    }
-    changes.select(col("block_num"), col("cursor"), col("block_id"), col("table"), rb.as("rb"))
+    val schemas = bound.map { case (t, s, _) => t -> s }.toMap
+    new BoundPlan(blocks, ddlStatements(schemas).toArray, bound.map(_._1).toArray,
+      bound.map { case (t, s, _) => insertStatement(frameChTable(t, s)) }.toArray,
+      bound.map(_._3).toArray)
   }
 
   private lazy val declaredTypes: Map[String, Map[String, ChType]] =
@@ -147,30 +158,19 @@ class ClickHouseHttpSink(
   }
 
   /** `table`'s typed columns (`schema` holds their names and types, in the
-    * same order) → one BINARY RowBinary row, in [[insertStatement]]'s column
-    * order, all inside whole-stage codegen: each value goes to its canonical
-    * string first, timestamps as epoch seconds (the encoder's DateTime
-    * contract). */
-  private[sink] def encodeRow(table: String, schema: StructType, typed: Seq[Column]): Column = {
+    * same order) → one BINARY RowBinary row in [[insertStatement]]'s column
+    * order: each value goes to its canonical string first, timestamps as
+    * epoch seconds (the encoder's DateTime contract). Binary values (the
+    * typed projection of a FixedString column) are refused: they would
+    * travel as hex text, which a FixedString target truncates. */
+  private def encodeRow(table: String, schema: StructType, typed: Seq[Column]): Column = {
     val ct = frameChTable(table, schema)
-    val byName = ct.columns.map(c => c.name -> c.chType).toMap
-    val entries = schema.fields.toSeq.zip(typed).flatMap { case (f, v) =>
+    val entries = schema.fields.toSeq.zip(ct.columns).zip(typed).flatMap { case ((f, c), v) =>
       val s = f.dataType match {
         case TimestampType => unix_timestamp(v).cast("string")
-        case BinaryType =>
-          // lossless transport (advice r14): cast("string") reinterprets
-          // bytes as UTF-8 and substitutes U+FFFD for invalid sequences.
-          // Binary travels as hex text in a ClickHouse String (`unhex()`
-          // recovers the bytes server-side); a Nullable(String) target is
-          // equally valid (writeValue handles the null marker and hex(null)
-          // stays null — advice r15). A non-String declared target (e.g.
-          // FixedString(20)) would truncate the hex — reject loudly.
-          byName(f.name) match {
-            case ChString | ChNullable(ChString) => hex(v)
-            case other => throw new IllegalArgumentException(
-              s"binary column '${f.name}' of $table maps to $other; binary " +
-                "travels as hex text and requires a String target")
-          }
+        case BinaryType => throw new IllegalArgumentException(
+          s"binary column '${f.name}' of $table maps to ${c.chType}; binary " +
+            "travels as hex text and requires a String target")
         case _ => v.cast("string")
       }
       Seq(lit(f.name), s)
@@ -242,34 +242,10 @@ object ClickHouseHttpSink {
     case _ => ChString
   }
 
-  /** The task body of [[ClickHouseHttpSink.writeBatch]]: stream each row's
-    * bytes into its table's insert, opened on that table's first row, then
-    * finish every insert (each must answer 2xx). Any failure aborts every
-    * insert still open, so no row of an unfinished insert lands. A partition
-    * with rows sends `ddl` before its first insert; it returns its top
-    * `(block_num, cursor, block_id)`, an empty partition nothing. */
-  private def writePartition(endpoint: String, user: String, password: String,
-      compress: Boolean, blockBytes: Int, ddl: Seq[String], inserts: Map[String, String])(
-      rows: Iterator[Row]): Iterator[(Long, String, String)] = {
-    if (!rows.hasNext) return Iterator.empty
-    ddl.foreach(post(endpoint, _, Array.emptyByteArray, user, password, compress = false))
-    val streams = mutable.Map.empty[String, InsertStream]
-    var top = (Long.MinValue, "", "")
-    var done = false
-    try {
-      rows.foreach { r =>
-        if (r.getLong(0) > top._1) top = (r.getLong(0), r.getString(1), r.getString(2))
-        if (!r.isNullAt(4)) {
-          val table = r.getString(3)
-          streams.getOrElseUpdate(table, InsertStream.open(endpoint, inserts(table),
-            user, password, compress, blockBytes)).out.write(r.getAs[Array[Byte]](4))
-        }
-      }
-      streams.valuesIterator.foreach(_.finish())
-      done = true
-    } finally if (!done) streams.valuesIterator.foreach(_.abort())
-    Iterator(top)
-  }
+  /** The bound plan for one blocks schema: the DDL, and per catalog table
+    * its name, insert statement and encoder over a change row. */
+  private[sink] final class BoundPlan(val blocks: StructType, val ddl: Array[String],
+      val tables: Array[String], val inserts: Array[String], val encoders: Array[Expression])
 
   /** One streamed POST: the statement travels in the `query` URL param — the
     * reference client's shape — with `decompress=1` marking a
@@ -391,4 +367,79 @@ object ClickHouseHttpSink {
       throw new java.io.IOException(s"ClickHouse HTTP $code for '${sql.take(80)}': $err")
     }
   }
+}
+
+/** The task body of [[ClickHouseHttpSink.writeBatch]], a named class so
+  * that Spark's closure cleaner has no lambda to inspect. Over one
+  * partition of released blocks (rows of the `blocks` schema): walk each
+  * block's changes, encode each change of a catalog table through that
+  * table's encoder, and stream the bytes into the table's insert, opened on
+  * its first row; then finish every insert (each must answer 2xx). Any
+  * failure aborts every insert still open, so no row of an unfinished
+  * insert lands. A partition with blocks sends `ddl` before its first
+  * insert and returns its top `(block_num, cursor, block_id)`; an empty
+  * partition sends and returns nothing. */
+private[sink] final class InsertTask(endpoint: String, user: String, password: String,
+    compress: Boolean, blockBytes: Int, ddl: Array[String], blocks: StructType,
+    tables: Array[String], inserts: Array[String], encoders: Array[Expression])
+    extends (Iterator[InternalRow] => Iterator[(Long, String, String)]) with Serializable {
+  import ClickHouseHttpSink._
+
+  def apply(rows: Iterator[InternalRow]): Iterator[(Long, String, String)] = {
+    if (!rows.hasNext) return Iterator.empty
+    ddl.foreach(post(endpoint, _, Array.emptyByteArray, user, password, compress = false))
+    val clock = blocks("clock").dataType.asInstanceOf[StructType]
+    val (clockAt, cursorAt, changesAt) =
+      (blocks.fieldIndex("clock"), blocks.fieldIndex("cursor"), blocks.fieldIndex("changes"))
+    val (numberAt, idAt) = (clock.fieldIndex("number"), clock.fieldIndex("id"))
+    val change = blocks("changes").dataType.asInstanceOf[ArrayType]
+      .elementType.asInstanceOf[StructType]
+    val tableAt = change.fieldIndex("table")
+    val tableOf = new java.util.HashMap[UTF8String, Integer]()
+    tables.indices.foreach(i => tableOf.putIfAbsent(UTF8String.fromString(tables(i)), i))
+    val encode = new Array[UnsafeProjection](tables.length)
+    val streams = new Array[InsertStream](tables.length)
+    // (block_num, block_id, cursor, change): the row every encoder binds to
+    val in = new GenericInternalRow(4)
+    var top = Long.MinValue
+    var topCursor, topId = ""
+    var done = false
+    try {
+      rows.foreach { b =>
+        val c = b.getStruct(clockAt, clock.length)
+        val (blockNum, blockId, cursor) =
+          (c.getLong(numberAt), c.getUTF8String(idAt), b.getUTF8String(cursorAt))
+        if (blockNum > top) {
+          top = blockNum; topCursor = str(cursor); topId = str(blockId)
+        }
+        val changes = if (b.isNullAt(changesAt)) null else b.getArray(changesAt)
+        var i = 0
+        while (changes != null && i < changes.numElements()) {
+          val ch = if (changes.isNullAt(i)) null else changes.getStruct(i, change.length)
+          val t: Integer =
+            if (ch == null || ch.isNullAt(tableAt)) null else tableOf.get(ch.getUTF8String(tableAt))
+          if (t != null) {
+            if (encode(t) == null) {
+              encode(t) = UnsafeProjection.create(encoders(t))
+              encode(t).initialize(TaskContext.getPartitionId())
+            }
+            in.update(0, blockNum); in.update(1, blockId); in.update(2, cursor); in.update(3, ch)
+            val r = encode(t)(in)
+            if (!r.isNullAt(0)) {
+              if (streams(t) == null)
+                streams(t) =
+                  InsertStream.open(endpoint, inserts(t), user, password, compress, blockBytes)
+              streams(t).out.write(r.getBinary(0))
+            }
+          }
+          i += 1
+        }
+      }
+      streams.foreach(s => if (s != null) s.finish())
+      done = true
+    } finally if (!done) streams.foreach(s => if (s != null) s.abort())
+    Iterator((top, topCursor, topId))
+  }
+
+  private def str(s: UTF8String): String = if (s == null) null else s.toString
 }

@@ -208,8 +208,9 @@ class ClickHouseHttpSinkSpec extends SparkSpec {
       // an undeclared table: every column maps from its Spark type, so the
       // payload targets a String
       val sink = new ClickHouseHttpSink(Seq.empty, server.url, "chainBin")
+      val reference = new ClickHouseSinkReference(Seq.empty, server.url, "chainBin")
       val df = Seq((7, payload)).toDF("id", "payload")
-      val rb = df.select(sink.encodeRow("bin", df.schema, df.columns.toSeq.map(col)))
+      val rb = df.select(reference.encodeRow("bin", df.schema, df.columns.toSeq.map(col)))
         .head().getAs[Array[Byte]](0)
       ClickHouseHttpSink.post(server.url,
         sink.insertStatement(sink.frameChTable("bin", df.schema)), rb,

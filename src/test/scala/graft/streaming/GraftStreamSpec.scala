@@ -10,13 +10,16 @@ import scala.jdk.CollectionConverters._
 
 import jdk.jfr.consumer.{RecordedEvent, RecordingStream}
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graftbridge.SessionBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 
 import graft.SparkSpec
 import graft.model._
-import graft.sink.MultiTableSink
+import graft.sink.{ClickHouseHttpServer, MultiTableSink}
+import graft.sink.ClickHouseSinkIdentitySpec.RecordingProxy
 
 class GraftStreamSpec extends SparkSpec {
   import graft.model.ChType._
@@ -299,6 +302,69 @@ class GraftStreamSpec extends SparkSpec {
     val (restartLoaders, restartCompiles) = run(chain(60), root.resolve("a").toString)
     assert(restartLoaders === firstLoaders)
     assert(restartCompiles <= 1L, s"$restartCompiles classes compiled in the restart's first batch")
+  }
+
+  test("ClickHouse stream: one SQL execution per micro-batch; steady batches compile no sink class") {
+    implicit val enc = org.apache.spark.sql.Encoders.product[BlockMsg]
+    def chain: Dataset[BlockMsg] = spark.readStream.format("graft.sources.ChainSource")
+      .option("blocksPerTrigger", 10).option("totalBlocks", 50)
+      .option("finalityLag", 2).option("numPartitions", 1)
+      .load().as[BlockMsg]
+    val chainCatalog = Seq(ChTable("blocks", Seq(ChColumn("height", ChUInt64), ChColumn("fork", ChUInt32))))
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def perBatch(marks: Seq[Long]): Seq[Long] = marks.sliding(2).map { case Seq(a, b) => b - a }.toSeq
+    val executions = new ConcurrentLinkedQueue[(Option[String], Long)]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => executions.add((s.jobGroupId, s.executionId))
+        case _ => ()
+      }
+    }
+    val root = Files.createTempDirectory("graftsteady")
+    val server = new ClickHouseHttpServer()
+    // classes compiled so far, taken as each batch sends its cursor row: the
+    // batch's planning and its one job are done, the next batch not begun
+    val atCursor = new ConcurrentLinkedQueue[Long]()
+    val proxy = new RecordingProxy(server.url,
+      sql => if (sql.startsWith("INSERT INTO `graft_cursors`")) atCursor.add(compiles))
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val before = compiles
+      val q = GraftStream.startClickHouse(chain, chainCatalog, proxy.url,
+        root.resolve("ch").toString, "steady")
+      q.processAllAvailable(); q.stop()
+      // a job posted after the query: once the listener has seen its
+      // execution, it has seen all of the query's (one queue, in order)
+      sc.setJobGroup("marker", "marker")
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 10000
+      while (!executions.asScala.exists(_._1.contains("marker")) &&
+        System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(executions.asScala.exists(_._1.contains("marker")))
+
+      val batches = q.recentProgress.count(_.numInputRows > 0)
+      assert(batches === 5)
+      assert(server.rowCount("blocks") > 40)
+      val ofQuery = executions.asScala.toSeq.filter(_._1.contains(q.runId.toString))
+      assert(ofQuery.size === batches, s"SQL executions: $ofQuery")
+
+      // the same stream with no sink: each batch only runs its rows
+      val bareMarks = new ConcurrentLinkedQueue[Long]()
+      val bareBefore = compiles
+      val bare = GraftStream.startWith(chain, root.resolve("bare").toString) { (blocks, _) =>
+        blocks.toDF().queryExecution.toRdd.count()
+        bareMarks.add(compiles)
+      }
+      bare.processAllAvailable(); bare.stop()
+      val sink = perBatch(before +: atCursor.asScala.toSeq)
+      val plain = perBatch(bareBefore +: bareMarks.asScala.toSeq)
+      assert(sink.size === batches && plain.size === batches)
+      // the finality operator generates its state deserializer anew for
+      // every batch that reads state; the sink adds no class of its own
+      assert(sink.tail === plain.tail, s"classes compiled per batch: $sink, without the sink $plain")
+      assert(sink.tail.forall(_ <= 1L), s"classes compiled per batch: $sink")
+    } finally { sc.removeSparkListener(listener); proxy.close(); server.close() }
   }
 
   test("a caller session with session-scoped artifacts keeps artifact isolation") {

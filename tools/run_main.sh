@@ -4,7 +4,9 @@
 # graft.GraftSession. Usage: tools/run_main.sh graft.DumpPlans <args...>
 cd "$(dirname "$0")/.." || exit 1
 MAIN="$1"; shift
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
+# src/main/resources too, so a tree built with a bare `sbt compile` (which
+# does not copy resources into classes/) still finds e.g. the BPE merges
+CP="target/scala-2.13/classes:src/main/resources:/opt/spark/jars/*"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
