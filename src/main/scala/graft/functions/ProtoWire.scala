@@ -78,9 +78,9 @@ object ProtoWire {
       ColumnBridge.expression(fields)))
 
   // ---- wire primitives -----------------------------------------------------
-  // private[graft]: the loopback transport (sources/EnvelopeWire.scala)
-  // reuses these to speak the reference's Response/Request envelopes over
-  // a socket — one wire-format implementation for payloads AND framing.
+  // private[graft]: the gRPC envelope codec (sources/EnvelopeWire.scala)
+  // and the `.spkg` reader (sources/Spkg.scala) read with these — one
+  // protobuf reader for payloads, envelopes and packages.
 
   private[graft] final class Reader(val buf: Array[Byte], var pos: Int, val end: Int) {
     def hasMore: Boolean = pos < end

@@ -153,7 +153,7 @@ class ClickHouseHttpSink(
   private[sink] def frameChTable(table: String, schema: StructType): ChTable = {
     val declared = declaredTypes.getOrElse(table, Map.empty)
     ChTable(table, schema.fields.toSeq.map { f =>
-      ChColumn(f.name, declared.getOrElse(f.name, chTypeOf(f.dataType)))
+      ChColumn(f.name, declared.getOrElse(f.name, ClickHouseDialect.chTypeOf(f.dataType)))
     })
   }
 
@@ -225,22 +225,6 @@ class ClickHouseHttpSink(
 }
 
 object ClickHouseHttpSink {
-
-  /** Spark type → ChType for columns without a catalog declaration (the
-    * meta columns and permissive-mode frames). */
-  def chTypeOf(dt: DataType): ChType = dt match {
-    case LongType => ChInt64
-    case IntegerType => ChInt32
-    case ShortType => ChInt16
-    case ByteType => ChInt8
-    case DoubleType => ChFloat64
-    case FloatType => ChFloat32
-    case BooleanType => ChBool
-    case TimestampType => ChDateTime
-    case DateType => ChDate
-    case d: DecimalType => ChDecimal(d.precision, d.scale)
-    case _ => ChString
-  }
 
   /** The bound plan for one blocks schema: the DDL, and per catalog table
     * its name, insert statement and encoder over a change row. */

@@ -191,13 +191,6 @@ class JdbcMultiTableSink(
 
 object JdbcMultiTableSink {
 
-  /** Quote an identifier — `cursor` is a reserved word in most dialects.
-    * (Kept for callers; instance methods quote through their dialect.) */
-  def q(ident: String): String = DerbyDialect.quote(ident)
-
-  /** Spark type → portable DDL type (Derby-compatible subset). */
-  def ddlType(dt: DataType): String = DerbyDialect.columnType(None, dt)
-
   def sqlTypeCode(dt: DataType): Int = dt match {
     case LongType => Types.BIGINT
     case IntegerType => Types.INTEGER

@@ -149,8 +149,10 @@ object RowBinary {
       }
   }
 
-  /** One value in RowBinary. `v == null` is only legal under Nullable. */
+  /** One value in RowBinary. `v == null` is only legal under Nullable,
+    * which LowCardinality may wrap: `LowCardinality(Nullable(T))`. */
   def writeValue(out: Buf, t: ChType, v: String): Unit = t match {
+    case ChLowCardinality(inner) => writeValue(out, inner, v)
     case ChNullable(inner) =>
       if (v == null) out.byte(1)
       else { out.byte(0); writeValue(out, inner, v) }
@@ -209,7 +211,6 @@ object RowBinary {
         }
       val width = if (p <= 9) 4 else if (p <= 18) 8 else if (p <= 38) 16 else 32
       writeWideLE(out, unscaled, width)
-    case ChLowCardinality(inner) => writeValue(out, inner, v)
   }
 
   /** One table row: `table`'s columns in sorted-name order (the reference's

@@ -147,10 +147,7 @@ final case class ClickHouseDialect(
   def quote(ident: String): String = "`" + ident + "`"
 
   def columnType(chType: Option[ChType], sparkType: DataType): String =
-    chType match {
-      case Some(t) => ClickHouseDialect.chName(t)
-      case None => ClickHouseDialect.fromSpark(sparkType)
-    }
+    ClickHouseDialect.chName(chType.getOrElse(ClickHouseDialect.chTypeOf(sparkType)))
 
   def createTableSql(table: String, cols: Seq[(String, String)], pk: Seq[String]): String = {
     val order = if (pk.isEmpty) "tuple()" else pk.map(quote).mkString("(", ", ", ")")
@@ -239,18 +236,19 @@ object ClickHouseDialect {
     case ChLowCardinality(inner) => s"LowCardinality(${chName(inner)})"
   }
 
-  /** Fallback for frames with no catalog entry (Spark type → CH type). */
-  def fromSpark(dt: DataType): String = dt match {
-    case LongType => "Int64"
-    case IntegerType => "Int32"
-    case ShortType => "Int16"
-    case ByteType => "Int8"
-    case DoubleType => "Float64"
-    case FloatType => "Float32"
-    case BooleanType => "Bool"
-    case d: DecimalType => s"Decimal(${d.precision}, ${d.scale})"
-    case TimestampType => "DateTime"
-    case DateType => "Date"
-    case _ => "String"
+  /** Spark type → ChType for columns without a catalog declaration (the
+    * sink's meta columns, permissive-mode frames and undeclared DDL). */
+  def chTypeOf(dt: DataType): ChType = dt match {
+    case LongType => ChInt64
+    case IntegerType => ChInt32
+    case ShortType => ChInt16
+    case ByteType => ChInt8
+    case DoubleType => ChFloat64
+    case FloatType => ChFloat32
+    case BooleanType => ChBool
+    case TimestampType => ChDateTime
+    case DateType => ChDate
+    case d: DecimalType => ChDecimal(d.precision, d.scale)
+    case _ => ChString
   }
 }

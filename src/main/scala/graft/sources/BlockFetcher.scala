@@ -47,7 +47,7 @@ trait BlockFetcher extends AutoCloseable {
     * first fetch. Streaming transports use it as the Request's
     * `stop_block_num` so ONE server-streamed call covers exactly the
     * partition (the reference's one-request-many-responses shape,
-    * `src/substreams_stream.rs:53-149`); point transports ignore it. */
+    * `src/substreams_stream.rs:53-149`); the synthetic generator ignores it. */
   def hintRange(start: Long, end: Long): Unit = ()
   override def close(): Unit = ()
 }

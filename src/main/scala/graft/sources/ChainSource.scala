@@ -175,7 +175,7 @@ object ChainSource {
 
   /** The semantic content of one envelope — the fields a real server ships
     * over the wire, separated from their InternalRow encoding so a transport
-    * (e.g. [[LoopbackBlockFetcher]]) can serialize/parse them and both the
+    * (e.g. [[GrpcBlockFetcher]]) can serialize/parse them and both the
     * synthetic and networked paths share [[toInternalRow]] bit-for-bit.
     *
     * `cursor` (data) / `lastValidCursor` (undo) are SERVER-MINTED OPAQUE
@@ -189,7 +189,7 @@ object ChainSource {
   /** Deterministic envelope at sequence `seq`: chain state is a pure function
     * of the sequence number, so any reader (or retry) regenerates the exact
     * same envelope — the property that makes offset-resume exactly-once.
-    * This is the SERVER role (the loopback/gRPC fixtures and the in-process
+    * This is the SERVER role (the gRPC fixture server and the in-process
     * generator all serve from it), so it also mints the opaque cursor:
     * for data, the message's own position; for undo, the undo message's
     * position — resuming after it continues with the replacement fork,

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.io.{DataInputStream, DataOutputStream, IOException}
 import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable.ArrayBuffer
@@ -10,8 +9,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.ProtoWire
 
-/** The reference's RPC envelope messages as a wire-format codec — what
-  * actually travels over the loopback socket (VERDICT r11 #2). Message
+/** The reference's RPC envelope messages as a wire-format codec — the
+  * message bytes the gRPC transport ([[GrpcChain]]) carries. Message
   * shapes and tags are the public substreams protocol, copied from the
   * reference's generated prost structs:
   *
@@ -35,17 +34,13 @@ import graft.functions.ProtoWire
   *
   * The `Any.value` inside `MapModuleOutput` is a real
   * `DatabaseChanges` payload encoded/decoded by [[ProtoWire]] — the same
-  * codec the sink path uses (O8) — so the loopback client exercises the
+  * codec the sink path uses (O8) — so the gRPC client exercises the
   * full nested decode the reference performs (`src/loader.rs:127-130`).
   *
-  * Framing is gRPC's length-prefixed message framing (1 flag byte +
-  * 4-byte big-endian length + payload); a flag of [[TrailerFlag]] carries
-  * a UTF-8 status string instead of a message, mirroring gRPC's
-  * trailers-only error responses (how a real server ships
-  * `UNAUTHENTICATED`). Truncated reads are IOException (transport —
-  * retryable via [[Backoff]]); a frame that reads fully but fails protobuf
-  * decode is [[MalformedFrameException]] (fatal — a desynced or hostile
-  * peer; retrying would storm).
+  * gRPC's length-prefixed framing lives in [[GrpcChain.FrameAccumulator]];
+  * [[MaxFrameBytes]] bounds it. A message that fails protobuf decode is
+  * [[MalformedFrameException]] (fatal — a desynced or hostile peer;
+  * retrying would storm).
   */
 object EnvelopeWire {
 
@@ -116,10 +111,6 @@ object EnvelopeWire {
     java.lang.Long.rotateRight(v, 23) ^ CursorMask
   }
 
-  /** Ordinary protobuf message frame (gRPC's uncompressed-data flag). */
-  val MsgFlag: Int = 0x00
-  /** Status/trailer frame: payload = UTF-8 status string. */
-  val TrailerFlag: Int = 0x80
   /** Frame size sanity bound (gRPC's default max inbound message size). */
   val MaxFrameBytes: Int = 4 << 20
 
@@ -131,52 +122,12 @@ object EnvelopeWire {
   final class MalformedFrameException(msg: String, cause: Throwable = null)
     extends RuntimeException(msg, cause)
 
-  // ---- framing -------------------------------------------------------------
-
-  def writeFrame(out: DataOutputStream, flag: Int, payload: Array[Byte]): Unit = {
-    out.writeByte(flag)
-    out.writeInt(payload.length)
-    out.write(payload)
-    out.flush()
-  }
-
-  def writeTrailer(out: DataOutputStream, status: String): Unit =
-    writeFrame(out, TrailerFlag, status.getBytes(StandardCharsets.UTF_8))
-
-  /** Blocking read of one frame. EOF / truncation surface as IOException
-    * (java.io.EOFException is one) so the Backoff reconnect path engages;
-    * an impossible length or unknown flag is malformed → fatal. */
-  def readFrame(in: DataInputStream): (Int, Array[Byte]) = {
-    val flag = in.readUnsignedByte()
-    if (flag != MsgFlag && flag != TrailerFlag)
-      throw new MalformedFrameException(f"unknown frame flag 0x$flag%02x")
-    val len = in.readInt()
-    if (len < 0 || len > MaxFrameBytes)
-      throw new MalformedFrameException(s"frame length $len out of bounds")
-    val buf = new Array[Byte](len)
-    in.readFully(buf)
-    (flag, buf)
-  }
-
   // ---- Request -------------------------------------------------------------
-
-  /** One-message request: `[seq, seq+1)` — the loopback's per-fetch unit.
-    * The reference sends ONE Request for the whole range and reads a
-    * stream; the per-seq request is what makes offset-resume exact here. */
-  def encodeRequest(seq: Long, outputModule: String): Array[Byte] = {
-    val out = ArrayBuffer.empty[Byte]
-    if (seq != 0L) { ProtoWire.writeVarint(out, (1L << 3) | 0); ProtoWire.writeVarint(out, seq) }
-    ProtoWire.writeVarint(out, (3L << 3) | 0); ProtoWire.writeVarint(out, seq + 1)
-    if (outputModule.nonEmpty)
-      ProtoWire.writeLenDelim(out, 6, outputModule.getBytes(StandardCharsets.UTF_8))
-    out.toArray
-  }
 
   /** The reference's actual request shape: ONE Request opens a
     * server-streamed range (`src/substreams_stream.rs:53-149` sends
     * start_block/stop_block and, on resume, the latest cursor — cursor
-    * wins over start_block, `src/main.rs:63-66`). Used by the gRPC
-    * transport; the line-oriented loopback keeps its per-seq form. */
+    * wins over start_block, `src/main.rs:63-66`). */
   def encodeRequestRange(start: Long, stop: Long, cursor: String,
       outputModule: String): Array[Byte] = {
     val out = ArrayBuffer.empty[Byte]
@@ -227,26 +178,6 @@ object EnvelopeWire {
       case ProtoWire.Malformed => throw new MalformedFrameException("bad Request bytes")
       case e: NumberFormatException => throw new MalformedFrameException("bad cursor", e)
     }
-
-  /** → requested seq. Enforces the single-message contract
-    * (stop == start + 1); anything else is malformed. */
-  def decodeRequest(bytes: Array[Byte]): Long =
-    try {
-      val r = new ProtoWire.Reader(bytes, 0, bytes.length)
-      var start = 0L
-      var stop = 0L
-      while (r.hasMore) {
-        val tag = r.varint()
-        ((tag >>> 3).toInt, (tag & 7).toInt) match {
-          case (1, 0) => start = r.varint()
-          case (3, 0) => stop = r.varint()
-          case (_, w) => r.skip(w)
-        }
-      }
-      if (stop != start + 1)
-        throw new MalformedFrameException(s"expected single-seq request, got [$start,$stop)")
-      start
-    } catch { case ProtoWire.Malformed => throw new MalformedFrameException("bad Request bytes") }
 
   // ---- Response ------------------------------------------------------------
 

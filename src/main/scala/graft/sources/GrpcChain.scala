@@ -35,7 +35,7 @@ import org.apache.spark.sql.catalyst.InternalRow
   *    request, a stream of responses), not a per-seq RPC;
   *  - the server streams `Response{session}` first, then one
   *    `Response{block_scoped_data | block_undo_signal}` per position
-  *    ([[EnvelopeWire]] encodes the same message bytes as the loopback),
+  *    ([[EnvelopeWire]] encodes the messages),
   *    and closes with `grpc-status: 0` trailers;
   *  - auth rejection is a trailers-only response with `grpc-status: 16`
   *    (UNAUTHENTICATED) — fatal at the client, no retry storm;
@@ -669,9 +669,8 @@ final class GrpcBlockFetcher(cfg: ChainSource.Config) extends BlockFetcher {
       }
       throw new IllegalStateException("unreachable")
     } catch {
-      // same taxonomy as the loopback: malformed/auth/deterministic-status
-      // fatal, IO retryable, nothing may leave the stream desynced for the
-      // next fetch
+      // malformed/auth/deterministic-status fatal, IO retryable, nothing
+      // may leave the stream desynced for the next fetch
       case e: EnvelopeWire.MalformedFrameException => teardownConn(); throw e
       case e: UnauthenticatedException => teardownConn(); throw e
       case e: GrpcChain.NonRetryableStatusException => teardownConn(); throw e

@@ -2,16 +2,18 @@ package graft.sources
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.functions.ProtoWire
+import graft.functions.ProtoWire.Reader
+
 /** `.spkg` package reader — parity with the reference's `read_package`
   * (`/root/reference/src/main.rs:312-315`): the binary file handed to the
   * client is a protobuf `sf.substreams.v1.Package`; the client decodes it
   * once at startup and ships the module graph in the stream request.
   *
-  * Decoded with the same hand-rolled wire-format approach as
-  * [[graft.functions.ProtoWire]] (no protobuf runtime on this classpath),
-  * covering the operationally relevant subset (field numbers from the public
-  * proto, mirrored by the reference's generated types
-  * `src/pb/sf.substreams.v1.rs:209-229,4-36`):
+  * Decoded with [[graft.functions.ProtoWire]]'s wire-format reader (no
+  * protobuf runtime on this classpath), covering the operationally relevant
+  * subset (field numbers from the public proto, mirrored by the reference's
+  * generated types `src/pb/sf.substreams.v1.rs:209-229,4-36`):
   *
   * {{{
   * message Package  { uint64 version = 5; Modules modules = 6;
@@ -36,7 +38,13 @@ object Spkg {
   def readFile(path: String): PackageInfo =
     decodePackage(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)))
 
-  def decodePackage(bytes: Array[Byte]): PackageInfo = {
+  /** Truncated or malformed bytes raise IllegalArgumentException. */
+  def decodePackage(bytes: Array[Byte]): PackageInfo =
+    try decode(bytes)
+    catch { case ProtoWire.Malformed =>
+      throw new IllegalArgumentException("truncated or malformed spkg") }
+
+  private def decode(bytes: Array[Byte]): PackageInfo = {
     val r = new Reader(bytes, 0, bytes.length)
     var version = 0L
     var network = ""
@@ -105,32 +113,4 @@ object Spkg {
 
   private def str(buf: Array[Byte], from: Int, until: Int): String =
     new String(buf, from, until - from, java.nio.charset.StandardCharsets.UTF_8)
-
-  // minimal reader, same shape as ProtoWire's
-  private final class Reader(val buf: Array[Byte], var pos: Int, val end: Int) {
-    def hasMore: Boolean = pos < end
-    def varint(): Long = {
-      var shift = 0; var res = 0L
-      while (shift < 64) {
-        if (pos >= end) throw new IllegalArgumentException("truncated spkg")
-        val b = buf(pos); pos += 1
-        res |= (b & 0x7fL) << shift
-        if ((b & 0x80) == 0) return res
-        shift += 7
-      }
-      throw new IllegalArgumentException("varint overflow")
-    }
-    def bytes(n: Int): (Int, Int) = {
-      // overflow-safe form: pos + n could wrap negative for hostile lengths
-      if (n < 0 || n > end - pos) throw new IllegalArgumentException("truncated spkg")
-      val r = (pos, pos + n); pos += n; r
-    }
-    def skip(wireType: Int): Unit = wireType match {
-      case 0 => varint()
-      case 1 => bytes(8)
-      case 2 => bytes(varint().toInt)
-      case 5 => bytes(4)
-      case _ => throw new IllegalArgumentException(s"bad wire type $wireType")
-    }
-  }
 }

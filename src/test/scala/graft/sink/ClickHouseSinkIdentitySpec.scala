@@ -32,7 +32,8 @@ class ClickHouseSinkIdentitySpec extends SparkSpec {
       ChColumn("s", ChString), ChColumn("f32", ChFloat32), ChColumn("f64", ChFloat64),
       ChColumn("ok", ChBool), ChColumn("at", ChDateTime), ChColumn("day", ChDate),
       ChColumn("d9", ChDecimal(9, 2)), ChColumn("d18", ChDecimal(18, 4)),
-      ChColumn("d38", ChDecimal(38, 10)), ChColumn("lc", ChLowCardinality(ChString)))),
+      ChColumn("d38", ChDecimal(38, 10)), ChColumn("lc", ChLowCardinality(ChString)),
+      ChColumn("lc_n", ChLowCardinality(ChNullable(ChString))))),
     ChTable("nulls", Seq(
       ChColumn("n_u8", ChNullable(ChUInt8)), ChColumn("n_u64", ChNullable(ChUInt64)),
       ChColumn("n_u256", ChNullable(ChUInt256)), ChColumn("n_i32", ChNullable(ChInt32)),
@@ -61,7 +62,7 @@ class ClickHouseSinkIdentitySpec extends SparkSpec {
   private val misc = change("misc", "s" -> "héllo, \"world\"", "f32" -> "1e-3", "f64" -> "-2.5",
     "ok" -> "1", "at" -> "2023-06-01T12:34:56.789+02:00", "day" -> "2024-02-29",
     "d9" -> "1234567.8", "d18" -> "-12345678901234.5678",
-    "d38" -> "1234567890123456789012345678.0123456789", "lc" -> "")
+    "d38" -> "1234567890123456789012345678.0123456789", "lc" -> "") // lc_n missing
   private val nullsFull = change("nulls", "n_u8" -> "200", "n_u64" -> "18446744073709551615",
     "n_u256" -> "12345678901234567890123456789", "n_i32" -> "-5", "n_i128" -> "99",
     "n_f64" -> "3.25", "n_ok" -> "false", "n_at" -> "1970-01-01T00:00:01Z",
@@ -129,6 +130,9 @@ class ClickHouseSinkIdentitySpec extends SparkSpec {
       assert(bound.last.cursor === Seq(Seq("chainId", "c7", "7", "b7")))
       val nulls = bound.flatMap(_.rows.toMap.getOrElse("nulls", Nil))
       assert(nulls.exists(_.count(_ == null) == 11), "missing values travel as NULL")
+      val miscRows = bound.flatMap(_.rows.toMap.getOrElse("misc", Nil))
+      assert(miscRows.nonEmpty && miscRows.forall(_.count(_ == null) == 1),
+        "a missing LowCardinality(Nullable(String)) value lands as NULL")
     }
 
     test(s"$mode: a row that cannot be encoded fails both paths alike; none of its task's rows lands") {

@@ -82,6 +82,8 @@ class RowBinarySpec extends SparkSpec {
     assert(roundTrip(ChNullable(ChInt32), null) === null)
     assert(roundTrip(ChNullable(ChString), "x") === "x")
     assert(roundTrip(ChLowCardinality(ChString), "dict") === "dict")
+    assert(roundTrip(ChLowCardinality(ChNullable(ChString)), null) === null)
+    assert(roundTrip(ChLowCardinality(ChNullable(ChString)), "x") === "x")
     // FixedString: padding strips on decode (the lossy-by-design lane)
     assert(roundTrip(ChFixedString(5), "ab") === "ab")
     // whole rows in an explicit column order
@@ -165,6 +167,9 @@ class RowBinarySpec extends SparkSpec {
   test("Nullable flag byte; Decimal as scaled int of the precision width") {
     assert(enc(ChNullable(ChInt32), null) === "01")
     assert(enc(ChNullable(ChInt32), "7") === "0007000000")
+    // LowCardinality is plain T on the wire, so it may wrap Nullable
+    assert(enc(ChLowCardinality(ChNullable(ChString)), null) === "01")
+    assert(enc(ChLowCardinality(ChNullable(ChString)), "x") === "000178")
     assert(enc(ChDecimal(9, 2), "123.45") === "39300000") // 12345 = 0x3039, Int32
     assert(enc(ChDecimal(20, 0), "1") === "01" + "00" * 15) // p>18 → Int128
     intercept[IllegalArgumentException] { enc(ChInt32, null) }

@@ -1,11 +1,10 @@
 package graft.sources
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream, EOFException}
-
+import io.netty.buffer.{ByteBuf, Unpooled}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the loopback wire protocol (VERDICT r11 #2) to the PUBLIC protobuf
-  * wire encoding of the reference's RPC messages
+/** Pins the gRPC transport's wire protocol (VERDICT r11 #2) to the PUBLIC
+  * protobuf wire encoding of the reference's RPC messages
   * (`src/pb/sf.substreams.rpc.v2.rs:46-100`): golden bytes hand-derived
   * from the wire spec so encoder and decoder cannot drift together, plus
   * the failure taxonomy — truncation is retryable IO, malformed is fatal.
@@ -84,11 +83,14 @@ class EnvelopeWireSpec extends AnyFunSuite {
     assert(EnvelopeWire.decodeResponse(-1L, EnvelopeWire.encodeSession("t1")) ===
       EnvelopeWire.SessionArm("t1"))
     // Request{start_block_num=5, stop_block_num=6, output_module="m"}
-    assert(EnvelopeWire.encodeRequest(5L, "m").toSeq ===
+    val req = EnvelopeWire.encodeRequestRange(5L, 6L, "", "m")
+    assert(req.toSeq ===
       Array[Int](0x08, 0x05, 0x18, 0x06, 0x32, 0x01, 'm').map(_.toByte).toSeq)
-    assert(EnvelopeWire.decodeRequest(EnvelopeWire.encodeRequest(5L, "m")) === 5L)
-    // seq 0: proto3 omits the default-0 start_block_num
-    assert(EnvelopeWire.decodeRequest(EnvelopeWire.encodeRequest(0L, "")) === 0L)
+    assert(EnvelopeWire.decodeRequestRange(req) === EnvelopeWire.RequestRange(5L, 6L, ""))
+    // start 0: proto3 omits the default-0 start_block_num
+    val fromZero = EnvelopeWire.encodeRequestRange(0L, 1L, "", "")
+    assert(fromZero.toSeq === Array[Int](0x18, 0x01).map(_.toByte).toSeq)
+    assert(EnvelopeWire.decodeRequestRange(fromZero) === EnvelopeWire.RequestRange(0L, 1L, ""))
   }
 
   test("round-trip: every synthetic envelope crosses the wire bit-exactly") {
@@ -101,7 +103,7 @@ class EnvelopeWireSpec extends AnyFunSuite {
         assert(got === e.copy(height = -1L, fork = -1L, finalHeight = -1L, tsMicros = -1L))
       } else assert(got === e)
       // row-level bit-parity follows from the SHARED toInternalRow encoder
-      // and is pinned end-to-end in LoopbackChainSpec's first test
+      // and is pinned end-to-end in GrpcChainSpec's first test
     }
   }
 
@@ -132,33 +134,35 @@ class EnvelopeWireSpec extends AnyFunSuite {
       EnvelopeWire.decodeResponse(1L, Array.emptyByteArray) // no arm at all
     }
     intercept[EnvelopeWire.MalformedFrameException] {
-      EnvelopeWire.decodeRequest(Array[Byte](0x08, 0x05)) // stop != start+1
+      EnvelopeWire.decodeRequestRange(Array[Byte](0x08, 0x05)) // [5, 0) is empty
     }
   }
 
   test("framing taxonomy: truncation is IOException (retryable), bad flag/length fatal") {
-    def frameOf(flag: Int, payload: Array[Byte]): Array[Byte] = {
-      val bos = new ByteArrayOutputStream()
-      EnvelopeWire.writeFrame(new DataOutputStream(bos), flag, payload)
-      bos.toByteArray
+    // the production deframer: a frame split across DATA frames yields
+    // nothing until its last byte arrives; a stream that ends mid-frame is
+    // the fetcher's Eof, an IOException that Backoff retries
+    def bytesOf(frame: ByteBuf): Array[Byte] = {
+      val b = new Array[Byte](frame.readableBytes()); frame.readBytes(b); b
     }
-    val good = frameOf(EnvelopeWire.MsgFlag, "hello".getBytes)
-    val (f, p) = EnvelopeWire.readFrame(new DataInputStream(new ByteArrayInputStream(good)))
-    assert(f === EnvelopeWire.MsgFlag && new String(p) === "hello")
-    // truncated mid-payload → EOFException (an IOException) → Backoff retries
-    intercept[EOFException] {
-      EnvelopeWire.readFrame(new DataInputStream(
-        new ByteArrayInputStream(good.dropRight(2))))
-    }
+    val good = bytesOf(GrpcChain.grpcFrame("hello".getBytes))
+    val acc = new GrpcChain.FrameAccumulator
+    acc.append(Unpooled.wrappedBuffer(good.take(3)))
+    assert(acc.next() === None, "header incomplete")
+    acc.append(Unpooled.wrappedBuffer(good.slice(3, good.length - 2)))
+    assert(acc.next() === None, "payload incomplete")
+    acc.append(Unpooled.wrappedBuffer(good.takeRight(2)))
+    assert(acc.next().map(new String(_)) === Some("hello"))
+    assert(acc.next() === None, "nothing left")
     // unknown flag → fatal
-    intercept[EnvelopeWire.MalformedFrameException] {
-      EnvelopeWire.readFrame(new DataInputStream(
-        new ByteArrayInputStream(frameOf(0x42, "x".getBytes))))
-    }
+    val flagged = good.clone(); flagged(0) = 0x42
+    val badFlag = new GrpcChain.FrameAccumulator
+    badFlag.append(Unpooled.wrappedBuffer(flagged))
+    intercept[EnvelopeWire.MalformedFrameException] { badFlag.next() }
     // hostile length → fatal before any allocation
     val hostile = Array[Byte](0x00, 0x7F.toByte, 0xFF.toByte, 0xFF.toByte, 0xFF.toByte)
-    intercept[EnvelopeWire.MalformedFrameException] {
-      EnvelopeWire.readFrame(new DataInputStream(new ByteArrayInputStream(hostile)))
-    }
+    val badLength = new GrpcChain.FrameAccumulator
+    badLength.append(Unpooled.wrappedBuffer(hostile))
+    intercept[EnvelopeWire.MalformedFrameException] { badLength.next() }
   }
 }

@@ -57,6 +57,8 @@ class GrpcChainSpec extends SparkSpec {
         "the dropped seq must be re-requested by the resumed call")
       assert(server.calls.get() >= 3,
         "the drop must have forced a new call beyond the per-partition ones")
+      assert(server.accepts.get() >= 3,
+        "the drop must have forced a reconnect beyond the per-partition connections")
     } finally server.close()
   }
 
@@ -119,6 +121,8 @@ class GrpcChainSpec extends SparkSpec {
       assert(chain(e).exists(_.isInstanceOf[Backoff.FatalException]))
       assert(server.calls.get() <= cfgOf(gen).numPartitions + 1,
         "fatal auth means at most one call per partition reader")
+      assert(server.accepts.get() <= cfgOf(gen).numPartitions + 1,
+        "fatal auth means at most one connection per partition reader")
     } finally server.close()
   }
 
@@ -138,8 +142,12 @@ class GrpcChainSpec extends SparkSpec {
         Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10).toSeq
       assert(chain(e).exists(_.isInstanceOf[EnvelopeWire.MalformedFrameException]),
         s"expected MalformedFrameException, got $e")
+      assert(chain(e).exists(_.isInstanceOf[Backoff.FatalException]),
+        "malformed frames must short-circuit the retry loop")
       assert(server.served.get(4L) === 1,
         s"fatal means the poisoned seq is served exactly once, got ${server.served.get(4L)}")
+      assert(server.calls.get() === 1,
+        s"fatal means exactly ONE call — a retry storm opened ${server.calls.get()}")
     } finally server.close()
   }
 
