@@ -101,7 +101,10 @@ object ChType {
       throw new IllegalArgumentException(s"unsupported ClickHouse type: $other")
   }
 
+  /** Whether the column takes NULL: `Nullable(T)`, also inside
+    * `LowCardinality`. */
   def isNullable(t: ChType): Boolean = t match {
+    case ChLowCardinality(inner) => isNullable(inner)
     case ChNullable(_) => true
     case _ => false
   }

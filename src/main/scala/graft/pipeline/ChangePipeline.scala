@@ -1,7 +1,18 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapBuilder, ArrayBasedMapData, ArrayData,
+  GenericArrayData, MapData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.cast.DynamicCast
 import graft.model.{BlockScoped, ChTable}
@@ -46,21 +57,20 @@ object ChangePipeline {
     * winning over field entries — exactly `HashMap::extend` semantics in the
     * reference (`src/main.rs:291-297`, `src/loader.rs:143-149`).
     *
-    * Pure SQL array ops (no UDF): an entry survives iff no later entry has
-    * the same name. Field lists are tiny (one row's columns), so the O(n²)
-    * scan is cheaper than any shuffle-based alternative and stays codegen'd.
+    * One Catalyst expression ([[FieldsToMap]]) whose generated code is a
+    * static call into [[FieldsToMap.build]], so it stays inside whole-stage
+    * codegen like the ProtoWire and RowBinary codecs. The entries are the
+    * fields then the PK keys; an entry survives iff no later entry has the
+    * same name, and survivors keep their order. Null names follow SQL's
+    * three-valued `exists`, as the array-function chain this replaces did:
+    * an entry is dropped when it or any later entry has a null name, unless
+    * it is the last entry, and a null name that survives fails the row with
+    * Spark's null-map-key error. A null `fields` gives NULL; a null
+    * `compositePk` adds no entries.
     */
-  def fieldsToMap(fields: Column, compositePk: Column): Column = {
-    val fieldEntries = transform(fields,
-      f => struct(f.getField("name").as("k"), f.getField("newValue").as("v")))
-    val pkEntries = transform(map_entries(coalesce(compositePk, map())),
-      e => struct(e.getField("key").as("k"), e.getField("value").as("v")))
-    val all = concat(fieldEntries, pkEntries)
-    val deduped = filter(all, (e, i) =>
-      !exists(slice(all, i + lit(2), size(all) - i - lit(1)),
-        later => later.getField("k") === e.getField("k")))
-    map_from_entries(deduped)
-  }
+  def fieldsToMap(fields: Column, compositePk: Column): Column =
+    ColumnBridge.column(FieldsToMap(ColumnBridge.expression(fields),
+      ColumnBridge.expression(compositePk)))
 
   /** O9 + O12: route the exploded change rows to their tables and apply each
     * table's typed projection. Returns one DataFrame per catalog table —
@@ -85,4 +95,125 @@ object ChangePipeline {
       catalog: Seq[ChTable],
       strict: Boolean = false): Map[String, DataFrame] =
     routeAndCast(explodeChanges(blocks), catalog, strict)
+}
+
+/** `fields` ARRAY<STRUCT<name STRING, newValue STRING, …>> and `compositePk`
+  * MAP<STRING,STRING> → the change's fields map ([[ChangePipeline.fieldsToMap]]
+  * has the rules). The struct's `name` and `newValue` are found by name with
+  * the session's resolver, as `getField` finds them. */
+case class FieldsToMap(fields: Expression, compositePk: Expression) extends BinaryExpression {
+  override def left: Expression = fields
+  override def right: Expression = compositePk
+
+  private def element: Option[StructType] = fields.dataType match {
+    case ArrayType(st: StructType, _) => Some(st)
+    case _ => None
+  }
+  private def ordinal(st: StructType, name: String): Int =
+    st.fieldNames.indexWhere(SQLConf.get.resolver(_, name))
+
+  override def checkInputDataTypes(): TypeCheckResult = (element, compositePk.dataType) match {
+    case (Some(st), MapType(StringType, StringType, _))
+        if Seq("name", "newValue").forall(n =>
+          ordinal(st, n) >= 0 && st(ordinal(st, n)).dataType == StringType) =>
+      TypeCheckResult.TypeCheckSuccess
+    case _ => TypeCheckResult.TypeCheckFailure(
+      "fields_to_map takes ARRAY<STRUCT<name STRING, newValue STRING, ...>> and " +
+        s"MAP<STRING,STRING>, not ${fields.dataType.simpleString} and " +
+        compositePk.dataType.simpleString)
+  }
+
+  private lazy val st = element.get
+  private lazy val nameAt = ordinal(st, "name")
+  private lazy val valueAt = ordinal(st, "newValue")
+
+  override def dataType: DataType = {
+    val nullValues = (fields.dataType, compositePk.dataType) match {
+      case (ArrayType(s: StructType, containsNull), MapType(_, _, pkNulls)) =>
+        containsNull || pkNulls || s(ordinal(s, "newValue")).nullable
+      case _ => true
+    }
+    MapType(StringType, StringType, nullValues)
+  }
+  override def nullable: Boolean = fields.nullable
+
+  override def eval(input: InternalRow): Any = {
+    val f = fields.eval(input)
+    if (f == null) null
+    else FieldsToMap.build(f.asInstanceOf[ArrayData], nameAt, valueAt, st.length,
+      compositePk.eval(input).asInstanceOf[MapData])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val f = fields.genCode(ctx)
+    val pk = compositePk.genCode(ctx)
+    ev.copy(code = code"""
+      ${f.code}
+      boolean ${ev.isNull} = ${f.isNull};
+      org.apache.spark.sql.catalyst.util.MapData ${ev.value} = null;
+      if (!${ev.isNull}) {
+        ${pk.code}
+        ${ev.value} = graft.pipeline.FieldsToMap.build(${f.value}, $nameAt, $valueAt,
+          ${st.length}, ${pk.isNull} ? null : ${pk.value});
+      }""")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): FieldsToMap =
+    copy(fields = newLeft, compositePk = newRight)
+}
+
+object FieldsToMap {
+
+  /** One pass over the entries (the `width`-wide field structs, then the PK
+    * map's entries): the survivors, in order, as the map. */
+  def build(fields: ArrayData, nameAt: Int, valueAt: Int, width: Int, pk: MapData): MapData = {
+    val nf = fields.numElements()
+    val n = nf + (if (pk == null) 0 else pk.numElements())
+    val keys = new Array[UTF8String](n)
+    val values = new Array[UTF8String](n)
+    var i = 0
+    while (i < nf) {
+      if (!fields.isNullAt(i)) { // a null struct: null name and value
+        val f = fields.getStruct(i, width)
+        if (!f.isNullAt(nameAt)) keys(i) = f.getUTF8String(nameAt)
+        if (!f.isNullAt(valueAt)) values(i) = f.getUTF8String(valueAt)
+      }
+      i += 1
+    }
+    while (i < n) {
+      keys(i) = pk.keyArray().getUTF8String(i - nf)
+      if (!pk.valueArray().isNullAt(i - nf)) values(i) = pk.valueArray().getUTF8String(i - nf)
+      i += 1
+    }
+    // an entry before the last null name compares to NULL, so it drops
+    var lastNull = -1
+    i = n - 1
+    while (i >= 0 && lastNull < 0) { if (keys(i) == null) lastNull = i; i -= 1 }
+    val keep = new Array[Boolean](n)
+    var kept = 0
+    i = n - 1
+    while (i >= 0) {
+      keep(i) = i == n - 1 || (i > lastNull && {
+        var j = i + 1
+        while (j < n && !(keep(j) && keys(j) == keys(i))) j += 1
+        j == n
+      })
+      if (keep(i)) kept += 1
+      i -= 1
+    }
+    if (n > 0 && keys(n - 1) == null) {
+      // the map builder raises Spark's own null-map-key error
+      new ArrayBasedMapBuilder(StringType, StringType).put(null, values(n - 1))
+    }
+    val ks = new Array[Any](kept)
+    val vs = new Array[Any](kept)
+    var k = 0
+    i = 0
+    while (i < n) {
+      if (keep(i)) { ks(k) = keys(i); vs(k) = values(i); k += 1 }
+      i += 1
+    }
+    new ArrayBasedMapData(new GenericArrayData(ks), new GenericArrayData(vs))
+  }
 }

@@ -55,13 +55,20 @@ object GraftStream {
     * each UUID gets its own executor class loader: every query's first
     * micro-batch recompiled the plan's ~18 generated classes. Now every
     * query reuses the classes that an earlier query in the JVM compiled.
-    * [[StreamingFinality]]'s fixed state encoder keeps the state serializer's
-    * code the same across queries. A caller session that holds
-    * session-scoped artifacts keeps isolation on (see
-    * [[SessionBridge.withConf]]). */
+    * [[StreamingFinality]]'s binary state keeps the state serializer's and
+    * deserializer's code the same across queries and batches. A caller
+    * session that holds session-scoped artifacts keeps isolation on (see
+    * [[SessionBridge.withConf]]).
+    *
+    * Checkpoints of either state format restart. A new checkpoint stores
+    * the finality buffer as one binary value ([[StreamingFinality.released]]).
+    * A checkpoint whose recorded state schema is the `BufferState` case
+    * class, as every checkpoint written before the binary format was, keeps
+    * that operator ([[StreamingFinality.releasedLegacy]]): Spark refuses a
+    * stateful operator whose state schema differs from the recorded one. */
   def startWith(msgs: Dataset[BlockMsg], checkpointDir: String)(
       writeBatch: (Dataset[BlockScoped], Long) => Unit): StreamingQuery =
-    SessionBridge.withConf(StreamingFinality.released(msgs),
+    SessionBridge.withConf(StreamingFinality.releasedFor(msgs, checkpointDir),
         Map(SessionBridge.StateStoresKey -> "1",
           SessionBridge.CheckpointManagerKey -> classOf[LocalCheckpointFiles].getName))
       .writeStream

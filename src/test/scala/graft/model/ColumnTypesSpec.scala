@@ -48,6 +48,11 @@ class ColumnTypesSpec extends AnyFunSuite {
     assert(!ChType.isNullable(ChType.parse("Int32")))
   }
 
+  test("LowCardinality(Nullable(T)) is nullable; LowCardinality(T) is not") {
+    assert(ChType.isNullable(ChType.parse("LowCardinality(Nullable(String))")))
+    assert(!ChType.isNullable(ChType.parse("LowCardinality(String)")))
+  }
+
   test("unknown types are rejected") {
     intercept[IllegalArgumentException](ChType.parse("Enum8('a' = 1)"))
     intercept[IllegalArgumentException](ChType.parse(""))

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 import graft.cast.DynamicCast
 import graft.model.{BlockScoped, ChTable, CursorRow}
 import graft.model.ChType._
-import graft.pipeline.ChangePipeline
+import graft.pipeline.{ChangePipeline, FieldsMapOracle}
 
 /** The ClickHouse sink's per-batch DataFrame path, kept as the byte-level
   * oracle for [[ClickHouseHttpSink]]'s bound plan. Each batch builds and
@@ -71,7 +71,7 @@ final class ClickHouseSinkReference(
       .select(col("clock.number").as("block_num"), col("clock.id").as("block_id"),
         col("cursor"), explode_outer(col("changes")).as("change"))
       .select(meta ++ Seq(col("change.table").as("table"),
-        ChangePipeline.fieldsToMap(col("change.fields"), col("change.compositePk"))
+        FieldsMapOracle.fieldsToMap(col("change.fields"), col("change.compositePk"))
           .as("fields_map")): _*)
     val branches = catalog.map { t =>
       (col("table") === t.name, encodeRow(t.name, schemas(t.name),

@@ -398,6 +398,116 @@ class GraftStreamSpec extends SparkSpec {
     assert(sink.loadCursor(spark).map(c => (c.blockNum, c.cursor)) === Some((6L, "c6")))
   }
 
+  test("ClickHouse stream: every steady micro-batch compiles no class") {
+    implicit val enc = org.apache.spark.sql.Encoders.product[BlockMsg]
+    def chain = spark.readStream.format("graft.sources.ChainSource")
+      .option("blocksPerTrigger", 10).option("totalBlocks", 50)
+      .option("finalityLag", 2).option("numPartitions", 1)
+      .load().as[BlockMsg]
+    val chainCatalog = Seq(ChTable("blocks", Seq(ChColumn("height", ChUInt64), ChColumn("fork", ChUInt32))))
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val server = new ClickHouseHttpServer()
+    // classes compiled so far, taken as each batch sends its cursor row
+    val atCursor = new ConcurrentLinkedQueue[Long]()
+    val proxy = new RecordingProxy(server.url,
+      sql => if (sql.startsWith("INSERT INTO `graft_cursors`")) atCursor.add(compiles))
+    // classes compiled in each batch of one query over the chain
+    def perBatch(): Seq[Long] = {
+      atCursor.clear()
+      val before = compiles
+      val q = GraftStream.startClickHouse(chain, chainCatalog, proxy.url,
+        Files.createTempDirectory("graftzero").resolve("ch").toString, "zero")
+      q.processAllAvailable(); q.stop()
+      assert(q.recentProgress.count(_.numInputRows > 0) === 5)
+      (before +: atCursor.asScala.toSeq).sliding(2).map { case Seq(a, b) => b - a }.toSeq
+    }
+    try {
+      // the first batch that reads state may compile the state
+      // deserializer (other work in the JVM can evict it from Spark's
+      // bounded cache); from then on nothing is new
+      val first = perBatch()
+      assert(first.size === 5 && first.drop(2).forall(_ == 0L), s"classes compiled per batch: $first")
+      val second = perBatch()
+      assert(second.size === 5 && second.tail.forall(_ == 0L), s"classes compiled per batch: $second")
+    } finally { proxy.close(); server.close() }
+  }
+
+  test("a restart from a binary-state checkpoint compiles no class in its first micro-batch") {
+    implicit val enc = org.apache.spark.sql.Encoders.product[BlockMsg]
+    def chain(totalBlocks: Int): Dataset[BlockMsg] =
+      spark.readStream.format("graft.sources.ChainSource")
+        .option("blocksPerTrigger", 10).option("totalBlocks", totalBlocks)
+        .option("finalityLag", 2).option("numPartitions", 1)
+        .load().as[BlockMsg]
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val ckpt = Files.createTempDirectory("graftbinrestart").resolve("ckpt").toString
+    def run(totalBlocks: Int): Long = {
+      val before = compiles
+      var firstBatch = -1L
+      val q = GraftStream.startWith(chain(totalBlocks), ckpt) { (blocks, _) =>
+        blocks.toDF().queryExecution.toRdd.count()
+        if (firstBatch < 0) firstBatch = compiles - before
+      }
+      q.processAllAvailable(); q.stop()
+      firstBatch
+    }
+    run(30)
+    assert(!StreamingFinality.legacyState(spark, ckpt), "a new checkpoint holds binary state")
+    val restart = run(60)
+    assert(restart === 0L, s"$restart classes compiled in the restart's first batch")
+  }
+
+  test("a checkpoint of the BufferState operator restarts under startWith; a binary one under plain Spark") {
+    val root = Files.createTempDirectory("graftlegacy").toString
+    val sink = new MultiTableSink(catalog, s"$root/out", "chainA")
+    val write: (Dataset[BlockScoped], Long) => Unit = sink.writeBatch
+    def rows(s: MultiTableSink): Seq[Int] =
+      spark.read.parquet(s.dataPath("t")).select("v").collect().map(_.getInt(0)).sorted.toSeq
+
+    // legacy → binary code: phase 1 is the operator startWith ran before
+    // the binary state, on the same session clone (one store, java.nio files)
+    val srcDir = s"$root/src"; val ckpt = s"$root/ckpt"
+    new java.io.File(srcDir).mkdirs()
+    writeMsgs(srcDir, "batch1", (1L to 5L).map(n => BlockMsg.data(n, blk(n, n - 2))))
+    val q1 = SessionBridge.withConf(StreamingFinality.releasedLegacy(GraftStream.fileSource(spark, srcDir)),
+        Map(SessionBridge.StateStoresKey -> "1",
+          SessionBridge.CheckpointManagerKey -> classOf[LocalCheckpointFiles].getName))
+      .writeStream.outputMode("append").option("checkpointLocation", ckpt)
+      .foreachBatch(write).start()
+    q1.processAllAvailable(); q1.stop()
+    assert(StreamingFinality.legacyState(spark, ckpt))
+    writeMsgs(srcDir, "batch2", (6L to 8L).map(n => BlockMsg.data(n, blk(n, n - 2))))
+    val q2 = GraftStream.start(GraftStream.fileSource(spark, srcDir), catalog, s"$root/out", ckpt, "chainA")
+    q2.processAllAvailable(); q2.stop()
+    assert(q2.exception.isEmpty)
+    assert(rows(sink) === Seq(1, 2, 3, 4, 5, 6), "each released block written exactly once")
+    assert(sink.loadCursor(spark).map(c => (c.blockNum, c.cursor)) === Some((6L, "c6")))
+
+    // binary → plain Spark: a checkpoint written through startWith restarts
+    // under the plain binary-state plan; the BufferState operator refuses it
+    val src2 = s"$root/src2"; val ckpt2 = s"$root/ckpt2"
+    new java.io.File(src2).mkdirs()
+    val sink2 = new MultiTableSink(catalog, s"$root/out2", "chainB")
+    val write2: (Dataset[BlockScoped], Long) => Unit = sink2.writeBatch
+    writeMsgs(src2, "batch1", (1L to 5L).map(n => BlockMsg.data(n, blk(n, n - 2))))
+    val q3 = GraftStream.start(GraftStream.fileSource(spark, src2), catalog, s"$root/out2", ckpt2, "chainB")
+    q3.processAllAvailable(); q3.stop()
+    assert(!StreamingFinality.legacyState(spark, ckpt2))
+    writeMsgs(src2, "batch2", (6L to 8L).map(n => BlockMsg.data(n, blk(n, n - 2))))
+    val refused = StreamingFinality.releasedLegacy(GraftStream.fileSource(spark, src2))
+      .writeStream.outputMode("append").option("checkpointLocation", ckpt2)
+      .foreachBatch(write2).start()
+    intercept[Exception](refused.processAllAvailable())
+    refused.stop()
+    assert(rows(sink2) === Seq(1, 2, 3), "the refused restart wrote nothing")
+    val q4 = StreamingFinality.released(GraftStream.fileSource(spark, src2))
+      .writeStream.outputMode("append").option("checkpointLocation", ckpt2)
+      .foreachBatch(write2).start()
+    q4.processAllAvailable(); q4.stop()
+    assert(rows(sink2) === Seq(1, 2, 3, 4, 5, 6), "each released block written exactly once")
+    assert(sink2.loadCursor(spark).map(c => (c.blockNum, c.cursor)) === Some((6L, "c6")))
+  }
+
   test("loadCursor on empty store -> None (start from start_block)") {
     val root = Files.createTempDirectory("graftcur").toString
     val sink = new MultiTableSink(catalog, root, "nope")
