@@ -3,9 +3,7 @@ package graft.sink
 import java.io.OutputStream
 import java.net.{HttpURLConnection, URI, URLEncoder}
 import java.nio.charset.StandardCharsets
-import java.util.UUID
 
-import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.TaskContext
@@ -45,9 +43,8 @@ import graft.pipeline.ChangePipeline
   *  2. one RDD action per batch, over the rows Spark already planned for
   *     the batch (`queryExecution.toRdd`): each task ([[InsertTask]]) walks
   *     each block's changes, encodes each change through its table's
-  *     `UnsafeProjection` (generated once per executor JVM and plan, then
-  *     borrowed by one task at a time: [[ClickHouseHttpSink.EncoderPool]];
-  *     Spark's cache would spare only the compile, not the generation),
+  *     `UnsafeProjection` (generated once per task on the table's first
+  *     row; Spark's code cache spares the compile, not the generation),
   *     streams the bytes into one insert per table it meets, opened
   *     on that table's first row, finishes them all at the end and returns
   *     its top `(block_num, cursor, block_id)`; the driver writes the
@@ -109,7 +106,7 @@ class ClickHouseHttpSink(
   def writeBatch(blocks: Dataset[BlockScoped], batchId: Long): Unit = {
     val p = planFor(blocks)
     val task = new InsertTask(endpoint, user, password, compress, blockBytes,
-      if (schemaReady) Array.empty else p.ddl, p.blocks, p.tables, p.inserts, p.encoders, p.id)
+      if (schemaReady) Array.empty else p.ddl, p.blocks, p.tables, p.inserts, p.encoders)
     val tops = blocks.asInstanceOf[classic.Dataset[BlockScoped]].queryExecution.toRdd
       .mapPartitions(task).collect()
     if (tops.nonEmpty) {
@@ -118,9 +115,6 @@ class ClickHouseHttpSink(
       persistCursor(CursorRow(cursorId, cursor, blockNum, blockId))
     }
   }
-
-  /** The id of the plan the last batch ran, for tests. */
-  private[sink] def planId: Option[String] = Option(plan).map(_.id)
 
   private def planFor(blocks: Dataset[BlockScoped]): BoundPlan = {
     val schema = blocks.schema
@@ -147,8 +141,7 @@ class ClickHouseHttpSink(
       (t.name, schema, encoder)
     }
     val schemas = bound.map { case (t, s, _) => t -> s }.toMap
-    new BoundPlan(UUID.randomUUID().toString, blocks, ddlStatements(schemas).toArray,
-      bound.map(_._1).toArray,
+    new BoundPlan(blocks, ddlStatements(schemas).toArray, bound.map(_._1).toArray,
       bound.map { case (t, s, _) => insertStatement(frameChTable(t, s)) }.toArray,
       bound.map(_._3).toArray)
   }
@@ -235,50 +228,9 @@ class ClickHouseHttpSink(
 object ClickHouseHttpSink {
 
   /** The bound plan for one blocks schema: the DDL, and per catalog table
-    * its name, insert statement and encoder over a change row. `id` names
-    * the plan in each executor's [[EncoderPool]]. */
-  private[sink] final class BoundPlan(val id: String, val blocks: StructType,
-      val ddl: Array[String], val tables: Array[String], val inserts: Array[String],
-      val encoders: Array[Expression])
-
-  /** Each executor JVM's generated encoders, per bound plan: one set holds
-    * a projection per catalog table (null until a task first meets the
-    * table). A task borrows a set for its whole run and gives it back at
-    * the end, so two running tasks never share a projection (a projection
-    * reuses its output row), and a set is generated once per concurrently
-    * running task, not once per task. Generating a projection is the cost
-    * saved: `UnsafeProjection.create` writes and canonicalizes its Java
-    * source on every call, even when the compiled class is cached.
-    *
-    * Memory stays bounded: the pool keeps the [[MaxPlans]] most recently
-    * used plans, each with at most as many idle sets as the JVM has
-    * processors (more tasks than that never run at once on an executor
-    * that sizes its task slots to its cores). */
-  private[sink] object EncoderPool {
-    val MaxPlans = 8
-    private val idle =
-      new java.util.LinkedHashMap[String, java.util.ArrayDeque[Array[UnsafeProjection]]](
-        16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, java.util.ArrayDeque[Array[UnsafeProjection]]]): Boolean =
-          size() > MaxPlans
-      }
-
-    def borrow(plan: String, tables: Int): Array[UnsafeProjection] = {
-      val set = synchronized(Option(idle.get(plan)).map(_.pollFirst()).orNull)
-      if (set != null) set else new Array[UnsafeProjection](tables)
-    }
-
-    def giveBack(plan: String, set: Array[UnsafeProjection]): Unit = synchronized {
-      val q = idle.computeIfAbsent(plan, _ => new java.util.ArrayDeque[Array[UnsafeProjection]]())
-      if (q.size < Runtime.getRuntime.availableProcessors) q.addFirst(set)
-    }
-
-    /** The idle sets of `plan`, for tests. */
-    private[sink] def idleSets(plan: String): Seq[Array[UnsafeProjection]] = synchronized {
-      Option(idle.get(plan)).map(_.asScala.toSeq).getOrElse(Seq.empty)
-    }
-  }
+    * its name, insert statement and encoder over a change row. */
+  private[sink] final class BoundPlan(val blocks: StructType, val ddl: Array[String],
+      val tables: Array[String], val inserts: Array[String], val encoders: Array[Expression])
 
   /** One streamed POST: the statement travels in the `query` URL param — the
     * reference client's shape — with `decompress=1` marking a
@@ -414,7 +366,7 @@ object ClickHouseHttpSink {
   * partition sends and returns nothing. */
 private[sink] final class InsertTask(endpoint: String, user: String, password: String,
     compress: Boolean, blockBytes: Int, ddl: Array[String], blocks: StructType,
-    tables: Array[String], inserts: Array[String], encoders: Array[Expression], plan: String)
+    tables: Array[String], inserts: Array[String], encoders: Array[Expression])
     extends (Iterator[InternalRow] => Iterator[(Long, String, String)]) with Serializable {
   import ClickHouseHttpSink._
 
@@ -430,8 +382,7 @@ private[sink] final class InsertTask(endpoint: String, user: String, password: S
     val tableAt = change.fieldIndex("table")
     val tableOf = new java.util.HashMap[UTF8String, Integer]()
     tables.indices.foreach(i => tableOf.putIfAbsent(UTF8String.fromString(tables(i)), i))
-    val encode = EncoderPool.borrow(plan, tables.length)
-    encode.foreach(e => if (e != null) e.initialize(TaskContext.getPartitionId()))
+    val encode = new Array[UnsafeProjection](tables.length)
     val streams = new Array[InsertStream](tables.length)
     // (block_num, block_id, cursor, change): the row every encoder binds to
     val in = new GenericInternalRow(4)
@@ -471,10 +422,7 @@ private[sink] final class InsertTask(endpoint: String, user: String, password: S
       }
       streams.foreach(s => if (s != null) s.finish())
       done = true
-    } finally {
-      if (!done) streams.foreach(s => if (s != null) s.abort())
-      EncoderPool.giveBack(plan, encode)
-    }
+    } finally if (!done) streams.foreach(s => if (s != null) s.abort())
     Iterator((top, topCursor, topId))
   }
 
