@@ -121,14 +121,19 @@ object ProtoWire {
 
   /** Null on malformed input; otherwise ARRAY<changeStruct> as catalyst data. */
   def decodeChanges(bytes: Array[Byte]): GenericArrayData =
+    decodeChanges(bytes, 0, bytes.length)
+
+  /** [[decodeChanges]] of the payload at `buf[from, until)`, read in place:
+    * the strings it returns point into `buf`. */
+  def decodeChanges(buf: Array[Byte], from: Int, until: Int): GenericArrayData =
     try {
-      val r = new Reader(bytes, 0, bytes.length)
+      val r = new Reader(buf, from, until)
       val changes = ArrayBuffer.empty[InternalRow]
       while (r.hasMore) {
         val tag = r.varint()
         if ((tag >>> 3) == 1 && (tag & 7) == 2) {
           val (s, e) = r.bytes(r.varint().toInt)
-          changes += decodeTableChange(bytes, s, e)
+          changes += decodeTableChange(buf, s, e)
         } else r.skip((tag & 7).toInt)
       }
       new GenericArrayData(changes.toArray[Any])

@@ -6,8 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapBuilder, ArrayBasedMapData, ArrayData,
-  GenericArrayData, MapData}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.internal.SQLConf
@@ -61,12 +60,10 @@ object ChangePipeline {
     * static call into [[FieldsToMap.build]], so it stays inside whole-stage
     * codegen like the ProtoWire and RowBinary codecs. The entries are the
     * fields then the PK keys; an entry survives iff no later entry has the
-    * same name, and survivors keep their order. Null names follow SQL's
-    * three-valued `exists`, as the array-function chain this replaces did:
-    * an entry is dropped when it or any later entry has a null name, unless
-    * it is the last entry, and a null name that survives fails the row with
-    * Spark's null-map-key error. A null `fields` gives NULL; a null
-    * `compositePk` adds no entries.
+    * same name, and survivors keep their order. A null field struct, or a
+    * field whose name is null, is skipped: the reference's names are
+    * protobuf strings and never null, and the source never builds one. A
+    * null `fields` gives NULL; a null `compositePk` adds no entries.
     */
   def fieldsToMap(fields: Column, compositePk: Column): Column =
     ColumnBridge.column(FieldsToMap(ColumnBridge.expression(fields),
@@ -165,46 +162,40 @@ case class FieldsToMap(fields: Expression, compositePk: Expression) extends Bina
 
 object FieldsToMap {
 
-  /** One pass over the entries (the `width`-wide field structs, then the PK
-    * map's entries): the survivors, in order, as the map. */
+  /** One pass over the entries (the `width`-wide field structs with a
+    * non-null name, then the PK map's entries): the survivors, in order, as
+    * the map. */
   def build(fields: ArrayData, nameAt: Int, valueAt: Int, width: Int, pk: MapData): MapData = {
     val nf = fields.numElements()
-    val n = nf + (if (pk == null) 0 else pk.numElements())
-    val keys = new Array[UTF8String](n)
-    val values = new Array[UTF8String](n)
+    val cap = nf + (if (pk == null) 0 else pk.numElements())
+    val keys = new Array[UTF8String](cap)
+    val values = new Array[UTF8String](cap)
+    var n = 0
     var i = 0
     while (i < nf) {
-      if (!fields.isNullAt(i)) { // a null struct: null name and value
-        val f = fields.getStruct(i, width)
-        if (!f.isNullAt(nameAt)) keys(i) = f.getUTF8String(nameAt)
-        if (!f.isNullAt(valueAt)) values(i) = f.getUTF8String(valueAt)
+      val f = if (fields.isNullAt(i)) null else fields.getStruct(i, width)
+      if (f != null && !f.isNullAt(nameAt)) {
+        keys(n) = f.getUTF8String(nameAt)
+        if (!f.isNullAt(valueAt)) values(n) = f.getUTF8String(valueAt)
+        n += 1
       }
       i += 1
     }
-    while (i < n) {
-      keys(i) = pk.keyArray().getUTF8String(i - nf)
-      if (!pk.valueArray().isNullAt(i - nf)) values(i) = pk.valueArray().getUTF8String(i - nf)
-      i += 1
+    i = 0
+    while (i < cap - nf) {
+      keys(n) = pk.keyArray().getUTF8String(i)
+      if (!pk.valueArray().isNullAt(i)) values(n) = pk.valueArray().getUTF8String(i)
+      n += 1; i += 1
     }
-    // an entry before the last null name compares to NULL, so it drops
-    var lastNull = -1
-    i = n - 1
-    while (i >= 0 && lastNull < 0) { if (keys(i) == null) lastNull = i; i -= 1 }
     val keep = new Array[Boolean](n)
     var kept = 0
     i = n - 1
     while (i >= 0) {
-      keep(i) = i == n - 1 || (i > lastNull && {
-        var j = i + 1
-        while (j < n && !(keep(j) && keys(j) == keys(i))) j += 1
-        j == n
-      })
+      var j = i + 1
+      while (j < n && !(keep(j) && keys(j) == keys(i))) j += 1
+      keep(i) = j == n
       if (keep(i)) kept += 1
       i -= 1
-    }
-    if (n > 0 && keys(n - 1) == null) {
-      // the map builder raises Spark's own null-map-key error
-      new ArrayBasedMapBuilder(StringType, StringType).put(null, values(n - 1))
     }
     val ks = new Array[Any](kept)
     val vs = new Array[Any](kept)

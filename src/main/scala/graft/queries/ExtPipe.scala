@@ -466,7 +466,7 @@ private[graft] object ExtPipe {
         |ORDER BY media_id""".stripMargin,
 
     // Independent replay of the whole flagship pipeline: the chain generator
-    // (ChainSource.messageAt closed forms, totalBlocks=200 reorgEvery=20
+    // (ChainSource.envelopeAt closed forms, totalBlocks=200 reorgEvery=20
     // reorgDepth=3 finalityLag=8) and the FinalityBuffer fold
     // (state/FinalityBuffer.scala onBlock/onUndo, capacity 12) re-derived as
     // a DuckDB recursive CTE over (buffer, released) list state — one

@@ -4,17 +4,19 @@ import org.apache.spark.sql.catalyst.InternalRow
 
 /** Transport seam for the chain source (O1).
   *
-  * Everything between "a cursor position" and "the envelope message at it"
-  * goes through this trait, so the deterministic in-sandbox generator and a
-  * real substreams gRPC client are interchangeable per-partition readers.
-  * A real implementation would open one `sf.substreams.rpc.v2.Stream/Blocks`
-  * call per partition (reference channel shape: connect timeout, TCP
-  * keepalive, LZ4 — `src/substreams.rs:26-50`), honoring the contract:
+  * Everything between "a cursor position" and "the message at it" goes
+  * through this trait, so the deterministic in-sandbox generator
+  * ([[SyntheticBlockFetcher]]) and the substreams gRPC client
+  * ([[GrpcBlockFetcher]], one `sf.substreams.rpc.v2.Stream/Blocks` call per
+  * partition, `src/substreams.rs:26-50`) are interchangeable per-partition
+  * readers. Both return the BlockMsg row that
+  * [[EnvelopeWire.decodeResponse]] builds from a `Response`. Every
+  * implementation honors the contract:
   *
   *  - construction happens ON THE EXECUTOR with the full [[ChainSource.Config]]
   *    — `token` (O2 auth header), `connectTimeoutMs`/`keepaliveMs` (channel
   *    options), and the partition's own retry budget all travel in it;
-  *  - `fetch(seq)` returns the envelope at that exact cursor position and
+  *  - `fetch(seq)` returns the message at that exact cursor position and
   *    must be REPLAYABLE: a retried or restarted reader re-requests the same
   *    seq (the reference resumes from `latest_cursor`,
   *    `src/substreams_stream.rs:53-149`);
@@ -41,7 +43,7 @@ import org.apache.spark.sql.catalyst.InternalRow
   * default (empty or `"synthetic"`) is [[SyntheticBlockFetcher]].
   */
 trait BlockFetcher extends AutoCloseable {
-  /** The envelope message at cursor position `seq` (blocking). */
+  /** The BlockMsg row of the message at cursor position `seq` (blocking). */
   def fetch(seq: Long): InternalRow
   /** The reader announces its partition's `[start, end)` range before the
     * first fetch. Streaming transports use it as the Request's
@@ -66,9 +68,12 @@ object BlockFetcher {
 }
 
 /** The in-sandbox implementation: deterministic synthetic chain (state is a
-  * pure function of the sequence number — see [[ChainSource.messageAt]]),
+  * pure function of the sequence number — see [[ChainSource.envelopeAt]]),
   * plus the same auth stance and transient-fault surface the real transport
-  * has, so the retry/auth paths are exercised end-to-end without a network. */
+  * has, so the retry/auth paths are exercised end-to-end without a network.
+  * Each message is encoded as the fixture server would send it and decoded
+  * by the gRPC client's decoder, so this serves exactly what the wire
+  * carries. */
 class SyntheticBlockFetcher(cfg: ChainSource.Config) extends BlockFetcher {
   // transient faults fire once per seq (first attempt), so a retried fetch
   // succeeds — the reconnect-and-resume shape of O3
@@ -80,6 +85,8 @@ class SyntheticBlockFetcher(cfg: ChainSource.Config) extends BlockFetcher {
         "missing bearer token (set the token option or SUBSTREAMS_API_TOKEN)")
     if (cfg.failEvery > 0 && seq > 0 && seq % cfg.failEvery == 0 && failedOnce.add(seq))
       throw new java.io.IOException(s"transient chain error at seq $seq")
-    ChainSource.messageAt(seq, cfg)
+    val EnvelopeWire.RowArm(row, _) = EnvelopeWire.decodeResponse(seq,
+      EnvelopeWire.encodeResponse(ChainSource.envelopeAt(seq, cfg)))
+    row
   }
 }

@@ -7,11 +7,8 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Custom streaming source implementing the reference's source contract
   * (operators O1-O5, SURVEY §2.1) as a Spark DataSource V2
@@ -26,11 +23,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * ([[EnvelopeWire.mintCursor]], seam closed r14); the offset log never
   * parses it.
   *
-  * The "server" is a deterministic synthetic chain generator (no gRPC in
-  * this environment): block numbers advance monotonically; every
-  * `reorgEvery`-th message is a `BlockUndoSignal` rolling back `reorgDepth`
-  * blocks, after which the rolled-back heights are re-delivered with new
-  * block ids — exactly the envelope stream shape of
+  * The in-sandbox "server" is a deterministic synthetic chain generator,
+  * served in-process ([[SyntheticBlockFetcher]]) or over gRPC by the
+  * fixture server ([[GrpcChainServer]]): block numbers advance
+  * monotonically; every `reorgEvery`-th message is a `BlockUndoSignal`
+  * rolling back `reorgDepth` blocks, after which the rolled-back heights
+  * are re-delivered with new block ids — exactly the envelope stream shape of
   * `BlockResponse::New | Undo` (`src/substreams_stream.rs:21-24`). Finality
   * trails the head by `finalityLag` blocks (`final_block_height`).
   *
@@ -60,10 +58,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * }}}
   *
   * Transport seam: per-partition message fetch goes through [[BlockFetcher]]
-  * — the synthetic generator is one implementation; a real substreams gRPC
-  * client is another, selected by the `fetcherClass` option and built
-  * executor-side from this same Config (token, connectTimeoutMs,
-  * keepaliveMs). Nothing else in the source changes.
+  * — the synthetic generator is one implementation; the substreams gRPC
+  * client ([[GrpcBlockFetcher]]) is the other, selected by the
+  * `fetcherClass` option and built executor-side from this same Config
+  * (token, connectTimeoutMs, keepaliveMs). Both return the row
+  * [[EnvelopeWire.decodeResponse]] builds from a `Response`.
   *
   * Auth (O2) + resilience (O3): the resolved token (env
   * `SUBSTREAMS_API_TOKEN` over the `token` option, reference
@@ -173,10 +172,12 @@ object ChainSource {
     tlsTrustCertPath = o.getOrDefault("tlsTrustCertPath", ""),
     tlsInsecure = o.getBoolean("tlsInsecure", false))
 
-  /** The semantic content of one envelope — the fields a real server ships
-    * over the wire, separated from their InternalRow encoding so a transport
-    * (e.g. [[GrpcBlockFetcher]]) can serialize/parse them and both the
-    * synthetic and networked paths share [[toInternalRow]] bit-for-bit.
+  /** The synthetic server's model of one message: what the fixture server
+    * ([[GrpcChainServer]]) and the in-process generator put on the wire
+    * through [[EnvelopeWire.encodeResponse]]. Clients never decode back into
+    * it — [[EnvelopeWire.decodeResponse]] builds the source row straight
+    * from the `Response` — so a data message's payload is one `blocks`
+    * change with `height`/`fork` fields only because this model says so.
     *
     * `cursor` (data) / `lastValidCursor` (undo) are SERVER-MINTED OPAQUE
     * tokens (`EnvelopeWire.mintCursor`) that the client stores verbatim and
@@ -207,40 +208,6 @@ object ChainSource {
       cursor = if (reorg) "" else EnvelopeWire.mintCursor(seq),
       lastValidCursor = if (reorg) EnvelopeWire.mintCursor(seq) else "")
   }
-
-  /** Encode an [[Envelope]] as the BlockMsg InternalRow. Cursor strings are
-    * the envelope's server-minted tokens VERBATIM — nothing downstream may
-    * re-mint or parse them (the sink persists them as-is, reference
-    * `src/loader.rs:34-40`). */
-  def toInternalRow(e: Envelope): InternalRow = {
-    if (e.isUndo) {
-      new GenericInternalRow(Array[Any](
-        e.seq, UTF8String.fromString("undo"), null,
-        new GenericInternalRow(Array[Any](e.lastValid,
-          UTF8String.fromString(e.lastValidCursor)))))
-    } else {
-      val fields = new GenericArrayData(Array[Any](
-        new GenericInternalRow(Array[Any](
-          UTF8String.fromString("height"), UTF8String.fromString(e.height.toString),
-          UTF8String.fromString(""))),
-        new GenericInternalRow(Array[Any](
-          UTF8String.fromString("fork"), UTF8String.fromString(e.fork.toString),
-          UTF8String.fromString("")))))
-      val change = new GenericInternalRow(Array[Any](
-        UTF8String.fromString("blocks"), UTF8String.fromString(""),
-        new ArrayBasedMapData(new GenericArrayData(Array.empty[Any]),
-          new GenericArrayData(Array.empty[Any])), fields))
-      val clock = new GenericInternalRow(Array[Any](
-        UTF8String.fromString(s"b${e.height}-f${e.fork}"), e.height, e.tsMicros))
-      val data = new GenericInternalRow(Array[Any](
-        clock, UTF8String.fromString(e.cursor),
-        e.finalHeight, new GenericArrayData(Array[Any](change))))
-      new GenericInternalRow(Array[Any](e.seq, UTF8String.fromString("data"), data, null))
-    }
-  }
-
-  def messageAt(seq: Long, cfg: Config): InternalRow =
-    toInternalRow(envelopeAt(seq, cfg))
 }
 
 class ChainTable(options: CaseInsensitiveStringMap) extends Table with SupportsRead {

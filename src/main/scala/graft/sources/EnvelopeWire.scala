@@ -4,6 +4,8 @@ import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -32,10 +34,17 @@ import graft.functions.ProtoWire
   * message BlockRef { string id = 1; uint64 number = 2; }
   * }}}
   *
-  * The `Any.value` inside `MapModuleOutput` is a real
-  * `DatabaseChanges` payload encoded/decoded by [[ProtoWire]] — the same
-  * codec the sink path uses (O8) — so the gRPC client exercises the
-  * full nested decode the reference performs (`src/loader.rs:127-130`).
+  * The `Any.value` inside `MapModuleOutput` is a `DatabaseChanges` payload,
+  * decoded in place by [[ProtoWire]] — the same codec the sink path uses
+  * (O8) — as the reference decodes it (`src/loader.rs:127-149`).
+  *
+  * [[decodeResponse]] is the one builder of source rows: it turns a
+  * `Response` straight into the BlockMsg row ([[ChainSource.schema]]), with
+  * the Clock, cursor and final height as sent and every `TableChange` of
+  * the payload, whatever its tables and fields. Both fetchers use it: the
+  * gRPC client on the bytes it reads, the synthetic generator on
+  * [[encodeResponse]] of its [[ChainSource.Envelope]] — the server's model,
+  * which only the encode side knows.
   *
   * gRPC's length-prefixed framing lives in [[GrpcChain.FrameAccumulator]];
   * [[MaxFrameBytes]] bounds it. A message that fails protobuf decode is
@@ -248,13 +257,19 @@ object EnvelopeWire {
 
   sealed trait Decoded
   final case class SessionArm(traceId: String) extends Decoded
-  final case class EnvelopeArm(env: ChainSource.Envelope) extends Decoded
+  /** A data or undo message as its BlockMsg row ([[ChainSource.schema]]),
+    * and the server-minted cursor to resume after it: the data message's
+    * `cursor`, or the undo's `last_valid_cursor`. */
+  final case class RowArm(row: InternalRow, cursor: String) extends Decoded
+
+  private val DataKind = UTF8String.fromString("data")
+  private val UndoKind = UTF8String.fromString("undo")
 
   /** Response bytes → the arm. `requestedSeq` is the client's POSITIONAL
     * coordinate (it counts consumed messages — the real client does the
-    * same, `src/substreams_stream.rs:98-110`); the server-minted cursor is
-    * opaque and travels verbatim into the envelope for the client to store
-    * and return unmodified on resume. */
+    * same, `src/substreams_stream.rs:98-110`) and becomes the row's `seq`;
+    * the server-minted cursor is opaque and travels verbatim into the row
+    * for the client to store and return unmodified on resume. */
   def decodeResponse(requestedSeq: Long, bytes: Array[Byte]): Decoded =
     try {
       val r = new ProtoWire.Reader(bytes, 0, bytes.length)
@@ -267,10 +282,10 @@ object EnvelopeWire {
             out = SessionArm(str(bytes, s, e, 1))
           case (3, 2) =>
             val (s, e) = r.bytes(r.varint().toInt)
-            out = EnvelopeArm(decodeBlockScopedData(requestedSeq, bytes, s, e))
+            out = decodeBlockScopedData(requestedSeq, bytes, s, e)
           case (4, 2) =>
             val (s, e) = r.bytes(r.varint().toInt)
-            out = EnvelopeArm(decodeUndoSignal(requestedSeq, bytes, s, e))
+            out = decodeUndoSignal(requestedSeq, bytes, s, e)
           case (_, w) => r.skip(w)
         }
       }
@@ -279,7 +294,6 @@ object EnvelopeWire {
     } catch {
       case m: MalformedFrameException => throw m
       case ProtoWire.Malformed => throw new MalformedFrameException("bad Response bytes")
-      case e: NumberFormatException => throw new MalformedFrameException("bad numeric payload", e)
     }
 
   /** Scan a submessage for one string field (used for SessionInit.trace_id). */
@@ -296,97 +310,114 @@ object EnvelopeWire {
     out
   }
 
+  private def utf8(buf: Array[Byte], from: Int, until: Int): UTF8String =
+    UTF8String.fromBytes(buf, from, until - from)
+
+  /** BlockScopedData → a `data` row: the Clock, the cursor, the final height
+    * and every TableChange of the DatabaseChanges payload, read in place.
+    * Absent fields take their proto3 defaults; an absent timestamp is null. */
   private def decodeBlockScopedData(seq: Long, buf: Array[Byte],
-      start: Int, end: Int): ChainSource.Envelope = {
-    var height = 0L; var tsMicros = 0L; var finalHeight = 0L
-    var cursor = ""; var fork = -1L; var payloadHeight = -1L
+      start: Int, end: Int): RowArm = {
+    var clock: InternalRow = null
+    var cursor = UTF8String.EMPTY_UTF8
+    var finalHeight = 0L
+    var changes = new GenericArrayData(Array.empty[Any])
     val r = new ProtoWire.Reader(buf, start, end)
     while (r.hasMore) {
       val tag = r.varint()
       ((tag >>> 3).toInt, (tag & 7).toInt) match {
-        case (1, 2) => // MapModuleOutput → Any → DatabaseChanges (the O8 codec)
+        case (1, 2) =>
           val (s, e) = r.bytes(r.varint().toInt)
-          val mr = new ProtoWire.Reader(buf, s, e)
-          while (mr.hasMore) {
-            val mtag = mr.varint()
-            if ((mtag >>> 3) == 2 && (mtag & 7) == 2) { // map_output: Any
-              val (as, ae) = mr.bytes(mr.varint().toInt)
-              val ar = new ProtoWire.Reader(buf, as, ae)
-              while (ar.hasMore) {
-                val atag = ar.varint()
-                if ((atag >>> 3) == 2 && (atag & 7) == 2) { // value bytes
-                  val (vs, ve) = ar.bytes(ar.varint().toInt)
-                  val decoded = ProtoWire.decodeChanges(
-                    java.util.Arrays.copyOfRange(buf, vs, ve))
-                  if (decoded == null)
-                    throw new MalformedFrameException("bad DatabaseChanges payload")
-                  // single TableChange; fields name→new_value carry height/fork
-                  var ci = 0
-                  while (ci < decoded.numElements()) {
-                    val change = decoded.getStruct(ci, 6)
-                    val fields = change.getArray(5)
-                    var fi = 0
-                    while (fi < fields.numElements()) {
-                      val f = fields.getStruct(fi, 3)
-                      f.getUTF8String(0).toString match {
-                        case "height" => payloadHeight = f.getUTF8String(1).toString.toLong
-                        case "fork"   => fork = f.getUTF8String(1).toString.toLong
-                        case _        => ()
-                      }
-                      fi += 1
-                    }
-                    ci += 1
-                  }
-                } else ar.skip((atag & 7).toInt)
-              }
-            } else mr.skip((mtag & 7).toInt)
-          }
-        case (2, 2) => // Clock
+          changes = decodeModuleOutput(seq, buf, s, e)
+        case (2, 2) =>
           val (s, e) = r.bytes(r.varint().toInt)
-          val cr = new ProtoWire.Reader(buf, s, e)
-          while (cr.hasMore) {
-            val ctag = cr.varint()
-            ((ctag >>> 3).toInt, (ctag & 7).toInt) match {
-              case (2, 0) => height = cr.varint()
-              case (3, 2) => // Timestamp
-                val (ts, te) = cr.bytes(cr.varint().toInt)
-                val tr = new ProtoWire.Reader(buf, ts, te)
-                var secs = 0L; var nanos = 0L
-                while (tr.hasMore) {
-                  val ttag = tr.varint()
-                  ((ttag >>> 3).toInt, (ttag & 7).toInt) match {
-                    case (1, 0) => secs = tr.varint()
-                    case (2, 0) => nanos = tr.varint()
-                    case (_, w) => tr.skip(w)
-                  }
-                }
-                tsMicros = secs * 1000000L + nanos / 1000L
-              case (_, w) => cr.skip(w)
-            }
-          }
+          clock = decodeClock(buf, s, e)
         case (3, 2) =>
           val (s, e) = r.bytes(r.varint().toInt)
-          cursor = new String(buf, s, e - s, StandardCharsets.UTF_8)
+          cursor = utf8(buf, s, e)
         case (4, 0) => finalHeight = r.varint()
         case (_, w) => r.skip(w)
       }
     }
     // the cursor is OPAQUE to the client (reference contract: store
-    // verbatim, never parse) — validation here is presence + payload/clock
-    // consistency, not token structure; position tracking is positional
-    if (cursor.isEmpty)
+    // verbatim, never parse) — validation is presence, not token structure
+    if (cursor.numBytes() == 0)
       throw new MalformedFrameException(s"data message at seq $seq carried no cursor")
-    if (fork < 0 || payloadHeight != height)
-      throw new MalformedFrameException(
-        s"DatabaseChanges payload disagrees with Clock (payload height $payloadHeight vs $height)")
-    ChainSource.Envelope(seq, isUndo = false, height = height, fork = fork,
-      lastValid = -1L, finalHeight = finalHeight, tsMicros = tsMicros,
-      cursor = cursor)
+    if (clock == null) clock = decodeClock(buf, 0, 0) // an absent Clock reads as its defaults
+    val data = new GenericInternalRow(Array[Any](clock, cursor, finalHeight, changes))
+    RowArm(new GenericInternalRow(Array[Any](seq, DataKind, data, null)), cursor.toString)
   }
 
+  /** Clock { id = 1, number = 2, timestamp = 3 } → (id, number, ts µs). */
+  private def decodeClock(buf: Array[Byte], start: Int, end: Int): InternalRow = {
+    var id = UTF8String.EMPTY_UTF8
+    var number = 0L
+    var tsMicros: Any = null
+    val r = new ProtoWire.Reader(buf, start, end)
+    while (r.hasMore) {
+      val tag = r.varint()
+      ((tag >>> 3).toInt, (tag & 7).toInt) match {
+        case (1, 2) => val (s, e) = r.bytes(r.varint().toInt); id = utf8(buf, s, e)
+        case (2, 0) => number = r.varint()
+        case (3, 2) => // Timestamp { seconds = 1, nanos = 2 }
+          val (s, e) = r.bytes(r.varint().toInt)
+          val tr = new ProtoWire.Reader(buf, s, e)
+          var secs = 0L; var nanos = 0L
+          while (tr.hasMore) {
+            val ttag = tr.varint()
+            ((ttag >>> 3).toInt, (ttag & 7).toInt) match {
+              case (1, 0) => secs = tr.varint()
+              case (2, 0) => nanos = tr.varint()
+              case (_, w) => tr.skip(w)
+            }
+          }
+          tsMicros = secs * 1000000L + nanos / 1000L
+        case (_, w) => r.skip(w)
+      }
+    }
+    new GenericInternalRow(Array[Any](id, number, tsMicros))
+  }
+
+  /** MapModuleOutput { map_output = 2: Any { value = 2 } } → the Any's
+    * DatabaseChanges as BlockMsg changes `(table, pk, compositePk, fields)`;
+    * the payload's `ordinal` and `operation` have no column. */
+  private def decodeModuleOutput(seq: Long, buf: Array[Byte],
+      start: Int, end: Int): GenericArrayData = {
+    var out = new GenericArrayData(Array.empty[Any])
+    val mr = new ProtoWire.Reader(buf, start, end)
+    while (mr.hasMore) {
+      val mtag = mr.varint()
+      if ((mtag >>> 3) == 2 && (mtag & 7) == 2) {
+        val (as, ae) = mr.bytes(mr.varint().toInt)
+        val ar = new ProtoWire.Reader(buf, as, ae)
+        while (ar.hasMore) {
+          val atag = ar.varint()
+          if ((atag >>> 3) == 2 && (atag & 7) == 2) {
+            val (vs, ve) = ar.bytes(ar.varint().toInt)
+            val decoded = ProtoWire.decodeChanges(buf, vs, ve)
+            if (decoded == null)
+              throw new MalformedFrameException(s"bad DatabaseChanges payload at seq $seq")
+            val changes = new Array[Any](decoded.numElements())
+            var i = 0
+            while (i < changes.length) {
+              val c = decoded.getStruct(i, ProtoWire.changeStruct.length)
+              changes(i) = new GenericInternalRow(Array[Any](
+                c.getUTF8String(0), c.getUTF8String(1), c.getMap(2), c.getArray(5)))
+              i += 1
+            }
+            out = new GenericArrayData(changes)
+          } else ar.skip((atag & 7).toInt)
+        }
+      } else mr.skip((mtag & 7).toInt)
+    }
+    out
+  }
+
+  /** BlockUndoSignal → an `undo` row: the last valid block and its cursor. */
   private def decodeUndoSignal(seq: Long, buf: Array[Byte],
-      start: Int, end: Int): ChainSource.Envelope = {
-    var lastValid = -1L; var cursor = ""
+      start: Int, end: Int): RowArm = {
+    var lastValid = -1L
+    var cursor = UTF8String.EMPTY_UTF8
     val r = new ProtoWire.Reader(buf, start, end)
     while (r.hasMore) {
       val tag = r.varint()
@@ -394,23 +425,22 @@ object EnvelopeWire {
         case (1, 2) => // BlockRef
           val (s, e) = r.bytes(r.varint().toInt)
           val br = new ProtoWire.Reader(buf, s, e)
+          lastValid = 0L // proto3 default-0 omitted
           while (br.hasMore) {
             val btag = br.varint()
             if ((btag >>> 3) == 2 && (btag & 7) == 0) lastValid = br.varint()
             else br.skip((btag & 7).toInt)
           }
-          if (lastValid == -1L) lastValid = 0L // proto3 default-0 omitted
         case (2, 2) =>
           val (s, e) = r.bytes(r.varint().toInt)
-          cursor = new String(buf, s, e - s, StandardCharsets.UTF_8)
+          cursor = utf8(buf, s, e)
         case (_, w) => r.skip(w)
       }
     }
-    if (lastValid < 0L || cursor.isEmpty)
+    if (lastValid < 0L || cursor.numBytes() == 0)
       throw new MalformedFrameException(
         s"bad undo signal: last_valid_block $lastValid, cursor '$cursor'")
-    ChainSource.Envelope(seq, isUndo = true, height = -1L, fork = -1L,
-      lastValid = lastValid, finalHeight = -1L, tsMicros = -1L,
-      lastValidCursor = cursor)
+    RowArm(new GenericInternalRow(Array[Any](seq, UndoKind, null,
+      new GenericInternalRow(Array[Any](lastValid, cursor)))), cursor.toString)
   }
 }

@@ -455,8 +455,10 @@ final class GrpcChainServer(cfg: ChainSource.Config,
   * `.option("fetcherClass", "graft.sources.GrpcBlockFetcher")` — the
   * drop-in the `fetcherClass` seam was built for. One gRPC call serves a
   * partition's WHOLE range: `fetch(seq)` consumes the next server-stream
-  * message (verifying the cursor coordinate), and only a drop or an
-  * out-of-order ask reopens the call — with `start_cursor` resume. */
+  * message and returns the row [[EnvelopeWire.decodeResponse]] builds from
+  * its bytes — any `DatabaseChanges` the module emits, not only the
+  * fixture's — and only a drop or an out-of-order ask reopens the call,
+  * with `start_cursor` resume. */
 final class GrpcBlockFetcher(cfg: ChainSource.Config) extends BlockFetcher {
   import GrpcChain._
   require(cfg.endpoint.nonEmpty,
@@ -649,14 +651,14 @@ final class GrpcBlockFetcher(cfg: ChainSource.Config) extends BlockFetcher {
                   throw new EnvelopeWire.MalformedFrameException(
                     s"duplicate SessionInit mid-stream at seq $seq")
                 sessionSeen = true // always first, exactly once
-              case EnvelopeWire.EnvelopeArm(env) =>
+              case EnvelopeWire.RowArm(row, cursor) =>
                 // store the minted token of the message just consumed —
                 // verbatim, undo's last_valid_cursor included (both mean
                 // "continue the stream after me")
-                lastCursor = if (env.isUndo) env.lastValidCursor else env.cursor
+                lastCursor = cursor
                 lastCursorSeq = seq
                 nextSeq = seq + 1
-                return ChainSource.toInternalRow(env)
+                return row
             }
           case Status(code, m) =>
             // one taxonomy function for all 17 codes (table-tested) —

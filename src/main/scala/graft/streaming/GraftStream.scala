@@ -60,15 +60,16 @@ object GraftStream {
     * session that holds session-scoped artifacts keeps isolation on (see
     * [[SessionBridge.withConf]]).
     *
-    * Checkpoints of either state format restart. A new checkpoint stores
-    * the finality buffer as one binary value ([[StreamingFinality.released]]).
-    * A checkpoint whose recorded state schema is the `BufferState` case
-    * class, as every checkpoint written before the binary format was, keeps
-    * that operator ([[StreamingFinality.releasedLegacy]]): Spark refuses a
-    * stateful operator whose state schema differs from the recorded one. */
+    * The checkpoint stores the finality buffer as one binary value
+    * ([[StreamingFinality.released]]), and such a checkpoint also restarts
+    * under the plain Spark query. A checkpoint whose recorded state schema
+    * is the `BufferState` case class, as earlier versions wrote, does not
+    * restart: Spark refuses a stateful operator whose state schema differs
+    * from the recorded one, and the query fails before it writes a row or
+    * a cursor. */
   def startWith(msgs: Dataset[BlockMsg], checkpointDir: String)(
       writeBatch: (Dataset[BlockScoped], Long) => Unit): StreamingQuery =
-    SessionBridge.withConf(StreamingFinality.releasedFor(msgs, checkpointDir),
+    SessionBridge.withConf(StreamingFinality.released(msgs),
         Map(SessionBridge.StateStoresKey -> "1",
           SessionBridge.CheckpointManagerKey -> classOf[LocalCheckpointFiles].getName))
       .writeStream

@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One implementation per mechanism in `src/main`: one networked chain
-  * transport beside the synthetic generator, and one protobuf varint
-  * reader. A second copy growing back fails here. */
+  * transport beside the synthetic generator, one protobuf varint reader,
+  * one builder of source rows and one finality operator. A second copy
+  * growing back fails here. */
 class SingleImplementationSpec extends AnyFunSuite {
 
   /** `src/main/scala`'s Scala sources, relative path → text. */
@@ -34,5 +35,19 @@ class SingleImplementationSpec extends AnyFunSuite {
   test("functions/ProtoWire.scala holds the only protobuf varint reader") {
     val files = mainSources.collect { case (file, text) if text.contains("def varint(") => file }
     assert(files === Seq("graft/functions/ProtoWire.scala"))
+  }
+
+  test("sources/EnvelopeWire.scala is the only chain-source file that builds a row") {
+    val builders = mainSources.collect {
+      case (file, text) if file.startsWith("graft/sources/") && text.contains("new GenericInternalRow") => file
+    }
+    assert(builders.contains("graft/sources/EnvelopeWire.scala"))
+    for (file <- Seq("ChainSource.scala", "GrpcChain.scala", "BlockFetcher.scala"))
+      assert(!builders.contains(s"graft/sources/$file"), s"$file builds rows")
+  }
+
+  test("streaming/StreamingFinality.scala holds one flatMapGroupsWithState") {
+    val text = mainSources.toMap.apply("graft/streaming/StreamingFinality.scala")
+    assert("flatMapGroupsWithState".r.findAllMatchIn(text).size === 1)
   }
 }

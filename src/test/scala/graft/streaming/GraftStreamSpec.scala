@@ -1,6 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 import java.time.Instant
 import java.util.UUID
@@ -14,14 +15,18 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graftbridge.SessionBridge
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery,
+  StreamingQueryListener}
 
 import graft.SparkSpec
 import graft.model._
 import graft.sink.{ClickHouseHttpServer, MultiTableSink}
 import graft.sink.ClickHouseSinkIdentitySpec.RecordingProxy
+import graft.state.FinalityBuffer
+import graft.state.FinalityBuffer.BufferState
 
 class GraftStreamSpec extends SparkSpec {
+  import GraftStreamSpec._
   import graft.model.ChType._
 
   private val catalog = Seq(ChTable("t", Seq(ChColumn("v", ChInt32))))
@@ -452,36 +457,39 @@ class GraftStreamSpec extends SparkSpec {
       firstBatch
     }
     run(30)
-    assert(!StreamingFinality.legacyState(spark, ckpt), "a new checkpoint holds binary state")
+    assert(!caseClassState(ckpt), "a new checkpoint holds binary state")
     val restart = run(60)
     assert(restart === 0L, s"$restart classes compiled in the restart's first batch")
   }
 
-  test("a checkpoint of the BufferState operator restarts under startWith; a binary one under plain Spark") {
+  test("a checkpoint of the BufferState operator is refused under startWith; a binary one restarts under plain Spark") {
     val root = Files.createTempDirectory("graftlegacy").toString
     val sink = new MultiTableSink(catalog, s"$root/out", "chainA")
     val write: (Dataset[BlockScoped], Long) => Unit = sink.writeBatch
     def rows(s: MultiTableSink): Seq[Int] =
       spark.read.parquet(s.dataPath("t")).select("v").collect().map(_.getInt(0)).sorted.toSeq
 
-    // legacy → binary code: phase 1 is the operator startWith ran before
+    // case class → startWith: phase 1 is the operator startWith ran before
     // the binary state, on the same session clone (one store, java.nio files)
     val srcDir = s"$root/src"; val ckpt = s"$root/ckpt"
     new java.io.File(srcDir).mkdirs()
     writeMsgs(srcDir, "batch1", (1L to 5L).map(n => BlockMsg.data(n, blk(n, n - 2))))
-    val q1 = SessionBridge.withConf(StreamingFinality.releasedLegacy(GraftStream.fileSource(spark, srcDir)),
+    val q1 = SessionBridge.withConf(releasedCaseClass(GraftStream.fileSource(spark, srcDir)),
         Map(SessionBridge.StateStoresKey -> "1",
           SessionBridge.CheckpointManagerKey -> classOf[LocalCheckpointFiles].getName))
       .writeStream.outputMode("append").option("checkpointLocation", ckpt)
       .foreachBatch(write).start()
     q1.processAllAvailable(); q1.stop()
-    assert(StreamingFinality.legacyState(spark, ckpt))
+    assert(caseClassState(ckpt))
+    assert(rows(sink) === Seq(1, 2, 3))
     writeMsgs(srcDir, "batch2", (6L to 8L).map(n => BlockMsg.data(n, blk(n, n - 2))))
     val q2 = GraftStream.start(GraftStream.fileSource(spark, srcDir), catalog, s"$root/out", ckpt, "chainA")
-    q2.processAllAvailable(); q2.stop()
-    assert(q2.exception.isEmpty)
-    assert(rows(sink) === Seq(1, 2, 3, 4, 5, 6), "each released block written exactly once")
-    assert(sink.loadCursor(spark).map(c => (c.blockNum, c.cursor)) === Some((6L, "c6")))
+    intercept[Exception](q2.processAllAvailable())
+    q2.stop()
+    assert(q2.exception.nonEmpty)
+    assert(rows(sink) === Seq(1, 2, 3), "the refused restart wrote no row")
+    assert(sink.loadCursor(spark).map(c => (c.blockNum, c.cursor)) === Some((3L, "c3")),
+      "the refused restart wrote no cursor")
 
     // binary → plain Spark: a checkpoint written through startWith restarts
     // under the plain binary-state plan; the BufferState operator refuses it
@@ -492,9 +500,9 @@ class GraftStreamSpec extends SparkSpec {
     writeMsgs(src2, "batch1", (1L to 5L).map(n => BlockMsg.data(n, blk(n, n - 2))))
     val q3 = GraftStream.start(GraftStream.fileSource(spark, src2), catalog, s"$root/out2", ckpt2, "chainB")
     q3.processAllAvailable(); q3.stop()
-    assert(!StreamingFinality.legacyState(spark, ckpt2))
+    assert(!caseClassState(ckpt2))
     writeMsgs(src2, "batch2", (6L to 8L).map(n => BlockMsg.data(n, blk(n, n - 2))))
-    val refused = StreamingFinality.releasedLegacy(GraftStream.fileSource(spark, src2))
+    val refused = releasedCaseClass(GraftStream.fileSource(spark, src2))
       .writeStream.outputMode("append").option("checkpointLocation", ckpt2)
       .foreachBatch(write2).start()
     intercept[Exception](refused.processAllAvailable())
@@ -512,6 +520,41 @@ class GraftStreamSpec extends SparkSpec {
     val root = Files.createTempDirectory("graftcur").toString
     val sink = new MultiTableSink(catalog, root, "nope")
     assert(sink.loadCursor(spark).isEmpty)
+  }
+}
+
+object GraftStreamSpec {
+
+  /** The finality operator as it was before its state became binary: the
+    * `BufferState` case class itself as the state. It writes a checkpoint
+    * in the old format, which `startWith` refuses. */
+  def releasedCaseClass(msgs: Dataset[BlockMsg]): Dataset[BlockScoped] = {
+    val spark = msgs.sparkSession
+    import spark.implicits._
+    msgs.groupByKey(_ => "chain")
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (_: String, it: Iterator[BlockMsg], state: GroupState[BufferState]) =>
+          val (st, out) = FinalityBuffer.run(it.toSeq.sortBy(_.seq),
+            state.getOption.getOrElse(FinalityBuffer.empty))
+          state.update(st)
+          out.iterator
+      }
+  }
+
+  /** Whether the finality state schema recorded under `checkpointDir` is
+    * the `BufferState` case class: its one field `buffer`, the array of
+    * buffered blocks. Spark writes the value schema as JSON text under the
+    * operator's `state/0/`, in `0/_metadata/schema` (through Spark 4.1 for
+    * this operator) or `_stateSchema/` (Spark's newer layout). */
+  def caseClassState(checkpointDir: String): Boolean = {
+    val op = Paths.get(checkpointDir, "state", "0")
+    Seq("0/_metadata", "_stateSchema").map(op.resolve).filter(Files.isDirectory(_)).exists { dir =>
+      val files = Files.walk(dir)
+      try files.iterator.asScala.filter(Files.isRegularFile(_)).exists { f =>
+        new String(Files.readAllBytes(f), StandardCharsets.UTF_8)
+          .contains("{\"name\":\"buffer\",\"type\":{\"type\":\"array\"")
+      } finally files.close()
+    }
   }
 }
 
