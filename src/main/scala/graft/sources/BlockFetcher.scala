@@ -8,8 +8,8 @@ import org.apache.spark.sql.catalyst.InternalRow
   * through this trait, so the deterministic in-sandbox generator
   * ([[SyntheticBlockFetcher]]) and the substreams gRPC client
   * ([[GrpcBlockFetcher]], one `sf.substreams.rpc.v2.Stream/Blocks` call per
-  * partition, `src/substreams.rs:26-50`) are interchangeable per-partition
-  * readers. Both return the BlockMsg row that
+  * batch partition or per streaming query, `src/substreams.rs:26-50`) are
+  * interchangeable readers. Both return the BlockMsg row that
   * [[EnvelopeWire.decodeResponse]] builds from a `Response`. Every
   * implementation honors the contract:
   *
@@ -23,7 +23,13 @@ import org.apache.spark.sql.catalyst.InternalRow
   *  - auth failures throw [[UnauthenticatedException]] (fatal — [[Backoff]]
   *    will not retry it); transient transport errors throw anything else
   *    (retried on the exponential schedule);
-  *  - `close()` releases the channel when the partition is exhausted.
+  *  - a fetcher may serve consecutive micro-batches: a streaming reader
+  *    that served its whole range gives its fetcher back to
+  *    [[FetcherPool]], and the next micro-batch's reader continues with
+  *    `fetch` at the following seq, so a call should stay open between
+  *    fetches;
+  *  - `close()` releases the channel: at the end of a batch partition, after
+  *    a failed or stopped streaming reader, or when the pool drops it.
   *
   * CURSOR SEMANTICS at this seam (advice r12; seam CLOSED in r14): the
   * SERVER mints an OPAQUE token per delivered message
@@ -45,11 +51,12 @@ import org.apache.spark.sql.catalyst.InternalRow
 trait BlockFetcher extends AutoCloseable {
   /** The BlockMsg row of the message at cursor position `seq` (blocking). */
   def fetch(seq: Long): InternalRow
-  /** The reader announces its partition's `[start, end)` range before the
-    * first fetch. Streaming transports use it as the Request's
+  /** A batch partition's reader announces its `[start, end)` range before
+    * the first fetch. Streaming transports use it as the Request's
     * `stop_block_num` so ONE server-streamed call covers exactly the
     * partition (the reference's one-request-many-responses shape,
-    * `src/substreams_stream.rs:53-149`); the synthetic generator ignores it. */
+    * `src/substreams_stream.rs:53-149`); the synthetic generator ignores it.
+    * A streaming reader announces nothing: its call runs to the stop bound. */
   def hintRange(start: Long, end: Long): Unit = ()
   override def close(): Unit = ()
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.util.{Map => JMap}
+import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
 
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -32,9 +33,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `BlockResponse::New | Undo` (`src/substreams_stream.rs:21-24`). Finality
   * trails the head by `finalityLag` blocks (`final_block_height`).
   *
-  * Scale: `planInputPartitions` splits each micro-batch's seq range across
-  * `numPartitions` readers — generation (in real life: fetching) is
-  * distributed, the driver only tracks the long offset. Rate limiting =
+  * Scale: a streaming read serves each micro-batch in ONE input partition,
+  * from a fetcher that a per-executor pool ([[FetcherPool]]) keeps across
+  * micro-batches, so a query holds one long-lived call and reopens it only
+  * on error — the reference's one stream per run
+  * (`src/substreams_stream.rs:53-149`). The call runs open-ended to the
+  * stop bound; messages not yet read wait in the HTTP/2 flow-control
+  * window, which is the read-ahead. The finality fold then runs in the
+  * reader's task ([[graft.streaming.GraftStream.startWith]]). A batch read
+  * splits its range across `numPartitions` readers. Rate limiting =
   * `blocksPerTrigger` (the maxOffsetsPerTrigger analog; reference
   * backpressure is the async await, O3/§4).
   *
@@ -57,7 +64,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     .load()                           // schema = BlockMsg
   * }}}
   *
-  * Transport seam: per-partition message fetch goes through [[BlockFetcher]]
+  * Transport seam: every message fetch goes through [[BlockFetcher]]
   * — the synthetic generator is one implementation; the substreams gRPC
   * client ([[GrpcBlockFetcher]]) is the other, selected by the
   * `fetcherClass` option and built executor-side from this same Config
@@ -133,6 +140,7 @@ object ChainSource {
     reorgEvery = o.getLong("reorgEvery", 0L),
     reorgDepth = o.getLong("reorgDepth", 2L),
     finalityLag = o.getLong("finalityLag", 12L),
+    // readers per BATCH read; a streaming micro-batch is always one reader
     numPartitions = o.getInt("numPartitions", 4),
     token = resolveToken(o),
     // the synthetic server's stance: demand a bearer token like the real one
@@ -237,10 +245,14 @@ case class ChainOffset(seq: Long) extends Offset {
   override def json(): String = seq.toString
 }
 
-case class ChainInputPartition(start: Long, end: Long, cfg: ChainSource.Config)
-  extends InputPartition
+/** Messages `[start, end)`. A `pooled` partition (a streaming micro-batch)
+  * borrows its fetcher from [[FetcherPool]] and gives it back at `end`; a
+  * batch partition builds its own and bounds its call to the range. */
+case class ChainInputPartition(start: Long, end: Long, cfg: ChainSource.Config,
+    pooled: Boolean = false) extends InputPartition
 
 object ChainMicroBatchStream {
+  /** A batch read's `numPartitions` readers over `[start, end)`. */
   def partitionRange(start: Long, end: Long, cfg: ChainSource.Config): Array[InputPartition] = {
     val n = math.max(1, math.min(cfg.numPartitions.toLong, end - start)).toInt
     val step = math.ceil((end - start).toDouble / n).toLong
@@ -280,9 +292,12 @@ class ChainMicroBatchStream(cfg: ChainSource.Config)
   override def deserializeOffset(json: String): Offset = ChainOffset(json.toLong)
   override def commit(end: Offset): Unit = () // nothing external to ack
   override def stop(): Unit = ()
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    ChainMicroBatchStream.partitionRange(
-      start.asInstanceOf[ChainOffset].seq, end.asInstanceOf[ChainOffset].seq, cfg)
+  /** One reader per micro-batch: the chain is one ordered stream, folded in
+    * one state partition, so parallel readers would only add an exchange. */
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
+    val (s, e) = (start.asInstanceOf[ChainOffset].seq, end.asInstanceOf[ChainOffset].seq)
+    if (s < e) Array(ChainInputPartition(s, e, cfg, pooled = true)) else Array.empty
+  }
   override def createReaderFactory(): PartitionReaderFactory = new ChainReaderFactory(cfg)
 }
 
@@ -297,25 +312,79 @@ class ChainReaderFactory(cfg: ChainSource.Config) extends PartitionReaderFactory
       private var seq = p.start - 1
       private var current: InternalRow = _
       // the transport seam: synthetic generator by default, a real gRPC
-      // client via the fetcherClass option — instantiated HERE, executor-side
-      private val fetcher = BlockFetcher.create(p.cfg)
-      fetcher.hintRange(p.start, p.end) // streaming transports bound their call
+      // client via the fetcherClass option — built or borrowed HERE,
+      // executor-side
+      private val fetcher =
+        if (p.pooled) FetcherPool.borrow(p.cfg, p.start)
+        else {
+          val f = BlockFetcher.create(p.cfg)
+          f.hintRange(p.start, p.end) // a batch partition bounds its call
+          f
+        }
 
       override def next(): Boolean = {
         seq += 1
         if (seq >= p.end) false
         else {
-          // fatal: auth rejection (reference Unauthenticated) AND malformed
-          // frames (a desynced/hostile peer — retrying would storm it)
+          // fatal: auth rejection (reference Unauthenticated), the server's
+          // fatal_error, AND malformed frames (a desynced/hostile peer —
+          // retrying would storm it)
           current = Backoff.retry(p.cfg.maxRetries,
             isFatal = e => e.isInstanceOf[UnauthenticatedException] ||
               e.isInstanceOf[EnvelopeWire.MalformedFrameException] ||
-              e.isInstanceOf[GrpcChain.NonRetryableStatusException])(() => fetcher.fetch(seq))
+              e.isInstanceOf[GrpcChain.NonRetryableStatusException] ||
+              e.isInstanceOf[GrpcChain.ServerFatalErrorException])(() => fetcher.fetch(seq))
           true
         }
       }
       override def get(): InternalRow = current
-      override def close(): Unit = fetcher.close()
+      /** Only a reader that served its whole range gives its fetcher back,
+        * and only if the stream goes on past it; after a failure or an early
+        * stop the fetcher's position is unknown, so it is closed and a retry
+        * opens a new call. */
+      override def close(): Unit =
+        if (p.pooled && seq >= p.end && p.end < p.cfg.stopBound)
+          FetcherPool.giveBack(p.cfg, p.end, fetcher)
+        else fetcher.close()
+    }
+  }
+}
+
+/** The per-executor pool of streaming fetchers, so that one call serves
+  * consecutive micro-batches — the way Spark's Kafka source pools its
+  * consumers. One slot per [[ChainSource.Config]], holding the fetcher whose
+  * call stands at the next seq to read; a reader that starts there takes it
+  * and continues the call, any other start closes it and builds a new one.
+  * A fetcher idle longer than `cfg.readTimeout` is closed at the next
+  * borrow or give-back, so a stopped query does not hold its call. */
+private[sources] object FetcherPool {
+  private final case class Idle(next: Long, fetcher: BlockFetcher, sinceNanos: Long)
+  private val slots = new ConcurrentHashMap[ChainSource.Config, Idle]()
+
+  /** The fetcher whose call already stands at `seq`, or a new one. */
+  def borrow(cfg: ChainSource.Config, seq: Long): BlockFetcher = {
+    closeIdle()
+    val idle = slots.remove(cfg)
+    if (idle != null && idle.next == seq) idle.fetcher
+    else {
+      if (idle != null) idle.fetcher.close() // stale: its call stands elsewhere
+      BlockFetcher.create(cfg)
+    }
+  }
+
+  /** Park `fetcher`, whose call stands at `next`, in `cfg`'s slot. */
+  def giveBack(cfg: ChainSource.Config, next: Long, fetcher: BlockFetcher): Unit = {
+    val prev = slots.put(cfg, Idle(next, fetcher, System.nanoTime()))
+    if (prev != null) prev.fetcher.close()
+    closeIdle()
+  }
+
+  private def closeIdle(): Unit = {
+    val now = System.nanoTime()
+    slots.forEach { (cfg, idle) =>
+      if (now - idle.sinceNanos > TimeUnit.MILLISECONDS.toNanos(cfg.readTimeout) &&
+          slots.remove(cfg, idle))
+        idle.fetcher.close()
     }
   }
 }

@@ -22,7 +22,11 @@ import graft.functions.ProtoWire
   *                   uint64 stop_block_num = 3; string output_module = 6; }
   * // :46-71
   * message Response { oneof message { SessionInit session = 1;
-  *   BlockScopedData block_scoped_data = 3; BlockUndoSignal block_undo_signal = 4; } }
+  *   ModulesProgress progress = 2; BlockScopedData block_scoped_data = 3;
+  *   BlockUndoSignal block_undo_signal = 4; Error fatal_error = 5;
+  *   InitialSnapshotData debug_snapshot_data = 10;
+  *   InitialSnapshotComplete debug_snapshot_complete = 11; } }
+  * message Error { string module = 1; string reason = 2; repeated string logs = 3; }
   * // :78-100
   * message BlockUndoSignal { BlockRef last_valid_block = 1; string last_valid_cursor = 2; }
   * message BlockScopedData { MapModuleOutput output = 1; Clock clock = 2;
@@ -200,6 +204,19 @@ object EnvelopeWire {
     out.toArray
   }
 
+  /** Response{progress: ModulesProgress{}} — an empty progress report. */
+  def encodeProgress(): Array[Byte] = Array[Byte](0x12, 0x00)
+
+  /** Response{fatal_error: Error{module, reason}}. */
+  def encodeFatalError(module: String, reason: String): Array[Byte] = {
+    val err = ArrayBuffer.empty[Byte]
+    ProtoWire.writeLenDelim(err, 1, module.getBytes(StandardCharsets.UTF_8))
+    ProtoWire.writeLenDelim(err, 2, reason.getBytes(StandardCharsets.UTF_8))
+    val out = ArrayBuffer.empty[Byte]
+    ProtoWire.writeLenDelim(out, 5, err.toArray)
+    out.toArray
+  }
+
   /** Envelope → Response bytes: BlockScopedData for data (clock + cursor +
     * final_block_height + a REAL DatabaseChanges payload inside
     * MapModuleOutput/Any), BlockUndoSignal for undo. */
@@ -257,6 +274,12 @@ object EnvelopeWire {
 
   sealed trait Decoded
   final case class SessionArm(traceId: String) extends Decoded
+  /** An arm that carries no message of the chain: `progress` (2), which
+    * real endpoints send while they prepare data, or a debug snapshot
+    * (10, 11). The client skips it without consuming a position. */
+  final case class SkippedArm(field: Int) extends Decoded
+  /** `fatal_error` (5): the server gave up; `reason` is its `Error.reason`. */
+  final case class FatalErrorArm(module: String, reason: String) extends Decoded
   /** A data or undo message as its BlockMsg row ([[ChainSource.schema]]),
     * and the server-minted cursor to resume after it: the data message's
     * `cursor`, or the undo's `last_valid_cursor`. */
@@ -280,12 +303,18 @@ object EnvelopeWire {
           case (1, 2) =>
             val (s, e) = r.bytes(r.varint().toInt)
             out = SessionArm(str(bytes, s, e, 1))
+          case (f @ (2 | 10 | 11), 2) =>
+            r.skip(2)
+            out = SkippedArm(f)
           case (3, 2) =>
             val (s, e) = r.bytes(r.varint().toInt)
             out = decodeBlockScopedData(requestedSeq, bytes, s, e)
           case (4, 2) =>
             val (s, e) = r.bytes(r.varint().toInt)
             out = decodeUndoSignal(requestedSeq, bytes, s, e)
+          case (5, 2) =>
+            val (s, e) = r.bytes(r.varint().toInt)
+            out = FatalErrorArm(str(bytes, s, e, 1), str(bytes, s, e, 2))
           case (_, w) => r.skip(w)
         }
       }
@@ -296,7 +325,8 @@ object EnvelopeWire {
       case ProtoWire.Malformed => throw new MalformedFrameException("bad Response bytes")
     }
 
-  /** Scan a submessage for one string field (used for SessionInit.trace_id). */
+  /** Scan a submessage for one string field (SessionInit.trace_id,
+    * Error.module and Error.reason). */
   private def str(buf: Array[Byte], from: Int, until: Int, field: Int): String = {
     val r = new ProtoWire.Reader(buf, from, until)
     var out: String = ""

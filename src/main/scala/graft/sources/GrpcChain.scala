@@ -35,8 +35,9 @@ import org.apache.spark.sql.catalyst.InternalRow
   *    request, a stream of responses), not a per-seq RPC;
   *  - the server streams `Response{session}` first, then one
   *    `Response{block_scoped_data | block_undo_signal}` per position
-  *    ([[EnvelopeWire]] encodes the messages),
-  *    and closes with `grpc-status: 0` trailers;
+  *    ([[EnvelopeWire]] encodes the messages), with `progress` reports
+  *    in between that hold no position, and closes with `grpc-status: 0`
+  *    trailers; a `fatal_error` ends the call for good;
   *  - auth rejection is a trailers-only response with `grpc-status: 16`
   *    (UNAUTHENTICATED) — fatal at the client, no retry storm;
   *  - a dropped connection surfaces as stream EOF → IOException →
@@ -106,9 +107,10 @@ object GrpcChain {
   }
 
   /** One event-loop group per EXECUTOR, shared by every fetcher (daemon
-    * threads, never torn down): ChainReaderFactory builds a fetcher per
-    * partition per micro-batch, and a per-fetcher group would churn a
-    * thread + selector each trigger (review r12 finding). */
+    * threads, never torn down): a batch read builds a fetcher per
+    * partition, a streaming query one per call it opens (its first and
+    * each reconnect), and a per-fetcher group would churn a thread +
+    * selector each time (review r12 finding). */
   lazy val sharedGroup: NioEventLoopGroup = new NioEventLoopGroup(2,
     new io.netty.util.concurrent.DefaultThreadFactory("graft-grpc-client", true))
 
@@ -125,6 +127,11 @@ object GrpcChain {
     * [[RetryableStatuses]]) — [[Backoff]] treats it as fatal. */
   final class NonRetryableStatusException(val code: Int, message: String)
     extends RuntimeException(s"grpc-status $code (non-retryable): $message")
+
+  /** The server's `Response{fatal_error}`: it gave up on the request, so a
+    * replay would fail the same way — [[Backoff]] treats it as fatal. */
+  final class ServerFatalErrorException(val module: String, val reason: String)
+    extends RuntimeException(s"server fatal_error in module '$module': $reason")
 
   /** The WHOLE status taxonomy in one function (r13 #9: table-enumerated
     * over all 17 codes in GrpcChainSpec so it can't drift):
@@ -251,7 +258,10 @@ object GrpcChain {
   * deterministic-rejection case (must be fatal unless the status is in
   * [[GrpcChain.RetryableStatuses]]). `stallMsAtSeqs` pauses the stream
   * (once per seq) before serving — the healthy-but-quiet server the
-  * separate `readTimeoutMs` deadline exists for. With `cfg.tls` the
+  * separate `readTimeoutMs` deadline exists for. `progressAtSeqs` sends a
+  * `progress` message before the seq, as real endpoints do while they
+  * prepare data; `fatalErrorAtSeqs` sends `fatal_error` with that reason
+  * instead of the seq and ends the stream. With `cfg.tls` the
   * listener wraps
   * every accepted connection in TLS and only installs the HTTP/2 stack
   * after ALPN selects h2 (negotiated protocols are recorded in
@@ -260,11 +270,14 @@ final class GrpcChainServer(cfg: ChainSource.Config,
     failOnceAtSeqs: Set[Long] = Set.empty,
     garbageAtSeqs: Set[Long] = Set.empty,
     statusAtSeqs: Map[Long, Int] = Map.empty,
-    stallMsAtSeqs: Map[Long, Long] = Map.empty) extends AutoCloseable {
+    stallMsAtSeqs: Map[Long, Long] = Map.empty,
+    progressAtSeqs: Set[Long] = Set.empty,
+    fatalErrorAtSeqs: Map[Long, String] = Map.empty) extends AutoCloseable {
   import GrpcChain._
 
   val accepts = new AtomicInteger(0)
-  /** Streams (gRPC calls) opened — ONE per partition on a clean read. */
+  /** Streams (gRPC calls) opened — on a clean read, one per batch-read
+    * partition, or one for a whole streaming query. */
   val calls = new AtomicInteger(0)
   val served = new ConcurrentHashMap[Long, Integer]()
   /** Raw `start_cursor` per Request in arrival order ("" = cursorless) —
@@ -413,6 +426,19 @@ final class GrpcChainServer(cfg: ChainSource.Config,
             return
           case _ => ()
         }
+        fatalErrorAtSeqs.get(seq) match {
+          case Some(reason) =>
+            pumping = false
+            ctx.write(new DefaultHttp2DataFrame(
+              grpcFrame(EnvelopeWire.encodeFatalError("graft_out", reason))))
+            val trailers = new DefaultHttp2Headers()
+            trailers.set("grpc-status", "0")
+            ctx.writeAndFlush(new DefaultHttp2HeadersFrame(trailers, true))
+            return
+          case None => ()
+        }
+        if (progressAtSeqs.contains(seq))
+          ctx.write(new DefaultHttp2DataFrame(grpcFrame(EnvelopeWire.encodeProgress())))
         served.merge(seq, 1, (a, b) => a + b)
         if (failOnceAtSeqs.contains(seq) && dropped.add(seq)) {
           // kill the CONNECTION mid-stream: every stream on it EOFs,
@@ -454,11 +480,14 @@ final class GrpcChainServer(cfg: ChainSource.Config,
 /** gRPC client half of the transport, selected with
   * `.option("fetcherClass", "graft.sources.GrpcBlockFetcher")` — the
   * drop-in the `fetcherClass` seam was built for. One gRPC call serves a
-  * partition's WHOLE range: `fetch(seq)` consumes the next server-stream
-  * message and returns the row [[EnvelopeWire.decodeResponse]] builds from
-  * its bytes — any `DatabaseChanges` the module emits, not only the
-  * fixture's — and only a drop or an out-of-order ask reopens the call,
-  * with `start_cursor` resume. */
+  * batch partition's whole range, or — kept in [[FetcherPool]] between
+  * micro-batches — a streaming query's whole run: `fetch(seq)` consumes the
+  * next server-stream message and returns the row
+  * [[EnvelopeWire.decodeResponse]] builds from its bytes — any
+  * `DatabaseChanges` the module emits, not only the fixture's — and only a
+  * drop or an out-of-order ask reopens the call, with `start_cursor`
+  * resume. `progress` and debug-snapshot messages hold no position and are
+  * skipped; a `fatal_error` is [[GrpcChain.ServerFatalErrorException]]. */
 final class GrpcBlockFetcher(cfg: ChainSource.Config) extends BlockFetcher {
   import GrpcChain._
   require(cfg.endpoint.nonEmpty,
@@ -476,7 +505,8 @@ final class GrpcBlockFetcher(cfg: ChainSource.Config) extends BlockFetcher {
   private var queue: LinkedBlockingQueue[Event] = _
   private var nextSeq: Long = -1L
   private var sessionSeen = false
-  // the reader's partition range (hintRange); stopBound until announced
+  // a batch partition's range end (hintRange); a streaming call is
+  // open-ended to stopBound
   private var rangeEnd: Long = cfg.stopBound
   // the server-minted opaque cursor of the last CONSUMED message, stored
   // VERBATIM (never parsed) — what a reopen returns so the server resumes
@@ -651,6 +681,9 @@ final class GrpcBlockFetcher(cfg: ChainSource.Config) extends BlockFetcher {
                   throw new EnvelopeWire.MalformedFrameException(
                     s"duplicate SessionInit mid-stream at seq $seq")
                 sessionSeen = true // always first, exactly once
+              case EnvelopeWire.SkippedArm(_) => () // no position: read on
+              case EnvelopeWire.FatalErrorArm(module, reason) =>
+                throw new GrpcChain.ServerFatalErrorException(module, reason)
               case EnvelopeWire.RowArm(row, cursor) =>
                 // store the minted token of the message just consumed —
                 // verbatim, undo's last_valid_cursor included (both mean
@@ -676,6 +709,7 @@ final class GrpcBlockFetcher(cfg: ChainSource.Config) extends BlockFetcher {
       case e: EnvelopeWire.MalformedFrameException => teardownConn(); throw e
       case e: UnauthenticatedException => teardownConn(); throw e
       case e: GrpcChain.NonRetryableStatusException => teardownConn(); throw e
+      case e: GrpcChain.ServerFatalErrorException => teardownConn(); throw e
       case e: java.io.IOException => teardownConn(); throw e
       case scala.util.control.NonFatal(e) =>
         teardownConn()

@@ -60,6 +60,15 @@ object GraftStream {
     * session that holds session-scoped artifacts keeps isolation on (see
     * [[SessionBridge.withConf]]).
     *
+    * The fold reads `msgs.coalesce(1)`. With one state store the fold needs
+    * its input in one partition, and a DSv2 scan never reports
+    * `SinglePartition`, even when it plans one input partition as
+    * [[graft.sources.ChainMicroBatchStream]] does, so without the coalesce
+    * Spark would put a hash exchange between the reader and the fold. With
+    * it, the reader, the fold and the sink's first job over the released
+    * blocks run in one task, one stage per micro-batch. A checkpoint that
+    * recorded more stores keeps its count and so its exchange.
+    *
     * The checkpoint stores the finality buffer as one binary value
     * ([[StreamingFinality.released]]), and such a checkpoint also restarts
     * under the plain Spark query. A checkpoint whose recorded state schema
@@ -69,7 +78,7 @@ object GraftStream {
     * a cursor. */
   def startWith(msgs: Dataset[BlockMsg], checkpointDir: String)(
       writeBatch: (Dataset[BlockScoped], Long) => Unit): StreamingQuery =
-    SessionBridge.withConf(StreamingFinality.released(msgs),
+    SessionBridge.withConf(StreamingFinality.released(msgs.coalesce(1)),
         Map(SessionBridge.StateStoresKey -> "1",
           SessionBridge.CheckpointManagerKey -> classOf[LocalCheckpointFiles].getName))
       .writeStream

@@ -113,6 +113,45 @@ class ChainSourceSpec extends SparkSpec {
       .isInstanceOf[SyntheticBlockFetcher])
   }
 
+  test("pooled fetcher: one fetcher serves every micro-batch of a stream") {
+    CountingTestFetcher.reset()
+    val root = Files.createTempDirectory("chainpool").toString
+    // a read timeout far past the suite, so this fetcher stays parked
+    val q = read(50, extra = Map("blocksPerTrigger" -> "8", "numPartitions" -> "3",
+        "readTimeoutMs" -> "3600000", "fetcherClass" -> "graft.sources.CountingTestFetcher"))
+      .select(col("seq"))
+      .writeStream.format("parquet").option("path", s"$root/out")
+      .option("checkpointLocation", s"$root/ckpt").outputMode("append").start()
+    q.processAllAvailable(); q.stop()
+    assert(q.recentProgress.count(_.numInputRows > 0) === 7)
+    val seqs = spark.read.parquet(s"$root/out").collect().map(_.getLong(0)).sorted
+    assert(seqs.toSeq === (0L until 50L))
+    assert(CountingTestFetcher.created.get() === 1, "one fetcher for the whole stream")
+    assert(CountingTestFetcher.fetches.get() === 50)
+  }
+
+  test("pooled fetcher: a fetcher idle longer than readTimeout is closed, a stale position replaced") {
+    CountingTestFetcher.reset()
+    val cfg = ChainSource.config(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Map.of("totalBlocks", "31", "readTimeoutMs", "1000",
+        "fetcherClass", "graft.sources.CountingTestFetcher")))
+    def read(start: Long, end: Long): Unit = {
+      val r = new ChainReaderFactory(cfg)
+        .createReader(ChainInputPartition(start, end, cfg, pooled = true))
+      try while (r.next()) r.get() finally r.close()
+    }
+    read(0, 5); read(5, 10)
+    assert((CountingTestFetcher.created.get(), CountingTestFetcher.closes.get()) === ((1, 0)),
+      "the second reader continued the parked fetcher")
+    Thread.sleep(1500)
+    read(10, 15)
+    assert((CountingTestFetcher.created.get(), CountingTestFetcher.closes.get()) === ((2, 1)),
+      "the idle fetcher was closed and a new one built")
+    read(20, 25) // not where the parked fetcher stands
+    assert((CountingTestFetcher.created.get(), CountingTestFetcher.closes.get()) === ((3, 2)))
+    assert(CountingTestFetcher.fetches.get() === 20)
+  }
+
   test("end-to-end: chain source through finality buffer releases canonical chain only") {
     import spark.implicits._
     implicit val enc = org.apache.spark.sql.Encoders.product[BlockMsg]

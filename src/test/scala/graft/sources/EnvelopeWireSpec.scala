@@ -178,6 +178,24 @@ class EnvelopeWireSpec extends SparkSpec {
     }
   }
 
+  test("progress and debug-snapshot arms decode as skipped; fatal_error carries its reason") {
+    // Response{progress: ModulesProgress{}}, an empty progress report
+    assert(EnvelopeWire.decodeResponse(0L, Array[Byte](0x12, 0x00)) === EnvelopeWire.SkippedArm(2))
+    assert(EnvelopeWire.decodeResponse(0L, EnvelopeWire.encodeProgress()) === EnvelopeWire.SkippedArm(2))
+    // debug_snapshot_data (10) with a body, debug_snapshot_complete (11)
+    assert(EnvelopeWire.decodeResponse(3L, Array[Byte](0x52, 0x02, 0x0A, 0x00)) ===
+      EnvelopeWire.SkippedArm(10))
+    assert(EnvelopeWire.decodeResponse(3L, Array[Byte](0x5A, 0x00)) === EnvelopeWire.SkippedArm(11))
+    // fatal_error (5): Error{module = 1, reason = 2}, golden bytes
+    val fatal = EnvelopeWire.encodeFatalError("m", "boom")
+    assert(fatal.toSeq === (Seq[Byte](0x2A, 0x09, 0x0A, 0x01, 'm'.toByte, 0x12, 0x04) ++ "boom".getBytes(UTF_8)))
+    assert(EnvelopeWire.decodeResponse(5L, fatal) === EnvelopeWire.FatalErrorArm("m", "boom"))
+    // a progress arm that lies about its length is still malformed
+    intercept[EnvelopeWire.MalformedFrameException] {
+      EnvelopeWire.decodeResponse(0L, Array[Byte](0x12, 0x05, 0x00))
+    }
+  }
+
   test("framing taxonomy: truncation is IOException (retryable), bad flag/length fatal") {
     // the production deframer: a frame split across DATA frames yields
     // nothing until its last byte arrives; a stream that ends mid-frame is

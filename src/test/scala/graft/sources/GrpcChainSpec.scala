@@ -315,6 +315,106 @@ class GrpcChainSpec extends SparkSpec {
     } finally server.close()
   }
 
+  test("progress messages mid-stream hold no position: every seq once, bit-identical to the synthetic path") {
+    val gen = Map("totalBlocks" -> "30", "reorgEvery" -> "10",
+      "reorgDepth" -> "2", "finalityLag" -> "5", "numPartitions" -> "3")
+    // before the first seq of a partition, mid-partition, before an undo
+    val server = new GrpcChainServer(cfgOf(gen), progressAtSeqs = Set(0L, 4L, 10L, 17L, 29L))
+    try {
+      val wire = viaGrpc(gen, server.port).toJSON.collect().sorted
+      val synthetic = readBatch(gen).toJSON.collect().sorted
+      assert(wire.toSeq === synthetic.toSeq)
+      assert((0L until 30L).forall(s => server.served.get(s) == 1), "no seq re-served")
+      assert(server.calls.get() === 3, "a progress message forces no reopen")
+    } finally server.close()
+  }
+
+  test("a server fatal_error is fatal with its reason: exactly one call") {
+    val gen = Map("totalBlocks" -> "10", "numPartitions" -> "1", "maxRetries" -> "6")
+    val server = new GrpcChainServer(cfgOf(gen), fatalErrorAtSeqs = Map(4L -> "module panicked: boom"))
+    try {
+      val e = intercept[Exception] { viaGrpc(gen, server.port).count() }
+      def chain(t: Throwable): Seq[Throwable] =
+        Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10).toSeq
+      assert(chain(e).exists(_.isInstanceOf[Backoff.FatalException]), s"expected fatal, got $e")
+      val fatal = chain(e).collectFirst { case f: GrpcChain.ServerFatalErrorException => f }
+      assert(fatal.map(_.reason) === Some("module panicked: boom"), s"got $e")
+      assert(server.calls.get() === 1, s"fatal means one call, got ${server.calls.get()}")
+    } finally server.close()
+  }
+
+  private def streamViaGrpc(gen: Map[String, String], port: Int): (Seq[Long], Long) = {
+    val root = java.nio.file.Files.createTempDirectory("grpcpool").toString
+    var r = spark.readStream.format("graft.sources.ChainSource")
+    (gen ++ Map("fetcherClass" -> "graft.sources.GrpcBlockFetcher",
+      "endpoint" -> s"127.0.0.1:$port")).foreach { case (k, v) => r = r.option(k, v) }
+    val q = r.load().select(col("seq"))
+      .writeStream.format("parquet").option("path", s"$root/out")
+      .option("checkpointLocation", s"$root/ckpt").outputMode("append").start()
+    q.processAllAvailable(); q.stop()
+    (spark.read.parquet(s"$root/out").collect().map(_.getLong(0)).sorted.toSeq,
+      q.recentProgress.count(_.numInputRows > 0).toLong)
+  }
+
+  test("pooled fetcher: a streaming query holds ONE call over all its micro-batches") {
+    val gen = Map("totalBlocks" -> "1000", "endBlock" -> "42", "blocksPerTrigger" -> "7",
+      "numPartitions" -> "4")
+    val server = new GrpcChainServer(cfgOf(gen))
+    try {
+      val (seqs, batches) = streamViaGrpc(gen, server.port)
+      assert(seqs === (0L until 42L))
+      assert(batches === 6L)
+      assert(server.calls.get() === 1, s"one call for the stream, got ${server.calls.get()}")
+      assert(server.accepts.get() === 1, s"one connection, got ${server.accepts.get()}")
+      assert((0L until 42L).forall(s => server.served.get(s) == 1))
+    } finally server.close()
+  }
+
+  test("pooled fetcher: a connection killed between micro-batches resumes after the last consumed cursor") {
+    // batches [0,6) [6,12) [12,18) [18,24) [24,30); the server reads ahead
+    // and drops the connection as it comes to seq 18, the first of batch 4
+    val gen = Map("totalBlocks" -> "1000", "endBlock" -> "30", "blocksPerTrigger" -> "6",
+      "maxRetries" -> "4")
+    val server = new GrpcChainServer(cfgOf(gen), failOnceAtSeqs = Set(18L))
+    try {
+      val (seqs, batches) = streamViaGrpc(gen, server.port)
+      assert(seqs === (0L until 30L), "every seq served once")
+      assert(batches === 5L)
+      import scala.jdk.CollectionConverters._
+      assert(server.requestCursors.asScala.toSeq === Seq("", EnvelopeWire.mintCursor(17L)),
+        "the reopen returns the token of the last consumed message verbatim")
+      assert(server.resolvedStarts.asScala.toSeq.map(_.longValue) === Seq(0L, 18L))
+      assert(server.calls.get() === 2 && server.accepts.get() === 2)
+      assert(server.served.get(18L) === 2)
+    } finally server.close()
+  }
+
+  test("pooled fetcher: a reader whose fetch failed gives nothing back; its retry opens a new call") {
+    val gen = Map("totalBlocks" -> "20", "maxRetries" -> "1")
+    val server = new GrpcChainServer(cfgOf(gen), failOnceAtSeqs = Set(7L))
+    try {
+      val cfg = cfgOf(gen ++ Map("fetcherClass" -> "graft.sources.GrpcBlockFetcher",
+        "endpoint" -> s"127.0.0.1:${server.port}"))
+      def read(start: Long, end: Long): Seq[Long] = {
+        val r = new ChainReaderFactory(cfg)
+          .createReader(ChainInputPartition(start, end, cfg, pooled = true))
+        try Iterator.continually(r.next()).takeWhile(identity).map(_ => r.get().getLong(0)).toSeq
+        finally r.close()
+      }
+      assert(read(0, 5) === (0L until 5L))
+      // the same call continues at 5, then the connection drops at 7 and
+      // the one-attempt budget gives up
+      intercept[java.io.IOException](read(5, 10))
+      assert(read(5, 10) === (5L until 10L))
+      import scala.jdk.CollectionConverters._
+      // a new fetcher: cursorless at 5, where the failed one would have
+      // resumed after the token of 6
+      assert(server.requestCursors.asScala.toSeq === Seq("", ""))
+      assert(server.resolvedStarts.asScala.toSeq.map(_.longValue) === Seq(0L, 5L))
+      assert(server.calls.get() === 2)
+    } finally server.close()
+  }
+
   test("status taxonomy: ALL 17 grpc-status codes classify per the table, both directions") {
     // the drift-proof enumeration (r13 #9): every code 0..16 through the
     // REAL mapping the fetch loop throws from, asserted against the

@@ -11,8 +11,10 @@ import scala.jdk.CollectionConverters._
 
 import jdk.jfr.consumer.{RecordedEvent, RecordingStream}
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graftbridge.SessionBridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery,
@@ -166,6 +168,48 @@ class GraftStreamSpec extends SparkSpec {
     assert(rows.toSeq === Seq(1, 2, 3, 4, 5, 6), "each released block written exactly once")
     val cur = sink.loadCursor(spark)
     assert(cur.map(c => (c.blockNum, c.cursor)) === Some((6L, "c6")))
+  }
+
+  test("a startWith micro-batch over the chain runs in one stage: no exchange before the fold") {
+    implicit val enc = org.apache.spark.sql.Encoders.product[BlockMsg]
+    val msgs = spark.readStream.format("graft.sources.ChainSource")
+      .option("blocksPerTrigger", 10).option("totalBlocks", 50)
+      .option("finalityLag", 2).option("numPartitions", 4)
+      .load().as[BlockMsg]
+    val stages = new ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        stages.add((Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull,
+          e.stageInfos.size))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val released = new ConcurrentLinkedQueue[Long]()
+      val q = GraftStream.startWith(msgs,
+          Files.createTempDirectory("graftonestage").resolve("ckpt").toString) { (blocks, _) =>
+        blocks.collect().foreach(b => released.add(b.clock.number))
+      }
+      q.processAllAvailable()
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      q.stop()
+      // a job posted after the query: once the listener has seen it, it has
+      // seen all of the query's (one queue, in order)
+      sc.setJobGroup("marker", "marker")
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 10000
+      while (!stages.asScala.exists(_._1 == "marker") && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      assert(stages.asScala.exists(_._1 == "marker"))
+
+      val batches = q.recentProgress.filter(_.numInputRows > 0)
+      assert(batches.length === 5)
+      assert(batches.forall(_.stateOperators.head.numShufflePartitions == 1L))
+      val ofQuery = stages.asScala.toSeq.filter(_._1 == q.runId.toString).map(_._2)
+      assert(ofQuery === Seq.fill(5)(1), "one job of one stage per micro-batch")
+      assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty, plan.treeString)
+      assert(released.size > 40 && released.asScala.toSeq.distinct.size === released.size)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("no process is forked for checkpoint files after the first micro-batch") {
