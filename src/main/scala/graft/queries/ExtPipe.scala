@@ -122,7 +122,7 @@ private[graft] object ExtPipe {
 
     // The SAME flagship pipeline, but transported: every envelope travels
     // as real gRPC bytes over a TLS+ALPN-h2 loopback connection (one
-    // server-streamed call per partition, bearer auth, 5-byte gRPC message
+    // server-streamed call for the whole read, bearer auth, 5-byte gRPC message
     // framing) before the finality fold — the reference's actual operating
     // mode (`src/main.rs:194-235` over the tonic TLS channel,
     // `src/substreams.rs:33-50`). Same recursive-CTE oracle as

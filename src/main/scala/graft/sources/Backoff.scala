@@ -41,3 +41,9 @@ object Backoff {
     throw new IllegalStateException("unreachable")
   }
 }
+
+/** An error that a replay of the same request meets again: the reference's
+  * `Unauthenticated` status, a malformed frame (a desynced or hostile peer),
+  * a deterministic grpc-status, the server's `fatal_error`. The chain
+  * reader's [[Backoff.retry]] treats exactly these as fatal. */
+trait FatalSourceError { self: Throwable => }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
   * through this trait, so the deterministic in-sandbox generator
   * ([[SyntheticBlockFetcher]]) and the substreams gRPC client
   * ([[GrpcBlockFetcher]], one `sf.substreams.rpc.v2.Stream/Blocks` call per
-  * batch partition or per streaming query, `src/substreams.rs:26-50`) are
+  * batch read or per streaming query, `src/substreams.rs:26-50`) are
   * interchangeable readers. Both return the BlockMsg row that
   * [[EnvelopeWire.decodeResponse]] builds from a `Response`. Every
   * implementation honors the contract:
@@ -20,16 +20,17 @@ import org.apache.spark.sql.catalyst.InternalRow
   *    must be REPLAYABLE: a retried or restarted reader re-requests the same
   *    seq (the reference resumes from `latest_cursor`,
   *    `src/substreams_stream.rs:53-149`);
-  *  - auth failures throw [[UnauthenticatedException]] (fatal — [[Backoff]]
-  *    will not retry it); transient transport errors throw anything else
+  *  - errors a replay would meet again are [[FatalSourceError]]s, auth
+  *    failures [[UnauthenticatedException]] among them ([[Backoff]] will
+  *    not retry them); transient transport errors throw anything else
   *    (retried on the exponential schedule);
-  *  - a fetcher may serve consecutive micro-batches: a streaming reader
-  *    that served its whole range gives its fetcher back to
-  *    [[FetcherPool]], and the next micro-batch's reader continues with
-  *    `fetch` at the following seq, so a call should stay open between
-  *    fetches;
-  *  - `close()` releases the channel: at the end of a batch partition, after
-  *    a failed or stopped streaming reader, or when the pool drops it.
+  *  - one fetcher serves a whole read, from its first seq to the stop
+  *    bound: a batch read is one reader, and a streaming reader that served
+  *    its whole micro-batch gives its fetcher back to [[FetcherPool]], so
+  *    the next micro-batch's reader continues with `fetch` at the following
+  *    seq. A call should stay open between fetches;
+  *  - `close()` releases the channel: at the end of a batch read, after a
+  *    failed or stopped reader, or when the pool drops it.
   *
   * CURSOR SEMANTICS at this seam (advice r12; seam CLOSED in r14): the
   * SERVER mints an OPAQUE token per delivered message
@@ -51,12 +52,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 trait BlockFetcher extends AutoCloseable {
   /** The BlockMsg row of the message at cursor position `seq` (blocking). */
   def fetch(seq: Long): InternalRow
-  /** A batch partition's reader announces its `[start, end)` range before
-    * the first fetch. Streaming transports use it as the Request's
-    * `stop_block_num` so ONE server-streamed call covers exactly the
-    * partition (the reference's one-request-many-responses shape,
-    * `src/substreams_stream.rs:53-149`); the synthetic generator ignores it.
-    * A streaming reader announces nothing: its call runs to the stop bound. */
+  /** Never called: every read runs its call to the stop bound. Kept so
+    * that fetchers written against it still compile. */
   def hintRange(start: Long, end: Long): Unit = ()
   override def close(): Unit = ()
 }

@@ -33,15 +33,17 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `BlockResponse::New | Undo` (`src/substreams_stream.rs:21-24`). Finality
   * trails the head by `finalityLag` blocks (`final_block_height`).
   *
-  * Scale: a streaming read serves each micro-batch in ONE input partition,
-  * from a fetcher that a per-executor pool ([[FetcherPool]]) keeps across
-  * micro-batches, so a query holds one long-lived call and reopens it only
-  * on error — the reference's one stream per run
+  * Scale: every read, batch or streaming, serves its range (a batch read's
+  * whole `[startBlock, stopBound)`, or one micro-batch) in ONE input
+  * partition, from a fetcher that a per-executor pool ([[FetcherPool]])
+  * keeps across micro-batches, so a query holds one long-lived call and
+  * reopens it only on error — the reference's one stream per run
   * (`src/substreams_stream.rs:53-149`). The call runs open-ended to the
   * stop bound; messages not yet read wait in the HTTP/2 flow-control
-  * window, which is the read-ahead. The finality fold then runs in the
-  * reader's task ([[graft.streaming.GraftStream.startWith]]). A batch read
-  * splits its range across `numPartitions` readers. Rate limiting =
+  * window, which is the read-ahead. The chain is one ordered stream that
+  * every consumer folds under one key, so parallel readers would only add
+  * an exchange; the finality fold runs in the reader's task
+  * ([[graft.streaming.GraftStream.startWith]]). Rate limiting =
   * `blocksPerTrigger` (the maxOffsetsPerTrigger analog; reference
   * backpressure is the async await, O3/§4).
   *
@@ -112,7 +114,7 @@ object ChainSource {
       StructField("lastValidCursor", StringType))), nullable = true)))
 
   final case class Config(blocksPerTrigger: Long, totalBlocks: Long,
-      reorgEvery: Long, reorgDepth: Long, finalityLag: Long, numPartitions: Int,
+      reorgEvery: Long, reorgDepth: Long, finalityLag: Long,
       token: String, requireAuth: Boolean, failEvery: Long, maxRetries: Int,
       connectTimeoutMs: Long, keepaliveMs: Long, fetcherClass: String,
       startBlock: Long, endBlock: Long, endpoint: String,
@@ -140,8 +142,6 @@ object ChainSource {
     reorgEvery = o.getLong("reorgEvery", 0L),
     reorgDepth = o.getLong("reorgDepth", 2L),
     finalityLag = o.getLong("finalityLag", 12L),
-    // readers per BATCH read; a streaming micro-batch is always one reader
-    numPartitions = o.getInt("numPartitions", 4),
     token = resolveToken(o),
     // the synthetic server's stance: demand a bearer token like the real one
     requireAuth = o.getBoolean("requireAuth", false),
@@ -235,7 +235,7 @@ class ChainScan(cfg: ChainSource.Config) extends Scan {
     new ChainMicroBatchStream(cfg)
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] =
-      ChainMicroBatchStream.partitionRange(cfg.startBlock, cfg.stopBound, cfg)
+      ChainMicroBatchStream.partitions(cfg.startBlock, cfg.stopBound, cfg)
     override def createReaderFactory(): PartitionReaderFactory = new ChainReaderFactory(cfg)
   }
 }
@@ -245,22 +245,17 @@ case class ChainOffset(seq: Long) extends Offset {
   override def json(): String = seq.toString
 }
 
-/** Messages `[start, end)`. A `pooled` partition (a streaming micro-batch)
-  * borrows its fetcher from [[FetcherPool]] and gives it back at `end`; a
-  * batch partition builds its own and bounds its call to the range. */
-case class ChainInputPartition(start: Long, end: Long, cfg: ChainSource.Config,
-    pooled: Boolean = false) extends InputPartition
+/** Messages `[start, end)`: a batch read's whole range or one micro-batch.
+  * Its reader borrows its fetcher from [[FetcherPool]] and gives it back at
+  * `end` when the stream goes on past it. */
+case class ChainInputPartition(start: Long, end: Long, cfg: ChainSource.Config)
+  extends InputPartition
 
 object ChainMicroBatchStream {
-  /** A batch read's `numPartitions` readers over `[start, end)`. */
-  def partitionRange(start: Long, end: Long, cfg: ChainSource.Config): Array[InputPartition] = {
-    val n = math.max(1, math.min(cfg.numPartitions.toLong, end - start)).toInt
-    val step = math.ceil((end - start).toDouble / n).toLong
-    (0 until n).map { i =>
-      val s = start + i * step
-      ChainInputPartition(s, math.min(s + step, end), cfg): InputPartition
-    }.filter { case p: ChainInputPartition => p.start < p.end }.toArray
-  }
+  /** The one reader over `[start, end)`, or none for an empty range (see
+    * "Scale:" on [[ChainSource]]). */
+  def partitions(start: Long, end: Long, cfg: ChainSource.Config): Array[InputPartition] =
+    if (start < end) Array(ChainInputPartition(start, end, cfg)) else Array.empty
 }
 
 class ChainMicroBatchStream(cfg: ChainSource.Config)
@@ -292,18 +287,16 @@ class ChainMicroBatchStream(cfg: ChainSource.Config)
   override def deserializeOffset(json: String): Offset = ChainOffset(json.toLong)
   override def commit(end: Offset): Unit = () // nothing external to ack
   override def stop(): Unit = ()
-  /** One reader per micro-batch: the chain is one ordered stream, folded in
-    * one state partition, so parallel readers would only add an exchange. */
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val (s, e) = (start.asInstanceOf[ChainOffset].seq, end.asInstanceOf[ChainOffset].seq)
-    if (s < e) Array(ChainInputPartition(s, e, cfg, pooled = true)) else Array.empty
-  }
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    ChainMicroBatchStream.partitions(
+      start.asInstanceOf[ChainOffset].seq, end.asInstanceOf[ChainOffset].seq, cfg)
   override def createReaderFactory(): PartitionReaderFactory = new ChainReaderFactory(cfg)
 }
 
 /** Signals the reference's fatal `Unauthenticated` gRPC status — [[Backoff]]
   * treats it as non-retryable (`src/substreams_stream.rs:116-118`). */
 final class UnauthenticatedException(msg: String) extends RuntimeException(msg)
+  with FatalSourceError
 
 class ChainReaderFactory(cfg: ChainSource.Config) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
@@ -312,45 +305,33 @@ class ChainReaderFactory(cfg: ChainSource.Config) extends PartitionReaderFactory
       private var seq = p.start - 1
       private var current: InternalRow = _
       // the transport seam: synthetic generator by default, a real gRPC
-      // client via the fetcherClass option — built or borrowed HERE,
+      // client via the fetcherClass option — borrowed or built HERE,
       // executor-side
-      private val fetcher =
-        if (p.pooled) FetcherPool.borrow(p.cfg, p.start)
-        else {
-          val f = BlockFetcher.create(p.cfg)
-          f.hintRange(p.start, p.end) // a batch partition bounds its call
-          f
-        }
+      private val fetcher = FetcherPool.borrow(p.cfg, p.start)
 
       override def next(): Boolean = {
         seq += 1
         if (seq >= p.end) false
         else {
-          // fatal: auth rejection (reference Unauthenticated), the server's
-          // fatal_error, AND malformed frames (a desynced/hostile peer —
-          // retrying would storm it)
           current = Backoff.retry(p.cfg.maxRetries,
-            isFatal = e => e.isInstanceOf[UnauthenticatedException] ||
-              e.isInstanceOf[EnvelopeWire.MalformedFrameException] ||
-              e.isInstanceOf[GrpcChain.NonRetryableStatusException] ||
-              e.isInstanceOf[GrpcChain.ServerFatalErrorException])(() => fetcher.fetch(seq))
+            isFatal = _.isInstanceOf[FatalSourceError])(() => fetcher.fetch(seq))
           true
         }
       }
       override def get(): InternalRow = current
       /** Only a reader that served its whole range gives its fetcher back,
-        * and only if the stream goes on past it; after a failure or an early
-        * stop the fetcher's position is unknown, so it is closed and a retry
-        * opens a new call. */
+        * and only if the stream goes on past it (a batch read ends at the
+        * stop bound); after a failure or an early stop the fetcher's
+        * position is unknown, so it is closed and a retry opens a new call. */
       override def close(): Unit =
-        if (p.pooled && seq >= p.end && p.end < p.cfg.stopBound)
+        if (seq >= p.end && p.end < p.cfg.stopBound)
           FetcherPool.giveBack(p.cfg, p.end, fetcher)
         else fetcher.close()
     }
   }
 }
 
-/** The per-executor pool of streaming fetchers, so that one call serves
+/** The per-executor pool of chain fetchers, so that one call serves
   * consecutive micro-batches — the way Spark's Kafka source pools its
   * consumers. One slot per [[ChainSource.Config]], holding the fetcher whose
   * call stands at the next seq to read; a reader that starts there takes it

@@ -133,7 +133,7 @@ object EnvelopeWire {
   /** A frame that parsed as bytes but not as protocol — fatal, never
     * retried (VERDICT r11 #2: malformed-frame must not retry-storm). */
   final class MalformedFrameException(msg: String, cause: Throwable = null)
-    extends RuntimeException(msg, cause)
+    extends RuntimeException(msg, cause) with FatalSourceError
 
   // ---- Request -------------------------------------------------------------
 

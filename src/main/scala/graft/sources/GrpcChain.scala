@@ -5,12 +5,14 @@ import java.nio.charset.StandardCharsets
 import java.util.concurrent.{ConcurrentHashMap, LinkedBlockingQueue, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
+import jdk.net.ExtendedSocketOptions
+
 import io.netty.bootstrap.{Bootstrap, ServerBootstrap}
 import io.netty.buffer.{ByteBuf, Unpooled}
 import io.netty.channel.{Channel, ChannelHandler, ChannelHandlerContext, ChannelInboundHandlerAdapter, ChannelInitializer}
 import io.netty.channel.nio.NioEventLoopGroup
 import io.netty.channel.socket.SocketChannel
-import io.netty.channel.socket.nio.{NioServerSocketChannel, NioSocketChannel}
+import io.netty.channel.socket.nio.{NioChannelOption, NioServerSocketChannel, NioSocketChannel}
 import io.netty.handler.codec.http2.{DefaultHttp2DataFrame, DefaultHttp2Headers, DefaultHttp2HeadersFrame, Http2DataFrame, Http2FrameCodecBuilder, Http2HeadersFrame, Http2MultiplexHandler, Http2StreamChannel, Http2StreamChannelBootstrap}
 import io.netty.handler.ssl.{ApplicationProtocolConfig, ApplicationProtocolNames, ApplicationProtocolNegotiationHandler, SslContext, SslContextBuilder, SslHandler, SslProvider}
 import io.netty.handler.ssl.util.InsecureTrustManagerFactory
@@ -107,10 +109,9 @@ object GrpcChain {
   }
 
   /** One event-loop group per EXECUTOR, shared by every fetcher (daemon
-    * threads, never torn down): a batch read builds a fetcher per
-    * partition, a streaming query one per call it opens (its first and
-    * each reconnect), and a per-fetcher group would churn a thread +
-    * selector each time (review r12 finding). */
+    * threads, never torn down): a read builds a fetcher per call it opens
+    * (its first and each reconnect), and a per-fetcher group would churn a
+    * thread + selector each time (review r12 finding). */
   lazy val sharedGroup: NioEventLoopGroup = new NioEventLoopGroup(2,
     new io.netty.util.concurrent.DefaultThreadFactory("graft-grpc-client", true))
 
@@ -127,11 +128,13 @@ object GrpcChain {
     * [[RetryableStatuses]]) — [[Backoff]] treats it as fatal. */
   final class NonRetryableStatusException(val code: Int, message: String)
     extends RuntimeException(s"grpc-status $code (non-retryable): $message")
+    with FatalSourceError
 
   /** The server's `Response{fatal_error}`: it gave up on the request, so a
     * replay would fail the same way — [[Backoff]] treats it as fatal. */
   final class ServerFatalErrorException(val module: String, val reason: String)
     extends RuntimeException(s"server fatal_error in module '$module': $reason")
+    with FatalSourceError
 
   /** The WHOLE status taxonomy in one function (r13 #9: table-enumerated
     * over all 17 codes in GrpcChainSpec so it can't drift):
@@ -276,8 +279,8 @@ final class GrpcChainServer(cfg: ChainSource.Config,
   import GrpcChain._
 
   val accepts = new AtomicInteger(0)
-  /** Streams (gRPC calls) opened — on a clean read, one per batch-read
-    * partition, or one for a whole streaming query. */
+  /** Streams (gRPC calls) opened — on a clean read, one for a whole batch
+    * read or a whole streaming query, plus one per reconnect. */
   val calls = new AtomicInteger(0)
   val served = new ConcurrentHashMap[Long, Integer]()
   /** Raw `start_cursor` per Request in arrival order ("" = cursorless) —
@@ -479,9 +482,12 @@ final class GrpcChainServer(cfg: ChainSource.Config,
 
 /** gRPC client half of the transport, selected with
   * `.option("fetcherClass", "graft.sources.GrpcBlockFetcher")` — the
-  * drop-in the `fetcherClass` seam was built for. One gRPC call serves a
-  * batch partition's whole range, or — kept in [[FetcherPool]] between
-  * micro-batches — a streaming query's whole run: `fetch(seq)` consumes the
+  * drop-in the `fetcherClass` seam was built for. One gRPC call, open-ended
+  * to the stop bound, serves a batch read's whole range, or — kept in
+  * [[FetcherPool]] between micro-batches — a streaming query's whole run.
+  * With `keepaliveMs` > 0 the connection sends TCP keepalive probes after
+  * that long idle (whole seconds, rounded up), the reference's
+  * `tcp_keepalive` (`src/substreams.rs:40-41`). `fetch(seq)` consumes the
   * next server-stream message and returns the row
   * [[EnvelopeWire.decodeResponse]] builds from its bytes — any
   * `DatabaseChanges` the module emits, not only the fixture's — and only a
@@ -505,9 +511,6 @@ final class GrpcBlockFetcher(cfg: ChainSource.Config) extends BlockFetcher {
   private var queue: LinkedBlockingQueue[Event] = _
   private var nextSeq: Long = -1L
   private var sessionSeen = false
-  // a batch partition's range end (hintRange); a streaming call is
-  // open-ended to stopBound
-  private var rangeEnd: Long = cfg.stopBound
   // the server-minted opaque cursor of the last CONSUMED message, stored
   // VERBATIM (never parsed) — what a reopen returns so the server resumes
   // AFTER it (reference src/substreams_stream.rs:98-110). lastCursorSeq is
@@ -515,18 +518,20 @@ final class GrpcBlockFetcher(cfg: ChainSource.Config) extends BlockFetcher {
   private var lastCursor: String = ""
   private var lastCursorSeq: Long = Long.MinValue
 
-  override def hintRange(start: Long, end: Long): Unit =
-    rangeEnd = math.min(end, cfg.stopBound)
-
   private def connect(): Unit = {
     val b = new Bootstrap()
       .group(GrpcChain.sharedGroup) // per-executor, daemon — no churn
       .channel(classOf[NioSocketChannel])
       .handler(new ChannelInitializer[SocketChannel] {
         override def initChannel(ch: SocketChannel): Unit = {
-          if (cfg.keepaliveMs > 0)
+          if (cfg.keepaliveMs > 0) {
             ch.config().setOption(io.netty.channel.ChannelOption.SO_KEEPALIVE,
               java.lang.Boolean.TRUE)
+            // without it the first probe waits for the OS idle time
+            // (net.ipv4.tcp_keepalive_time, 7200 s by default on Linux)
+            ch.config().setOption(NioChannelOption.of(ExtendedSocketOptions.TCP_KEEPIDLE),
+              Integer.valueOf(math.ceil(cfg.keepaliveMs / 1000.0).toInt))
+          }
           // with TLS the codec sits BEHIND the SslHandler: its connection
           // preface is queued by the handler until the handshake completes,
           // then travels inside TLS records — tonic's exact layering
@@ -632,7 +637,7 @@ final class GrpcBlockFetcher(cfg: ChainSource.Config) extends BlockFetcher {
     val resumeCursor = if (lastCursorSeq == seq - 1 && lastCursor.nonEmpty) lastCursor else ""
     s.writeAndFlush(new DefaultHttp2DataFrame(
       grpcFrame(EnvelopeWire.encodeRequestRange(
-        seq, rangeEnd, resumeCursor, "graft_out")), true))
+        seq, cfg.stopBound, resumeCursor, "graft_out")), true))
     stream = s; queue = q; nextSeq = seq; sessionSeen = false
   }
 
@@ -704,18 +709,17 @@ final class GrpcBlockFetcher(cfg: ChainSource.Config) extends BlockFetcher {
       }
       throw new IllegalStateException("unreachable")
     } catch {
-      // malformed/auth/deterministic-status fatal, IO retryable, nothing
-      // may leave the stream desynced for the next fetch
-      case e: EnvelopeWire.MalformedFrameException => teardownConn(); throw e
-      case e: UnauthenticatedException => teardownConn(); throw e
-      case e: GrpcChain.NonRetryableStatusException => teardownConn(); throw e
-      case e: GrpcChain.ServerFatalErrorException => teardownConn(); throw e
-      case e: java.io.IOException => teardownConn(); throw e
+      // fatal or retryable, nothing may leave the stream desynced for the
+      // next fetch
+      case e @ (_: FatalSourceError | _: java.io.IOException) => teardownConn(); throw e
       case scala.util.control.NonFatal(e) =>
         teardownConn()
         throw new java.io.IOException(s"transport failure at seq $seq", e)
     }
   }
+
+  /** The connection's channel (null before the first fetch), for tests. */
+  private[sources] def channel: Channel = conn
 
   override def close(): Unit =
     teardownConn() // the event-loop group is shared and daemon — never torn down

@@ -7,9 +7,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One implementation per mechanism in `src/main`: one networked chain
-  * transport beside the synthetic generator, one protobuf varint reader,
-  * one builder of source rows and one finality operator. A second copy
-  * growing back fails here. */
+  * transport beside the synthetic generator, one chain reader per read,
+  * one protobuf varint reader, one builder of source rows and one finality
+  * operator. A second copy growing back fails here. */
 class SingleImplementationSpec extends AnyFunSuite {
 
   /** `src/main/scala`'s Scala sources, relative path → text. */
@@ -44,6 +44,15 @@ class SingleImplementationSpec extends AnyFunSuite {
     assert(builders.contains("graft/sources/EnvelopeWire.scala"))
     for (file <- Seq("ChainSource.scala", "GrpcChain.scala", "BlockFetcher.scala"))
       assert(!builders.contains(s"graft/sources/$file"), s"$file builds rows")
+  }
+
+  test("a chain read is one reader: no numPartitions, and hintRange is only declared") {
+    assert(mainSources.collect { case (file, text) if text.contains("numPartitions") => file } === Nil)
+    val hintRange = """(def\s+)?hintRange\(""".r
+    val uses = mainSources.flatMap { case (file, text) =>
+      hintRange.findAllMatchIn(text).map(m => (file, m.group(1) != null)).toSeq
+    }
+    assert(uses === Seq(("graft/sources/BlockFetcher.scala", true)))
   }
 
   test("streaming/StreamingFinality.scala holds one flatMapGroupsWithState") {

@@ -100,13 +100,13 @@ class ChainSourceSpec extends SparkSpec {
   test("O1 transport seam: a custom BlockFetcher class drops in via one option") {
     CountingTestFetcher.reset()
     val df = spark.read.format("graft.sources.ChainSource")
-      .option("totalBlocks", 12).option("numPartitions", 3)
+      .option("totalBlocks", 12)
       .option("fetcherClass", "graft.sources.CountingTestFetcher")
       .load()
     assert(df.count() === 12)
-    assert(CountingTestFetcher.created.get() === 3, "one fetcher per partition reader")
+    assert(CountingTestFetcher.created.get() === 1, "one fetcher for the read")
     assert(CountingTestFetcher.fetches.get() === 12, "every seq goes through the seam")
-    assert(CountingTestFetcher.closes.get() === 3, "channel released per partition")
+    assert(CountingTestFetcher.closes.get() === 1, "channel released at the stop bound")
     // the default (no option) routes through the synthetic implementation
     assert(BlockFetcher.create(ChainSource.config(
       new org.apache.spark.sql.util.CaseInsensitiveStringMap(java.util.Map.of())))
@@ -117,7 +117,7 @@ class ChainSourceSpec extends SparkSpec {
     CountingTestFetcher.reset()
     val root = Files.createTempDirectory("chainpool").toString
     // a read timeout far past the suite, so this fetcher stays parked
-    val q = read(50, extra = Map("blocksPerTrigger" -> "8", "numPartitions" -> "3",
+    val q = read(50, extra = Map("blocksPerTrigger" -> "8",
         "readTimeoutMs" -> "3600000", "fetcherClass" -> "graft.sources.CountingTestFetcher"))
       .select(col("seq"))
       .writeStream.format("parquet").option("path", s"$root/out")
@@ -137,7 +137,7 @@ class ChainSourceSpec extends SparkSpec {
         "fetcherClass", "graft.sources.CountingTestFetcher")))
     def read(start: Long, end: Long): Unit = {
       val r = new ChainReaderFactory(cfg)
-        .createReader(ChainInputPartition(start, end, cfg, pooled = true))
+        .createReader(ChainInputPartition(start, end, cfg))
       try while (r.next()) r.get() finally r.close()
     }
     read(0, 5); read(5, 10)
@@ -173,6 +173,18 @@ class ChainSourceSpec extends SparkSpec {
     val hs = released.map(_._1).sorted
     assert(hs.headOption.contains(0L))
     assert(hs.toSeq === (hs.head to hs.last))
+  }
+
+  test("a batch read plans ONE input partition over its whole range, an empty range none") {
+    def cfg(start: Long, end: Long) = ChainSource.config(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Map.of("startBlock", start.toString, "endBlock", end.toString)))
+    def planned(start: Long, end: Long) =
+      new ChainScan(cfg(start, end)).toBatch.planInputPartitions().toSeq
+    assert(planned(35, 150) === Seq(ChainInputPartition(35, 150, cfg(35, 150))))
+    assert(planned(150, 150).isEmpty && planned(150, 35).isEmpty)
+    val df = readBatch(Map("startBlock" -> "35", "endBlock" -> "150"))
+    assert(df.rdd.getNumPartitions === 1)
+    assert(df.select("seq").collect().map(_.getLong(0)).toSeq === (35L until 150L))
   }
 
   test("startBlock/endBlock: batch read covers exactly [startBlock, endBlock)") {

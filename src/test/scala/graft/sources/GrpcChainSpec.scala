@@ -31,7 +31,7 @@ class GrpcChainSpec extends SparkSpec {
 
   test("gRPC transport: server-streamed envelopes are bit-identical to the synthetic path") {
     val gen = Map("totalBlocks" -> "30", "reorgEvery" -> "10",
-      "reorgDepth" -> "2", "finalityLag" -> "5", "numPartitions" -> "3")
+      "reorgDepth" -> "2", "finalityLag" -> "5")
     val server = new GrpcChainServer(cfgOf(gen))
     try {
       val wire = viaGrpc(gen, server.port).toJSON.collect().sorted
@@ -39,15 +39,15 @@ class GrpcChainSpec extends SparkSpec {
       assert(wire.length === 30)
       assert(wire.toSeq === synthetic.toSeq,
         "gRPC-parsed envelopes must encode identically to locally generated ones")
-      // the REAL call shape: ONE gRPC call per partition serves its whole
-      // range — not a per-seq RPC
-      assert(server.calls.get() === 3,
-        s"expected one server-streamed call per partition, got ${server.calls.get()}")
+      // the REAL call shape: ONE gRPC call serves the whole range — not a
+      // per-seq RPC
+      assert(server.calls.get() === 1,
+        s"expected one server-streamed call, got ${server.calls.get()}")
     } finally server.close()
   }
 
   test("gRPC transport: a mid-stream connection kill is survived by reconnect + cursor resume") {
-    val gen = Map("totalBlocks" -> "30", "numPartitions" -> "2", "maxRetries" -> "4")
+    val gen = Map("totalBlocks" -> "30", "maxRetries" -> "4")
     val server = new GrpcChainServer(cfgOf(gen), failOnceAtSeqs = Set(13L))
     try {
       val df = viaGrpc(gen, server.port)
@@ -55,15 +55,15 @@ class GrpcChainSpec extends SparkSpec {
         "nothing lost or duplicated across the connection kill")
       assert(server.served.get(13L) === 2,
         "the dropped seq must be re-requested by the resumed call")
-      assert(server.calls.get() >= 3,
-        "the drop must have forced a new call beyond the per-partition ones")
-      assert(server.accepts.get() >= 3,
-        "the drop must have forced a reconnect beyond the per-partition connections")
+      assert(server.calls.get() >= 2,
+        "the drop must have forced a new call beyond the first")
+      assert(server.accepts.get() >= 2,
+        "the drop must have forced a reconnect beyond the first connection")
     } finally server.close()
   }
 
   test("cursor seam (VERDICT r13 #2): reconnect returns the server-minted token VERBATIM and resumes AFTER it") {
-    val gen = Map("totalBlocks" -> "20", "numPartitions" -> "1", "maxRetries" -> "4")
+    val gen = Map("totalBlocks" -> "20", "maxRetries" -> "4")
     val server = new GrpcChainServer(cfgOf(gen), failOnceAtSeqs = Set(7L))
     try {
       val seqs = viaGrpc(gen, server.port).select("seq").collect().map(_.getLong(0)).sorted
@@ -89,7 +89,7 @@ class GrpcChainSpec extends SparkSpec {
     // undo at seq 20 (reorgEvery=10 with seq>0); kill when 21 is served, so
     // the reconnect's stored token is the UNDO's server-minted
     // last_valid_cursor — the lastValidCursor branch of the fetcher
-    val gen = Map("totalBlocks" -> "30", "numPartitions" -> "1",
+    val gen = Map("totalBlocks" -> "30",
       "reorgEvery" -> "10", "reorgDepth" -> "2", "finalityLag" -> "5",
       "maxRetries" -> "4")
     val server = new GrpcChainServer(cfgOf(gen), failOnceAtSeqs = Set(21L))
@@ -119,10 +119,10 @@ class GrpcChainSpec extends SparkSpec {
       assert(chain(e).exists(_.isInstanceOf[UnauthenticatedException]),
         s"expected UNAUTHENTICATED to surface, got $e")
       assert(chain(e).exists(_.isInstanceOf[Backoff.FatalException]))
-      assert(server.calls.get() <= cfgOf(gen).numPartitions + 1,
-        "fatal auth means at most one call per partition reader")
-      assert(server.accepts.get() <= cfgOf(gen).numPartitions + 1,
-        "fatal auth means at most one connection per partition reader")
+      assert(server.calls.get() <= 2,
+        "fatal auth means at most one call per reader")
+      assert(server.accepts.get() <= 2,
+        "fatal auth means at most one connection per reader")
     } finally server.close()
   }
 
@@ -134,7 +134,7 @@ class GrpcChainSpec extends SparkSpec {
   }
 
   test("gRPC transport: an undecodable response message is FATAL — exactly one serve") {
-    val gen = Map("totalBlocks" -> "10", "numPartitions" -> "1", "maxRetries" -> "6")
+    val gen = Map("totalBlocks" -> "10", "maxRetries" -> "6")
     val server = new GrpcChainServer(cfgOf(gen), garbageAtSeqs = Set(4L))
     try {
       val e = intercept[Exception] { viaGrpc(gen, server.port).count() }
@@ -152,7 +152,7 @@ class GrpcChainSpec extends SparkSpec {
   }
 
   test("gRPC transport: a deterministic non-retryable status (3 INVALID_ARGUMENT) is fatal, not retried") {
-    val gen = Map("totalBlocks" -> "10", "numPartitions" -> "1", "maxRetries" -> "6")
+    val gen = Map("totalBlocks" -> "10", "maxRetries" -> "6")
     val server = new GrpcChainServer(cfgOf(gen), statusAtSeqs = Map(4L -> 3))
     try {
       val e = intercept[Exception] { viaGrpc(gen, server.port).count() }
@@ -167,7 +167,7 @@ class GrpcChainSpec extends SparkSpec {
   }
 
   test("gRPC transport: a transient status (14 UNAVAILABLE) IS retried and the stream resumes") {
-    val gen = Map("totalBlocks" -> "10", "numPartitions" -> "1", "maxRetries" -> "4")
+    val gen = Map("totalBlocks" -> "10", "maxRetries" -> "4")
     // first call dies at seq 6 with UNAVAILABLE; the reopened call resumes
     // from cursor-6 — the server map keys on seq, so make the injection
     // one-shot via failOnce-style: statusAtSeqs fires every time the seq
@@ -190,7 +190,7 @@ class GrpcChainSpec extends SparkSpec {
   test("readTimeoutMs covers a healthy-but-quiet server; without it the connect timeout reconnect-cycles (advice r12)") {
     // server goes quiet for 1.2 s before seq 4 — longer than the 400 ms
     // connect timeout, well under the 5 s read deadline
-    val gen = Map("totalBlocks" -> "10", "numPartitions" -> "1",
+    val gen = Map("totalBlocks" -> "10",
       "connectTimeoutMs" -> "400", "readTimeoutMs" -> "5000", "maxRetries" -> "3")
     val quiet = new GrpcChainServer(cfgOf(gen), stallMsAtSeqs = Map(4L -> 1200L))
     try {
@@ -219,7 +219,7 @@ class GrpcChainSpec extends SparkSpec {
     "tlsTrustCertPath" -> GrpcChain.serverCertPem.getAbsolutePath)
 
   test("TLS trust: the self-signed fixture cert is REJECTED under default system-root trust") {
-    val gen = Map("totalBlocks" -> "5", "numPartitions" -> "1",
+    val gen = Map("totalBlocks" -> "5",
       "maxRetries" -> "2", "tls" -> "true") // no tlsTrustCertPath, no tlsInsecure
     val server = new GrpcChainServer(cfgOf(gen))
     try {
@@ -236,7 +236,7 @@ class GrpcChainSpec extends SparkSpec {
 
   test("TLS transport: envelopes over ALPN-negotiated h2 are bit-identical to the synthetic path") {
     val gen = Map("totalBlocks" -> "30", "reorgEvery" -> "10", "reorgDepth" -> "2",
-      "finalityLag" -> "5", "numPartitions" -> "3") ++ tlsOpts
+      "finalityLag" -> "5") ++ tlsOpts
     val server = new GrpcChainServer(cfgOf(gen))
     try {
       val wire = viaGrpc(gen, server.port).toJSON.collect().sorted
@@ -253,7 +253,7 @@ class GrpcChainSpec extends SparkSpec {
   }
 
   test("TLS transport: mid-stream connection kill is survived by TLS reconnect + cursor resume") {
-    val gen = Map("totalBlocks" -> "30", "numPartitions" -> "2",
+    val gen = Map("totalBlocks" -> "30",
       "maxRetries" -> "4") ++ tlsOpts
     val server = new GrpcChainServer(cfgOf(gen), failOnceAtSeqs = Set(13L))
     try {
@@ -262,7 +262,7 @@ class GrpcChainSpec extends SparkSpec {
         "nothing lost or duplicated across the TLS connection kill")
       assert(server.served.get(13L) === 2)
       import scala.jdk.CollectionConverters._
-      assert(server.alpnNegotiated.asScala.count(_ == "h2") >= 3,
+      assert(server.alpnNegotiated.asScala.count(_ == "h2") >= 2,
         "the reconnect must have re-run the TLS handshake + ALPN")
     } finally server.close()
   }
@@ -277,7 +277,7 @@ class GrpcChainSpec extends SparkSpec {
       def chain(t: Throwable): Seq[Throwable] =
         Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10).toSeq
       assert(chain(e).exists(_.isInstanceOf[UnauthenticatedException]))
-      assert(server.calls.get() <= cfgOf(gen).numPartitions + 1)
+      assert(server.calls.get() <= 2)
     } finally server.close()
   }
 
@@ -291,7 +291,7 @@ class GrpcChainSpec extends SparkSpec {
 
   test("gRPC streaming: checkpointed cursor survives a mid-run kill and a restart") {
     val gen = Map("totalBlocks" -> "1000", "startBlock" -> "0", "endBlock" -> "40",
-      "blocksPerTrigger" -> "9", "numPartitions" -> "2", "maxRetries" -> "4")
+      "blocksPerTrigger" -> "9", "maxRetries" -> "4")
     val server = new GrpcChainServer(cfgOf(gen), failOnceAtSeqs = Set(22L))
     try {
       val root = java.nio.file.Files.createTempDirectory("grpcchain").toString
@@ -317,20 +317,20 @@ class GrpcChainSpec extends SparkSpec {
 
   test("progress messages mid-stream hold no position: every seq once, bit-identical to the synthetic path") {
     val gen = Map("totalBlocks" -> "30", "reorgEvery" -> "10",
-      "reorgDepth" -> "2", "finalityLag" -> "5", "numPartitions" -> "3")
-    // before the first seq of a partition, mid-partition, before an undo
+      "reorgDepth" -> "2", "finalityLag" -> "5")
+    // before the first seq, mid-stream, before an undo
     val server = new GrpcChainServer(cfgOf(gen), progressAtSeqs = Set(0L, 4L, 10L, 17L, 29L))
     try {
       val wire = viaGrpc(gen, server.port).toJSON.collect().sorted
       val synthetic = readBatch(gen).toJSON.collect().sorted
       assert(wire.toSeq === synthetic.toSeq)
       assert((0L until 30L).forall(s => server.served.get(s) == 1), "no seq re-served")
-      assert(server.calls.get() === 3, "a progress message forces no reopen")
+      assert(server.calls.get() === 1, "a progress message forces no reopen")
     } finally server.close()
   }
 
   test("a server fatal_error is fatal with its reason: exactly one call") {
-    val gen = Map("totalBlocks" -> "10", "numPartitions" -> "1", "maxRetries" -> "6")
+    val gen = Map("totalBlocks" -> "10", "maxRetries" -> "6")
     val server = new GrpcChainServer(cfgOf(gen), fatalErrorAtSeqs = Map(4L -> "module panicked: boom"))
     try {
       val e = intercept[Exception] { viaGrpc(gen, server.port).count() }
@@ -357,8 +357,7 @@ class GrpcChainSpec extends SparkSpec {
   }
 
   test("pooled fetcher: a streaming query holds ONE call over all its micro-batches") {
-    val gen = Map("totalBlocks" -> "1000", "endBlock" -> "42", "blocksPerTrigger" -> "7",
-      "numPartitions" -> "4")
+    val gen = Map("totalBlocks" -> "1000", "endBlock" -> "42", "blocksPerTrigger" -> "7")
     val server = new GrpcChainServer(cfgOf(gen))
     try {
       val (seqs, batches) = streamViaGrpc(gen, server.port)
@@ -397,7 +396,7 @@ class GrpcChainSpec extends SparkSpec {
         "endpoint" -> s"127.0.0.1:${server.port}"))
       def read(start: Long, end: Long): Seq[Long] = {
         val r = new ChainReaderFactory(cfg)
-          .createReader(ChainInputPartition(start, end, cfg, pooled = true))
+          .createReader(ChainInputPartition(start, end, cfg))
         try Iterator.continually(r.next()).takeWhile(identity).map(_ => r.get().getLong(0)).toSeq
         finally r.close()
       }
@@ -412,6 +411,41 @@ class GrpcChainSpec extends SparkSpec {
       assert(server.requestCursors.asScala.toSeq === Seq("", ""))
       assert(server.resolvedStarts.asScala.toSeq.map(_.longValue) === Seq(0L, 5L))
       assert(server.calls.get() === 2)
+    } finally server.close()
+  }
+
+  test("a batch read is ONE call on one connection over its whole range") {
+    val gen = Map("totalBlocks" -> "1000", "startBlock" -> "35", "endBlock" -> "150")
+    val server = new GrpcChainServer(cfgOf(gen))
+    try {
+      val seqs = viaGrpc(gen, server.port).select("seq").collect().map(_.getLong(0)).toSeq
+      assert(seqs === (35L until 150L))
+      assert(server.calls.get() === 1, s"one call, got ${server.calls.get()}")
+      assert(server.accepts.get() === 1, s"one connection, got ${server.accepts.get()}")
+      import scala.jdk.CollectionConverters._
+      assert(server.resolvedStarts.asScala.toSeq.map(_.longValue) === Seq(35L))
+    } finally server.close()
+  }
+
+  test("keepaliveMs turns on TCP keepalive with that idle time in whole seconds; 0 turns it off") {
+    val gen = Map("totalBlocks" -> "5")
+    val server = new GrpcChainServer(cfgOf(gen))
+    // (SO_KEEPALIVE, TCP_KEEPIDLE) of the connection a fetch opens
+    def keepalive(keepaliveMs: String): (Boolean, Int) = {
+      val f = new GrpcBlockFetcher(cfgOf(gen ++ Map("keepaliveMs" -> keepaliveMs,
+        "endpoint" -> s"127.0.0.1:${server.port}")))
+      try {
+        f.fetch(0L)
+        val c = f.channel.config()
+        (c.getOption(io.netty.channel.ChannelOption.SO_KEEPALIVE).booleanValue,
+          c.getOption(io.netty.channel.socket.nio.NioChannelOption.of(
+            jdk.net.ExtendedSocketOptions.TCP_KEEPIDLE)).intValue)
+      } finally f.close()
+    }
+    try {
+      assert(keepalive("45000") === ((true, 45)))
+      assert(keepalive("44001")._2 === 45, "rounded up to whole seconds")
+      assert(!keepalive("0")._1)
     } finally server.close()
   }
 

@@ -174,7 +174,7 @@ class GraftStreamSpec extends SparkSpec {
     implicit val enc = org.apache.spark.sql.Encoders.product[BlockMsg]
     val msgs = spark.readStream.format("graft.sources.ChainSource")
       .option("blocksPerTrigger", 10).option("totalBlocks", 50)
-      .option("finalityLag", 2).option("numPartitions", 4)
+      .option("finalityLag", 2)
       .load().as[BlockMsg]
     val stages = new ConcurrentLinkedQueue[(String, Int)]()
     val listener = new SparkListener {
@@ -219,7 +219,7 @@ class GraftStreamSpec extends SparkSpec {
     implicit val enc = org.apache.spark.sql.Encoders.product[BlockMsg]
     val msgs = spark.readStream.format("graft.sources.ChainSource")
       .option("blocksPerTrigger", 10).option("totalBlocks", 30)
-      .option("finalityLag", 2).option("numPartitions", 1)
+      .option("finalityLag", 2)
       .load().as[BlockMsg]
     val released = new ConcurrentLinkedQueue[Long]()
 
@@ -320,7 +320,7 @@ class GraftStreamSpec extends SparkSpec {
     def chain(totalBlocks: Int): Dataset[BlockMsg] =
       spark.readStream.format("graft.sources.ChainSource")
         .option("blocksPerTrigger", 10).option("totalBlocks", totalBlocks)
-        .option("finalityLag", 2).option("numPartitions", 1)
+        .option("finalityLag", 2)
         .load().as[BlockMsg]
     def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     // (class loaders of the batch's tasks, classes compiled from the
@@ -357,7 +357,7 @@ class GraftStreamSpec extends SparkSpec {
     implicit val enc = org.apache.spark.sql.Encoders.product[BlockMsg]
     def chain: Dataset[BlockMsg] = spark.readStream.format("graft.sources.ChainSource")
       .option("blocksPerTrigger", 10).option("totalBlocks", 50)
-      .option("finalityLag", 2).option("numPartitions", 1)
+      .option("finalityLag", 2)
       .load().as[BlockMsg]
     val chainCatalog = Seq(ChTable("blocks", Seq(ChColumn("height", ChUInt64), ChColumn("fork", ChUInt32))))
     def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -451,7 +451,7 @@ class GraftStreamSpec extends SparkSpec {
     implicit val enc = org.apache.spark.sql.Encoders.product[BlockMsg]
     def chain = spark.readStream.format("graft.sources.ChainSource")
       .option("blocksPerTrigger", 10).option("totalBlocks", 50)
-      .option("finalityLag", 2).option("numPartitions", 1)
+      .option("finalityLag", 2)
       .load().as[BlockMsg]
     val chainCatalog = Seq(ChTable("blocks", Seq(ChColumn("height", ChUInt64), ChColumn("fork", ChUInt32))))
     def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -486,7 +486,7 @@ class GraftStreamSpec extends SparkSpec {
     def chain(totalBlocks: Int): Dataset[BlockMsg] =
       spark.readStream.format("graft.sources.ChainSource")
         .option("blocksPerTrigger", 10).option("totalBlocks", totalBlocks)
-        .option("finalityLag", 2).option("numPartitions", 1)
+        .option("finalityLag", 2)
         .load().as[BlockMsg]
     def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val ckpt = Files.createTempDirectory("graftbinrestart").resolve("ckpt").toString

@@ -27,7 +27,7 @@ class ProductionTopologySpec extends SparkSpec {
 
   private val gen = Map(
     "totalBlocks" -> "1000", "reorgEvery" -> "10", "reorgDepth" -> "2",
-    "finalityLag" -> "5", "blocksPerTrigger" -> "9", "numPartitions" -> "2",
+    "finalityLag" -> "5", "blocksPerTrigger" -> "9",
     "maxRetries" -> "4", "startBlock" -> "0")
 
   private def cfgOf(opts: Map[String, String]): ChainSource.Config = {
