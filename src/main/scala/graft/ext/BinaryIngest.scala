@@ -23,21 +23,18 @@ import org.apache.spark.sql.functions._
 object BinaryIngest {
 
   /** Fixture: one UTF-8 `doc_<id>.txt` per document (doc_id < `maxDocs`),
-    * written ON EXECUTORS into a content-keyed snapshot directory with the
-    * same atomic publish discipline as the media caches (writer-unique tmp
-    * dir + rename; `_SUCCESS` marks completeness). Returns the directory.
+    * written ON EXECUTORS into a content-keyed [[graft.Snapshot]]
+    * (writer-unique temp dir + atomic rename; `_SUCCESS` marks
+    * completeness). Returns the directory.
     *
     * `docs` must be the FULL documents frame of `sfDir` — the cache key is
     * the source file's identity, not the frame. Executor-side writes assume
     * the fixture directory is visible to every executor (true on local[*]
     * and on any shared-FS/DFS mount; a real blob store would use its own
     * writer here — the lane under test is the READ path). */
-  def textFilesCached(docs: DataFrame, sfDir: String, maxDocs: Int = 500): String = {
-    val path = cachePath(sfDir, maxDocs)
-    if (!new java.io.File(path + "/_SUCCESS").exists()) {
-      Multimodal.sweepOrphanTmpDirs(path)
-      val tmp = path + ".tmp-" + java.util.UUID.randomUUID().toString
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tmp))
+  def textFilesCached(docs: DataFrame, sfDir: String, maxDocs: Int = 500): String =
+    graft.Snapshot.cached(graft.Snapshot.path("graft_bintxt_", sfDir,
+        s"m${maxDocs}_v1", "documents.parquet")) { tmp =>
       docs.filter(col("doc_id") < maxDocs)
         .select(col("doc_id").cast("long"), col("text"))
         .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
@@ -47,12 +44,7 @@ object BinaryIngest {
               r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
           }
         }
-      java.nio.file.Files.write(java.nio.file.Paths.get(tmp, "_SUCCESS"),
-        Array.empty[Byte])
-      Multimodal.publishSnapshot(tmp, path)
     }
-    path
-  }
 
   /** The manifest/checksum pass over a directory of blobs: binaryFile scan
     * -> (doc_id parsed from the file name, byte length, md5 of the content).
@@ -78,12 +70,9 @@ object BinaryIngest {
     * replays from the generation rule. Same content-keyed atomic-publish
     * discipline as [[textFilesCached]]; one CSV part-file per partition
     * (the CSV source reads the directory). */
-  def csvFixtureCached(docs: DataFrame, sfDir: String, maxDocs: Int = 500): String = {
-    val path = csvCachePath(sfDir, maxDocs)
-    if (!new java.io.File(path + "/_SUCCESS").exists()) {
-      Multimodal.sweepOrphanTmpDirs(path)
-      val tmp = path + ".tmp-" + java.util.UUID.randomUUID().toString
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tmp))
+  def csvFixtureCached(docs: DataFrame, sfDir: String, maxDocs: Int = 500): String =
+    graft.Snapshot.cached(graft.Snapshot.path("graft_csvperm_", sfDir,
+        s"m${maxDocs}_v1", "documents.parquet")) { tmp =>
       docs.filter(col("doc_id") < maxDocs)
         .select(col("doc_id").cast("long"), col("lang"), col("n_chars").cast("long"))
         .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
@@ -104,12 +93,7 @@ object BinaryIngest {
           }
           ()
         }
-      java.nio.file.Files.write(java.nio.file.Paths.get(tmp, "_SUCCESS"),
-        Array.empty[Byte])
-      Multimodal.publishSnapshot(tmp, path)
     }
-    path
-  }
 
   /** PERMISSIVE CSV ingestion stats: schema-enforced read where malformed
     * rows land in `_corrupt_record` instead of failing the job — the
@@ -130,19 +114,5 @@ object BinaryIngest {
         count(col("_corrupt_record")).as("n_corrupt"),
         (count(lit(1)) - count(col("_corrupt_record"))).as("n_good"),
         sum(when(col("_corrupt_record").isNull, col("n_chars"))).as("sum_chars_good"))
-  }
-
-  private def csvCachePath(sfDir: String, maxDocs: Int): String = {
-    val src = new java.io.File(sfDir + "/documents.parquet")
-    System.getProperty("java.io.tmpdir") + "/graft_csvperm_" +
-      (sfDir + "_" + src.length + "_" + src.lastModified + "_m" + maxDocs + "_v1")
-        .replaceAll("[^A-Za-z0-9]", "_")
-  }
-
-  private def cachePath(sfDir: String, maxDocs: Int): String = {
-    val src = new java.io.File(sfDir + "/documents.parquet")
-    System.getProperty("java.io.tmpdir") + "/graft_bintxt_" +
-      (sfDir + "_" + src.length + "_" + src.lastModified + "_m" + maxDocs + "_v1")
-        .replaceAll("[^A-Za-z0-9]", "_")
   }
 }

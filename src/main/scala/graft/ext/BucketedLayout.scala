@@ -39,24 +39,13 @@ object BucketedLayout {
     * long after ensure() returned. */
   val SortedScanConf = "spark.sql.legacy.bucketedTableScan.outputOrdering"
 
-  /** Content key for a fixture that may be a single parquet FILE or a
-    * DIRECTORY of part files: total data-file length + max mtime over the
-    * files (directory-level length/mtime are filesystem-dependent, and an
-    * in-place part rewrite doesn't always bump the dir mtime). */
-  private def contentKey(src: java.io.File): String =
-    if (src.isDirectory) {
-      val parts = Option(src.listFiles()).map(_.toSeq).getOrElse(Nil)
-        .filter(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
-      s"${parts.map(_.length).sum}_${parts.map(_.lastModified).foldLeft(0L)(math.max)}"
-    } else s"${src.length}_${src.lastModified}"
-
   /** Ensure a bucketed+sorted managed twin of `dir/table.parquet` exists in
     * this session's catalog and return its table name. Content-keyed on the
-    * source's data files (aggregate length + max mtime — see [[contentKey]])
-    * so a regenerated fixture gets a fresh twin; idempotent per session
-    * (the catalog check), and `overwrite` handles stale warehouse
-    * directories left by earlier sessions (the in-memory catalog does not
-    * persist across sessions, the files do). Requires [[SortedScanConf]]
+    * source's data files (aggregate length + max mtime — see
+    * [[graft.Snapshot.contentKey]]) so a regenerated fixture gets a fresh
+    * twin; idempotent per session (the catalog check), and `overwrite`
+    * handles stale warehouse directories left by earlier sessions (the
+    * in-memory catalog does not persist across sessions, the files do). Requires [[SortedScanConf]]
     * to be set at session build for the zero-sort plan; an unset session
     * still gets correct results, just with a sort below the join (warned).
     */
@@ -69,7 +58,7 @@ object BucketedLayout {
         "below the SMJ — set it in the session builder (session invariant)")
     val src = new java.io.File(s"$dir/$table.parquet")
     val name = (s"graft_bkt_${table}_${nBuckets}_${key}_" +
-      s"${dir}_${contentKey(src)}")
+      s"${dir}_${graft.Snapshot.contentKey(src)}")
       .replaceAll("[^A-Za-z0-9]", "_").toLowerCase
     if (!s.catalog.tableExists(name)) {
       // the in-memory catalog dies with the session but the warehouse files

@@ -410,20 +410,21 @@ object Dedup {
     * label) table it leaves behind is a tiny fraction of the corpus.
     *
     * Callers key `path` by corpus content (file identity + params — see
-    * the `graft_sigstore_` convention) so a changed corpus computes a new
-    * generation. Unlike the raw [[connectedComponents]] return, nothing
-    * here stays checkpoint-resident: once the store is written, the
-    * chain's blocks are freed and consumers read plain parquet.
+    * [[graft.Snapshot.path]]) so a changed corpus computes a new
+    * generation; the store is published as a [[graft.Snapshot]]. Unlike
+    * the raw [[connectedComponents]] return, nothing here stays
+    * checkpoint-resident: once the store is written, the chain's blocks
+    * are freed and consumers read plain parquet.
     */
   def componentStore(docs: DataFrame, textCol: String, idCol: String,
       path: String, k: Int = 32, bands: Int = 8, rows: Int = 4,
       threshold: Double = 0.5): DataFrame = {
     val spark = docs.sparkSession
-    if (!signatureStoreExists(path)) {
+    graft.Snapshot.cached(path) { tmp =>
       val sigs = minhashSignatures(docs, textCol, idCol, k).localCheckpoint()
       val pairs = minhashNearDupsFromSigs(sigs, bands, rows, threshold)
       val comps = connectedComponents(pairs.select(col("id1"), col("id2")))
-      comps.write.mode("overwrite").parquet(path)
+      comps.write.mode("overwrite").parquet(tmp)
       // the store materializes everything — free the whole chain eagerly
       // (no rotation needed: consumers depend on the parquet, not the plan).
       // The banding step's own rotation generation (r17) is part of this
@@ -787,7 +788,7 @@ object Dedup {
     }.foreach(_.unpersist(blocking = false))
 
   private val lastGen =
-    new java.util.concurrent.atomic.AtomicReference[Map[String, Seq[DataFrame]]](Map.empty)
+    new java.util.concurrent.atomic.AtomicReference[Map[(String, Long), Seq[DataFrame]]](Map.empty)
 
   /** One-generation checkpoint rotation for query builders that RETURN a
     * lazy frame depending on `localCheckpoint()`ed intermediates: the
@@ -797,10 +798,13 @@ object Dedup {
     * been requested under the same key. Repeated invocations (bench reps,
     * verify reruns) therefore retain at most ONE generation of blocks
     * instead of accumulating without bound. Keys namespace independent
-    * queries so one query's rotation never frees another's live frames. */
+    * queries so one query's rotation never frees another's live frames,
+    * and a generation belongs to the calling thread too: two concurrent
+    * callers of one builder each rotate only their own blocks. */
   def rotateCheckpoints(key: String, frames: DataFrame*): Unit = {
-    val prev = lastGen.getAndUpdate(m => m.updated(key, frames.toSeq))
-    prev.getOrElse(key, Nil).foreach(unpersistCheckpoint)
+    val k = (key, Thread.currentThread().getId)
+    val prev = lastGen.getAndUpdate(m => m.updated(k, frames.toSeq))
+    prev.getOrElse(k, Nil).foreach(unpersistCheckpoint)
   }
 
   /** Free EVERY retained checkpoint generation. For measurement mains and

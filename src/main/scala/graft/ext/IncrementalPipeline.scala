@@ -159,20 +159,12 @@ object IncrementalPipeline {
     * included — the auditable artifact of the new generation) — once per
     * corpus snapshot, atomically published; probes are read-only ever
     * after. Returns the store root. */
-  def storeCached(s: SparkSession, d: String): String = {
-    val dsrc = new java.io.File(d + "/documents.parquet")
-    val esrc = new java.io.File(d + "/embeddings.parquet")
+  def storeCached(s: SparkSession, d: String): String =
     // _v2: globals partials are gen-stamped as of r17 (the as-of probe
     // contract) — the suffix bump regenerates stores cached under the
     // unstamped schema
-    val path = System.getProperty("java.io.tmpdir") + "/graft_incr_e2e_" +
-      (d + s"_${dsrc.length}_${dsrc.lastModified}" +
-        s"_${esrc.length}_${esrc.lastModified}_v2")
-        .replaceAll("[^A-Za-z0-9]", "_")
-    if (!new java.io.File(path + "/_SUCCESS").exists()) {
-      Multimodal.sweepOrphanTmpDirs(path)
-      val tmp = path + ".tmp-" + java.util.UUID.randomUUID().toString
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tmp))
+    graft.Snapshot.cached(graft.Snapshot.path("graft_incr_e2e_", d, "v2",
+        "documents.parquet", "embeddings.parquet")) { tmp =>
       val docs = graft.Tables.documents(s, d)
       val emb = graft.Tables.embeddings(s, d)
       val (dv1, dv2) = (v1Docs(docs), v2Docs(docs))
@@ -248,13 +240,7 @@ object IncrementalPipeline {
         .repartition(col("ivf_cell"))
         .write.mode("append").partitionBy("ivf_cell")
         .parquet(tmp + "/ivf/assigned")
-
-      java.nio.file.Files.write(java.nio.file.Paths.get(tmp, "_SUCCESS"),
-        Array.empty[Byte])
-      Multimodal.publishSnapshot(tmp, path)
     }
-    path
-  }
 
   // ---- probes over the end state ------------------------------------------
 

@@ -293,12 +293,9 @@ object Multimodal {
   /** Content-keyed cache location for `sfDir`'s media fixture of the given
     * kind (shared with the specs so they can stage stale/orphan states at
     * the real location). */
-  private[graft] def mediaCachePath(sfDir: String, kind: String = "png"): String = {
-    val src = new java.io.File(sfDir + "/documents.parquet")
-    System.getProperty("java.io.tmpdir") + "/graft_media_" +
-      (sfDir + "_" + src.length + "_" + src.lastModified + "_" + kind + "_" + mediaCacheVersion)
-        .replaceAll("[^A-Za-z0-9]", "_")
-  }
+  private[graft] def mediaCachePath(sfDir: String, kind: String = "png"): String =
+    graft.Snapshot.path("graft_media_", sfDir, s"${kind}_$mediaCacheVersion",
+      "documents.parquet")
 
   def pngMediaCached(docs: DataFrame, sfDir: String): Dataset[PngRow] =
     mediaCached(docs, sfDir, "png", pngMedia)
@@ -312,74 +309,17 @@ object Multimodal {
   def wavMediaCached(docs: DataFrame, sfDir: String): Dataset[WavRow] =
     mediaCached(docs, sfDir, "wav", wavMedia)
 
+  /** NOTE: `docs` must be the FULL documents frame of `sfDir` — the cache
+    * is keyed on the source file (+ generation-rule version), not on the
+    * frame, so a filtered input would still be served the whole corpus. */
   private def mediaCached[T <: Product: scala.reflect.runtime.universe.TypeTag](
       docs: DataFrame, sfDir: String, kind: String,
       gen: DataFrame => Dataset[T]): Dataset[T] = {
-    val spark = docs.sparkSession
     implicit val enc = Encoders.product[T]
-    // NOTE: `docs` must be the FULL documents frame of `sfDir` — the cache
-    // is keyed on the source file (+ generation-rule version), not on the
-    // frame, so a filtered input would still be served the whole corpus.
-    val path = mediaCachePath(sfDir, kind)
-    // Atomic publish: write to a writer-unique temp dir, then rename into the
-    // keyed location. A concurrent reader either sees the complete snapshot
-    // or nothing — never a partial directory racing the _SUCCESS check. If
-    // another writer won the rename, discard ours and read theirs; if the
-    // target exists but is INCOMPLETE (no _SUCCESS — a crashed pre-atomic
-    // writer left it), repair it with our complete copy.
-    if (!new java.io.File(path + "/_SUCCESS").exists()) {
-      sweepOrphanTmpDirs(path)
-      val tmp = path + ".tmp-" + java.util.UUID.randomUUID().toString
+    val path = graft.Snapshot.cached(mediaCachePath(sfDir, kind)) { tmp =>
       gen(docs).write.mode("overwrite").parquet(tmp)
-      publishSnapshot(tmp, path)
     }
-    spark.read.parquet(path).as[T]
-  }
-
-  /** Atomically rename a complete `tmp` snapshot to `path`.
-    *
-    * Failure taxonomy (the move only fails when `path` already exists):
-    *  - `path` has `_SUCCESS`: a concurrent writer won the race with an
-    *    equivalent snapshot (same content key) — discard ours;
-    *  - `path` has NO `_SUCCESS`: a stale PARTIAL directory (a writer that
-    *    crashed mid-write before the publish was atomic). Left alone it
-    *    would be served forever, so delete it and retry the move once. The
-    *    delete+move window is not atomic — a reader in that instant sees a
-    *    missing dir and fails transiently rather than reading partial data,
-    *    and a concurrent repairer's own complete copy winning instead is
-    *    equally correct. */
-  private[graft] def publishSnapshot(tmp: String, path: String): Unit = {
-    def move(): Unit =
-      java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
-        java.nio.file.Paths.get(path), java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    def complete = new java.io.File(path + "/_SUCCESS").exists()
-    try move()
-    catch {
-      // FileAlreadyExistsException and DirectoryNotEmptyException are both
-      // FileSystemExceptions — which one POSIX rename throws here varies
-      case _: java.nio.file.FileSystemException if complete =>
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-      case _: java.nio.file.FileSystemException =>
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
-        try move()
-        catch {
-          case _: java.nio.file.FileSystemException if complete =>
-            // a concurrent repairer republished between our delete and move
-            org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-        }
-    }
-  }
-
-  /** Delete `.tmp-*` siblings abandoned by crashed writers. Only dirs idle
-    * for over an hour — an in-flight writer's temp dir is younger. */
-  private[graft] def sweepOrphanTmpDirs(path: String): Unit = {
-    val dir = new java.io.File(path).getParentFile
-    val prefix = new java.io.File(path).getName + ".tmp-"
-    val cutoff = System.currentTimeMillis() - 60L * 60 * 1000
-    Option(dir.listFiles()).getOrElse(Array.empty).foreach { f =>
-      if (f.getName.startsWith(prefix) && f.isDirectory && f.lastModified < cutoff)
-        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(f))
-    }
+    docs.sparkSession.read.parquet(path).as[T]
   }
 
   /** Batched per-partition PNG decode — same batch shape as

@@ -101,22 +101,16 @@ object Ranking {
     *  - `globals/` — ONE row (n, avgdl), precomputed at build so the probe
     *    never aggregates the corpus.
     *
-    * Same discipline as the IVF/PQ/media caches: content-keyed path, write
-    * to a writer-unique tmp dir, root `_SUCCESS` written after ALL three
-    * sub-writes, atomic rename publish. `docs` must be the FULL corpus
-    * frame of `sfDir` — the cache key is the source file's identity, not
-    * the frame (the mediaCached contract). The ingest-time shuffle (explode +
-    * groupBy + partitionBy) is paid once; every probe after that is a
-    * pruned scan. */
+    * A [[graft.Snapshot]] like the IVF/PQ/media caches: content-keyed
+    * path, all three sub-writes into one temp dir, one atomic publish.
+    * `docs` must be the FULL corpus frame of `sfDir` — the cache key is
+    * the source file's identity, not the frame (the mediaCached
+    * contract). The ingest-time shuffle (explode + groupBy + partitionBy)
+    * is paid once; every probe after that is a pruned scan. */
   def bm25IndexCached(docs: DataFrame, textCol: String, idCol: String,
-      sfDir: String): String = {
-    val src = new java.io.File(sfDir + "/documents.parquet")
-    val path = System.getProperty("java.io.tmpdir") + "/graft_bm25idx_" +
-      (sfDir + s"_${src.length}_${src.lastModified}_b${PostingsBuckets}_v1")
-        .replaceAll("[^A-Za-z0-9]", "_")
-    if (!new java.io.File(path + "/_SUCCESS").exists()) {
-      Multimodal.sweepOrphanTmpDirs(path)
-      val tmp = path + ".tmp-" + java.util.UUID.randomUUID().toString
+      sfDir: String): String =
+    graft.Snapshot.cached(graft.Snapshot.path("graft_bm25idx_", sfDir,
+        s"b${PostingsBuckets}_v1", "documents.parquet")) { tmp =>
       val dl = docs.select(col(idCol).as("id"),
         TextAnalysis.tokenCount(col(textCol)).cast("long").as("dl"))
       docs.select(col(idCol).as("id"),
@@ -128,12 +122,7 @@ object Ranking {
       dl.write.parquet(tmp + "/doclen")
       dl.agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl"))
         .write.parquet(tmp + "/globals")
-      java.nio.file.Files.write(java.nio.file.Paths.get(tmp, "_SUCCESS"),
-        Array.empty[Byte])
-      Multimodal.publishSnapshot(tmp, path)
     }
-    path
-  }
 
   /** BM25 top-k from the persisted inverted index: the probe reads ONLY the
     * query terms' postings buckets (partition-pruned scan + pushed `t`
@@ -227,25 +216,15 @@ object Ranking {
     * the corpus's even doc_ids build the initial generation, the odd ones
     * arrive as a [[bm25Append]] delta — so the lane proves build + append
     * compose to the exact full-corpus ranking. Both generations are
-    * written into a tmp dir and atomically published (the cached-fixture
-    * contract); production appends run against the live dir. */
+    * written into one [[graft.Snapshot]] temp dir and atomically published;
+    * production appends run against the live dir. */
   def bm25IndexIncrementalCached(docs: DataFrame, textCol: String,
-      idCol: String, sfDir: String): String = {
-    val src = new java.io.File(sfDir + "/documents.parquet")
-    val path = System.getProperty("java.io.tmpdir") + "/graft_bm25incr_" +
-      (sfDir + s"_${src.length}_${src.lastModified}_b${PostingsBuckets}_v1")
-        .replaceAll("[^A-Za-z0-9]", "_")
-    if (!new java.io.File(path + "/_SUCCESS").exists()) {
-      Multimodal.sweepOrphanTmpDirs(path)
-      val tmp = path + ".tmp-" + java.util.UUID.randomUUID().toString
+      idCol: String, sfDir: String): String =
+    graft.Snapshot.cached(graft.Snapshot.path("graft_bm25incr_", sfDir,
+        s"b${PostingsBuckets}_v1", "documents.parquet")) { tmp =>
       writeIncrGeneration(docs.filter(col(idCol) % 2 === 0), textCol, idCol, tmp)
       bm25Append(docs.filter(col(idCol) % 2 === 1), textCol, idCol, tmp)
-      java.nio.file.Files.write(java.nio.file.Paths.get(tmp, "_SUCCESS"),
-        Array.empty[Byte])
-      Multimodal.publishSnapshot(tmp, path)
     }
-    path
-  }
 
   // ---- VERSIONED store: generations + tombstones = deletes ---------------
   // The delta-loop format (VERDICT r15 #1). Postings/doclen rows carry a

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Snapshot, Tables}
 import graft.ext.{Dedup, Hll, Multimodal, Ranking, Similarity, StoreCompaction, TextAnalysis => TA}
 import ExtShared._
 
@@ -85,15 +85,16 @@ private[graft] object ExtDedup {
     // corpus. Oracle replays both generations end-to-end.
     "dedup_incremental" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val src = new java.io.File(d + "/documents.parquet")
-      val path = System.getProperty("java.io.tmpdir") + "/graft_sigstore_" +
-        // v2: adaptive (band, sig_bucket) layout + meta sidecar — a v1
-        // store (fixed 512 partitions, no sidecar) still probes correctly
-        // but pays small-file overhead, so key a fresh generation
-        (d + s"_${src.length}_${src.lastModified}_even_v2").replaceAll("[^A-Za-z0-9]", "_")
-      if (!Dedup.signatureStoreExists(path))
+      // v2: adaptive (band, sig_bucket) layout + meta sidecar — a v1
+      // store (fixed 512 partitions, no sidecar) still probes correctly
+      // but pays small-file overhead, so key a fresh generation. The
+      // sidecar is written inside the Snapshot, so a store is never
+      // served without it
+      val path = Snapshot.cached(
+          Snapshot.path("graft_sigstore_", d, "even_v2", "documents.parquet")) { tmp =>
         Dedup.signatureStoreWrite(docs.filter(col("doc_id") % 2 === 0),
-          "text", "doc_id", path)
+          "text", "doc_id", tmp)
+      }
       Dedup.incrementalNearDups(docs.filter(col("doc_id") % 2 === 1),
         "text", "doc_id", path)
         .select(col("id").as("doc_id"), col("kept"), col("cluster"),

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Snapshot, Tables}
 import graft.ext.{Dedup, Hll, Multimodal, Ranking, Similarity, StoreCompaction, TextAnalysis => TA}
 
 /** Helpers shared by the Ext* domain objects (formerly private members of
@@ -169,12 +169,8 @@ private[graft] object ExtShared {
     * t=0.5 over `documents`): keyed by the source file's identity so a
     * regenerated corpus computes a fresh generation, versioned like the
     * IVF/sigstore caches. */
-  def compStorePath(d: String): String = {
-    val src = new java.io.File(d + "/documents.parquet")
-    System.getProperty("java.io.tmpdir") + "/graft_compstore_" +
-      (d + s"_${src.length}_${src.lastModified}_k32b8r4t05_v1")
-        .replaceAll("[^A-Za-z0-9]", "_")
-  }
+  def compStorePath(d: String): String =
+    Snapshot.path("graft_compstore_", d, "k32b8r4t05_v1", "documents.parquet")
 
   // ANN oracle plumbing: the exact hyperplanes the Spark path uses (fixed
   // seed), embedded as SQL literals — Double.toString round-trips exactly, and
@@ -274,23 +270,18 @@ private[graft] object ExtShared {
     * otherwise be served a stale stride-seed index. */
   def cachedIvfIndex(s: SparkSession, d: String,
       emb: DataFrame): Similarity.IvfIndex = {
-    val path = snapPath(d, "graft_ivf_", IvfVer)
-    if (Similarity.ivfIndexExists(path)) Similarity.ivfRead(s, path)
-    else {
-      val built = Similarity.ivfIndex(emb, "vec_id", "embedding", nCells = 8)
-      Similarity.ivfWrite(built, path)
-      Similarity.ivfRead(s, path)
+    val path = Snapshot.cached(snapPath(d, "graft_ivf_", IvfVer)) { tmp =>
+      Similarity.ivfWrite(
+        Similarity.ivfIndex(emb, "vec_id", "embedding", nCells = 8), tmp)
     }
+    Similarity.ivfRead(s, path)
   }
 
-  /** ONE recipe for every per-corpus-snapshot cache path: fixture dir +
-    * source (length, mtime) + a version suffix that callers bump when the
-    * algorithm behind the artifact changes (the r7 'lloyd2' lesson). */
-  def snapPath(d: String, prefix: String, ver: String): String = {
-    val src = new java.io.File(d + "/embeddings.parquet")
-    System.getProperty("java.io.tmpdir") + s"/$prefix" +
-      (d + s"_${src.length}_${src.lastModified}_$ver").replaceAll("[^A-Za-z0-9]", "_")
-  }
+  /** The [[Snapshot.path]] of an artifact built from `d`'s embeddings, with
+    * a version suffix that callers bump when the algorithm behind the
+    * artifact changes (the r7 'lloyd2' lesson). */
+  def snapPath(d: String, prefix: String, ver: String): String =
+    Snapshot.path(prefix, d, ver, "embeddings.parquet")
 
   /** IVF training version — shared by the index cache AND every derived
     * artifact (codes_by_cell), so bumping it invalidates them TOGETHER:
@@ -304,38 +295,36 @@ private[graft] object ExtShared {
     * ivf_cell (once per corpus snapshot), so a probe is a partition-PRUNED
     * scan of the 8-byte codes — cells-on-disk, codes-in-memory. Shared by
     * sim_ivfpq_topk and sim_ivfpq_rerank; keyed on IvfVer so a centroid
-    * change invalidates it together with the index. */
+    * change invalidates it together with the index. A sibling of
+    * [[pqPath]], not nested in it: publishing over a stale PQ dir deletes
+    * that whole directory. */
   def cachedCodesByCell(s: SparkSession, d: String,
       index: Similarity.IvfIndex, codes: DataFrame): DataFrame = {
-    val byCellPath = pqPath(d) + "/codes_by_cell_" + IvfVer
-    if (!new java.io.File(s"$byCellPath/_SUCCESS").exists())
+    val byCellPath = Snapshot.cached(
+        snapPath(d, "graft_pq_codes_by_cell_", s"pq1_$IvfVer")) { tmp =>
       codes.join(
           index.assigned.select(col("vec_id").as("id"), col("ivf_cell")), "id")
         .repartition(col("ivf_cell"))
-        .write.mode("overwrite").partitionBy("ivf_cell").parquet(byCellPath)
+        .write.mode("overwrite").partitionBy("ivf_cell").parquet(tmp)
+    }
     s.read.parquet(byCellPath)
   }
 
   /** The per-corpus-snapshot PQ model (codebook + codes), trained once and
     * persisted — the production shape (codebooks are corpus-generation
     * artifacts, like the IVF centroids and the signature store); repeat
-    * queries read 8 bytes/vector instead of re-running Lloyd. The build
-    * is gated on a marker written AFTER both writes (a crash between them
-    * forces a rebuild; like every snapshot cache here, the writer is
-    * single-JVM — the harness runs Verify/Bench serially). */
+    * queries read 8 bytes/vector instead of re-running Lloyd. Both writes
+    * land in one [[Snapshot]]: a crash between them publishes nothing. */
   def cachedPq(s: SparkSession, d: String, emb: DataFrame)
       : (Seq[((Int, Int), Seq[Double])], DataFrame) = {
     import s.implicits._
-    val path = pqPath(d)
-    val marker = java.nio.file.Paths.get(path, "_graft_pq_complete")
-    if (!java.nio.file.Files.exists(marker)) {
+    val path = Snapshot.cached(pqPath(d)) { tmp =>
       val cb = Similarity.pqTrain(emb, "vec_id", "embedding", dim = 64, m = 8, k = 16)
       cb.map { case ((s0, c0), v) => (s0, c0, v) }.toDF("sub", "cid", "cv")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
+        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/codebook")
       Similarity.pqAssign(
           Similarity.pqSubFrame(emb, "vec_id", "embedding", 64, 8), cb)
-        .write.mode("overwrite").parquet(s"$path/codes")
-      java.nio.file.Files.writeString(marker, "ok")
+        .write.mode("overwrite").parquet(s"$tmp/codes")
     }
     val cb = s.read.parquet(s"$path/codebook").collect()
       .map(r => ((r.getAs[Int]("sub"), r.getAs[Int]("cid")),

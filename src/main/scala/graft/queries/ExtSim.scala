@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Snapshot, Tables}
 import graft.ext.{Dedup, Hll, Multimodal, Ranking, Similarity, StoreCompaction, TextAnalysis => TA}
 import ExtShared._
 
@@ -336,24 +336,19 @@ private[graft] object ExtSim {
     // centroids — which is what the oracle replays.
     "sim_ann_ivf_incremental" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val path = snapPath(d, "graft_ivf_", "inc1")
-      // the build is base-write THEN append: gate on a marker written
-      // AFTER the append, not on ivfWrite's own _SUCCESS files — a crash
-      // between the two must force a rebuild, never serve a base-only
-      // index as complete
-      val completeMarker = java.nio.file.Paths.get(path, "_graft_append_complete")
-      if (!java.nio.file.Files.exists(completeMarker)) {
+      // base write, append and compaction all land in one Snapshot: a
+      // crash between them publishes nothing, never a base-only index
+      val path = Snapshot.cached(snapPath(d, "graft_ivf_", "inc1")) { tmp =>
         val built = Similarity.ivfIndex(
           emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", nCells = 8)
-        Similarity.ivfWrite(built, path)
-        Similarity.ivfAppend(s, path,
+        Similarity.ivfWrite(built, tmp)
+        Similarity.ivfAppend(s, tmp,
           emb.filter(col("vec_id") % 2 === 1), "vec_id", "embedding")
         // base + append = 2 files per touched cell: compact back to one
         // file per cell (probe opens exactly one file per probed cell).
-        // Runs once per corpus snapshot, inside the build gate — repeat
+        // Runs once per corpus snapshot, inside the build — repeat
         // probes never pay it.
-        StoreCompaction.compact(s, s"$path/assigned", maxFiles = 1)
-        java.nio.file.Files.writeString(completeMarker, "ok")
+        StoreCompaction.compact(s, s"$tmp/assigned", maxFiles = 1)
       }
       val index = Similarity.ivfRead(s, path)
       val qvec = Similarity.queryVector(emb, "vec_id", "embedding", 0L)

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Snapshot, Tables}
 
 /** Relational query surface: joins, aggregations, windows, sorts/top-k, set
   * ops, scalar functions, subqueries — the capabilities the reference's host
@@ -751,13 +751,12 @@ object Relational {
     // work, and benching it inside the query measured write+read — the r9
     // 0.42→0.73 regression was exactly that.
     "source_partitioned_pruning" -> ((s, d) => {
-      val src = new java.io.File(d + "/documents.parquet")
-      val path = System.getProperty("java.io.tmpdir") + "/graft_part_" +
-        (d + s"_${src.length}_${src.lastModified}_v2").replaceAll("[^A-Za-z0-9]", "_")
-      if (!new java.io.File(s"$path/_SUCCESS").exists())
+      val path = Snapshot.cached(
+          Snapshot.path("graft_part_", d, "v2", "documents.parquet")) { tmp =>
         Tables.documents(s, d)
           .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-          .write.mode("overwrite").partitionBy("lang").parquet(path)
+          .write.mode("overwrite").partitionBy("lang").parquet(tmp)
+      }
       s.read.parquet(path)
         .filter(col("lang") === "en")
         .groupBy(col("source"))
@@ -772,15 +771,10 @@ object Relational {
     // mode (static overwrite semantics) would wipe the other langs and
     // fail the per-lang counts; a non-overwrite would double-count en.
     "source_dynamic_overwrite" -> ((s, d) => {
-      val src = new java.io.File(d + "/documents.parquet")
-      val root = System.getProperty("java.io.tmpdir") + "/graft_dynpo_" +
-        (d + s"_${src.length}_${src.lastModified}_v1").replaceAll("[^A-Za-z0-9]", "_")
-      // cached-fixture contract (the bm25IndexIncrementalCached pattern):
-      // BOTH generations build inside a writer-unique tmp dir, one atomic
+      // BOTH generations build inside one Snapshot temp dir, one atomic
       // publish — a concurrent session never sees a half-built store
-      if (!new java.io.File(s"$root/_SUCCESS").exists()) {
-        graft.ext.Multimodal.sweepOrphanTmpDirs(root)
-        val tmp = root + ".tmp-" + java.util.UUID.randomUUID().toString
+      val root = Snapshot.cached(
+          Snapshot.path("graft_dynpo_", d, "v1", "documents.parquet")) { tmp =>
         val docs = Tables.documents(s, d)
         docs.select(col("doc_id"), col("n_chars"), col("lang"))
           .write.partitionBy("lang").mode("overwrite").parquet(tmp)
@@ -788,9 +782,6 @@ object Relational {
           .select(col("doc_id"), (col("n_chars") * 2).as("n_chars"), col("lang"))
           .write.option("partitionOverwriteMode", "dynamic")
           .partitionBy("lang").mode("overwrite").parquet(tmp)
-        java.nio.file.Files.write(java.nio.file.Paths.get(tmp, "_SUCCESS"),
-          Array.empty[Byte])
-        graft.ext.Multimodal.publishSnapshot(tmp, root)
       }
       s.read.parquet(root)
         .groupBy(col("lang"))
@@ -805,23 +796,16 @@ object Relational {
     // whose writer gained columns; the oracle replays the generation rule
     // (odd doc_ids are the evolved generation) from the source table.
     "source_schema_evolution" -> ((s, d) => {
-      val src = new java.io.File(d + "/documents.parquet")
-      val root = System.getProperty("java.io.tmpdir") + "/graft_schevo_" +
-        (d + s"_${src.length}_${src.lastModified}_v2").replaceAll("[^A-Za-z0-9]", "_")
-      // both generations into a writer-unique tmp, one atomic publish
-      // (cached-fixture contract — no reader can see gen1 without gen2)
-      if (!new java.io.File(s"$root/_SUCCESS").exists()) {
-        graft.ext.Multimodal.sweepOrphanTmpDirs(root)
-        val tmp = root + ".tmp-" + java.util.UUID.randomUUID().toString
+      // both generations into one Snapshot temp dir, one atomic publish —
+      // no reader can see gen1 without gen2
+      val root = Snapshot.cached(
+          Snapshot.path("graft_schevo_", d, "v2", "documents.parquet")) { tmp =>
         val docs = Tables.documents(s, d)
         docs.filter(col("doc_id") % 2 === 0).select(col("doc_id"), col("lang"))
           .write.mode("overwrite").parquet(s"$tmp/gen1")
         docs.filter(col("doc_id") % 2 === 1)
           .select(col("doc_id"), col("lang"), col("n_chars"))
           .write.mode("overwrite").parquet(s"$tmp/gen2")
-        java.nio.file.Files.write(java.nio.file.Paths.get(tmp, "_SUCCESS"),
-          Array.empty[Byte])
-        graft.ext.Multimodal.publishSnapshot(tmp, root)
       }
       s.read.option("mergeSchema", "true")
         .parquet(s"$root/gen1", s"$root/gen2")

@@ -9,7 +9,7 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.ext.Multimodal
+import graft.Snapshot
 
 /** WARC (Web ARChive, ISO 28500) record ingestion — the format web-scale
   * text corpora actually arrive in (Common Crawl ships response captures as
@@ -193,7 +193,7 @@ object Warc {
     outBytes
   }
 
-  /** Content-keyed cached fixture (the BinaryIngest discipline): documents
+  /** Content-keyed cached fixture ([[graft.Snapshot]]): documents
     * with doc_id < `maxDocs` become response records, grouped into
     * `nFiles` WARC files by doc_id % nFiles (hash-partitioned so each
     * group lands whole in one task; groups sharing a task still write
@@ -203,17 +203,11 @@ object Warc {
   def fixtureCached(docs: DataFrame, sfDir: String, maxDocs: Int = 500,
       nFiles: Int = 4, gzMembers: Boolean = false,
       http: Boolean = false): String = {
-    val src = new java.io.File(sfDir + "/documents.parquet")
     val suffix = (if (http) "_http" else "") +
       (if (gzMembers) "_gz_v1" else "_v1")
     val ext = if (gzMembers) ".warc.gz" else ".warc"
-    val path = System.getProperty("java.io.tmpdir") + "/graft_warc_" +
-      (sfDir + s"_${src.length}_${src.lastModified}_${maxDocs}_$nFiles$suffix")
-        .replaceAll("[^A-Za-z0-9]", "_")
-    if (!new java.io.File(path + "/_SUCCESS").exists()) {
-      Multimodal.sweepOrphanTmpDirs(path)
-      val tmp = path + ".tmp-" + java.util.UUID.randomUUID().toString
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tmp))
+    Snapshot.cached(Snapshot.path("graft_warc_", sfDir,
+        s"${maxDocs}_$nFiles$suffix", "documents.parquet")) { tmp =>
       docs.filter(col("doc_id") < maxDocs)
         .select(col("doc_id").cast("long"), col("text"),
           pmod(col("doc_id"), lit(nFiles)).cast("int").as("g"))
@@ -247,11 +241,7 @@ object Warc {
           }
           if (os != null) os.close()
         }
-      java.nio.file.Files.write(java.nio.file.Paths.get(tmp, "_SUCCESS"),
-        Array.empty[Byte])
-      Multimodal.publishSnapshot(tmp, path)
     }
-    path
   }
 }
 

@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One implementation per mechanism in `src/main`: one networked chain
   * transport beside the synthetic generator, one chain reader per read,
-  * one protobuf varint reader, one builder of source rows and one finality
-  * operator. A second copy growing back fails here. */
+  * one protobuf varint reader, one builder of source rows, one finality
+  * operator and one snapshot store. A second copy growing back fails here. */
 class SingleImplementationSpec extends AnyFunSuite {
 
   /** `src/main/scala`'s Scala sources, relative path → text. */
@@ -58,5 +58,14 @@ class SingleImplementationSpec extends AnyFunSuite {
   test("streaming/StreamingFinality.scala holds one flatMapGroupsWithState") {
     val text = mainSources.toMap.apply("graft/streaming/StreamingFinality.scala")
     assert("flatMapGroupsWithState".r.findAllMatchIn(text).size === 1)
+  }
+
+  test("graft/Snapshot.scala alone keys snapshots by mtime and writes their _SUCCESS marker") {
+    assert(mainSources.collect { case (file, text) if text.contains(".lastModified") => file } ===
+      Seq("graft/Snapshot.scala"))
+    val successWrite = """Files\.write\w*\([^)]*"_SUCCESS"""".r
+    assert(mainSources.collect {
+      case (file, text) if successWrite.findFirstIn(text).isDefined => file
+    } === Seq("graft/Snapshot.scala"))
   }
 }

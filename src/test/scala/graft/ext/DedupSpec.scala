@@ -362,6 +362,26 @@ class DedupSpec extends SparkSpec {
     Dedup.rotateCheckpoints("rotspec_b")
   }
 
+  test("rotateCheckpoints: concurrent callers of one builder keep each other's blocks") {
+    // minhashNearDupsFromSigs rotates its banding checkpoints under one key;
+    // a second caller on another thread must not free the first's live ones
+    val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
+    def nearDups(): Long = {
+      val sigs = Dedup.minhashSignatures(docs, "text", "doc_id").localCheckpoint()
+      try Dedup.minhashNearDupsFromSigs(sigs).count()
+      finally {
+        Dedup.rotateCheckpoints("Dedup.minhashNearDupsFromSigs")
+        Dedup.unpersistCheckpoint(sigs)
+      }
+    }
+    val serial = nearDups()
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val counts = Await.result(Future.sequence(Seq.fill(2)(Future(nearDups()))), 5.minutes)
+    assert(counts === Seq(serial, serial))
+  }
+
   test("contamination: shared 5-gram flags a train doc; disjoint and short docs behave") {
     import spark.implicits._
     val eval = Seq(
